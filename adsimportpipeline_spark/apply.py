@@ -1,25 +1,41 @@
-"""The micro-batch apply path: dedup -> guard -> copy-on-write MERGE.
+"""The micro-batch apply path: touched buckets -> key-only LWW -> payload
+fetch -> Arrow extract -> copy-on-write commit.
 
 This is the Spark rebuild of the reference's task chain
 ``task_find_new_records -> task_read_records -> task_merge_metadata ->
 update_storage`` (tasks.py:34-119, app.py:24-74) collapsed into one
 DataFrame plan executed per micro-batch inside ``foreachBatch``:
 
-1. **LWW dedup** of the batch per url (operators.lww — skew-safe partial
-   aggregation; explicit salting available).
-2. **Bucket pruning**: only the table buckets containing the batch's urls
-   are read and rewritten (the semantic twin of the reference's
-   changed-record short-circuit, tasks.py:52-64 — prune untouched data
-   before the expensive merge).
-3. **Stale filter**: a winner is applied only if (warc_ts, log_offset) is
-   strictly newer than the stored row (idempotent upsert, app.py:34-39).
-4. **Tombstone guard** against resurrection by stale events
-   (app.py:54-67).
-5. **HTML->text** extraction (vectorized pandas UDF) for applied upserts
-   only — never for losers.
-6. **Atomic commit** of rewritten buckets + tombstone audit appends +
-   per-partition lineage + the commit epoch, in one manifest flip
-   (exactly-once under foreachBatch replays).
+1. **Touched buckets + row count** in one narrow job
+   (``groupBy(bucket).count()``): only the table buckets holding the
+   batch's urls are read and rewritten (the semantic twin of the
+   reference's changed-record short-circuit, tasks.py:52-64), and the row
+   count bounds the winners, which sizes the winner joins without a
+   measuring job.
+2. **Key-only LWW** over batch ∪ stored rows ∪ tombstones of the touched
+   buckets: one ``(url, warc_ts, log_offset, src)`` aggregation.  Ties go
+   to the stored side, so a batch event applies iff it is strictly newer
+   than the stored row (idempotent upsert, app.py:34-39) and than the
+   latest tombstone (no resurrection by stale events, app.py:54-67).
+3. **Payload fetch** of the winning rows by one ``log_offset`` join.
+4. **Duplicate collapse + HTML->text** in one ``mapInArrow`` pass, for
+   applied upserts only — never for losers.
+5. **Atomic commit** of the rewritten buckets (survivors ∪ upserts) +
+   tombstone audit appends + lineage + the commit epoch, in one manifest
+   flip (exactly-once under foreachBatch replays).
+
+A fresh table (no stored rows, no tombstones) skips step 2's rivals: the
+fused bulk path takes the batch's own LWW winners straight to step 4.
+
+Negative results, kept so nobody re-adds them: persisting the applied
+rows fixed the Python stage at ``spark.sql.shuffle.partitions`` tasks
+(AQE cannot re-coalesce a cached relation's output), at ~250 ms per task
+however few rows it held; the measure-and-cache ``count()`` of the winner
+keys cost 4 Spark jobs per streaming batch.  Together with the separate
+stale-filter join, tombstone-guard join and pandas-UDF extraction they
+made a ~1 k-event micro-batch into a populated table cost 23 Spark jobs;
+this path runs 15, and its median batch wall is ~40 % lower (cdcbench
+``incr_upsert``, 4 vCPUs).
 """
 
 from __future__ import annotations
@@ -34,10 +50,15 @@ from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from .evolve import align_to_schema, reconcile_schema
-from .functions.html import html_to_text
 from .lake.table import CommitConflictError, LakeTable, bucket_expr
-from .operators.cdc import tombstone_guard
-from .operators.lww import lww_dedup, lww_dedup_salted, lww_dedup_semi, lww_winner_rows
+from .operators.cdc import tombstone_guard  # noqa: F401  (re-exported: tracers wrap it by name)
+from .operators.lww import (
+    bounded_broadcast,
+    lww_dedup,
+    lww_dedup_salted,
+    lww_dedup_semi,  # noqa: F401  (re-exported: tracers wrap it by name)
+    lww_winner_rows,
+)
 from .schema import LINEAGE_SCHEMA, OP_DELETE, TOMBSTONE_SCHEMA
 
 
@@ -64,54 +85,41 @@ def pages_schema_for(batch_schema: T.StructType) -> T.StructType:
     return T.StructType(_text_after_html_fields(batch_schema.fields, "op"))
 
 
-def _bulk_upserts(
-    batch_df: DataFrame,
+def _collapse_and_extract(
+    winners: DataFrame,
     key: str,
     n_buckets: int,
     target_schema: T.StructType,
-    cleanup: list,
+    n_parts: int | None = None,
 ) -> DataFrame:
-    """Fresh-table bulk apply: winner rows -> ONE bucket-keyed payload shuffle
-    -> in-partition duplicate collapse + HTML->text in a single Arrow pass.
+    """Winner rows -> ONE bucket-keyed payload shuffle -> in-partition
+    duplicate collapse + HTML->text in a single Arrow pass.
 
-    The general path pays two winner-payload shuffles (the LWW collapse keyed
-    by url, then the write's repartition keyed by bucket) plus a separate
-    Arrow round-trip for extraction.  But bucket = f(url), so one shuffle
-    keyed by bucket already co-locates every url's duplicate deliveries in
-    one partition — the collapse becomes a vectorized in-partition
-    ``drop_duplicates`` fused into the same ``mapInArrow`` pass that
-    extracts text.  Net: half the payload shuffle bytes, one Arrow hop.
+    bucket = f(url), so one shuffle keyed by bucket already co-locates every
+    url's duplicate deliveries in one partition — the collapse is a
+    vectorized in-partition ``drop_duplicates`` fused into the same
+    ``mapInArrow`` pass that extracts text.  Correct only when exact
+    duplicates are the ONLY multiplicity left, i.e. for rows fetched by
+    their winning ``log_offset`` (offsets identify events, so co-keyed rows
+    are byte-identical deliveries — keeping any one is LWW).
 
-    Correct only when exact duplicates are the ONLY multiplicity left, i.e.
-    after :func:`lww_winner_rows` (winner rows share the max
-    (warc_ts, log_offset), and log_offset uniquely identifies an event, so
-    co-keyed rows are byte-identical deliveries — keeping any one is LWW).
+    ``n_parts=None`` leaves the partition count to AQE, which coalesces a
+    micro-batch's few winners into one Python task (each Python task costs
+    ~250 ms however few rows it has).
     """
-    winners = lww_winner_rows(
-        batch_df, key, cleanup=cleanup, unique_order_col="log_offset"
-    )
     upserts = winners.filter(F.col("op") != OP_DELETE).drop("op")
-    # explicit partition count at 4 tasks/core: AQE's post-shuffle coalesce
-    # targets bytes-per-partition, which at this payload size lands a task
-    # count BELOW the core count's next multiple (measured: 5 tasks on 4
-    # cores = a full wave of 4 then a 1-task straggler wave, ~40% of the
-    # stage idle).  The extract stage is python-worker-bound, so wave
-    # balance — not bytes — is the binding constraint; 4x parallelism keeps
-    # the tail short at every cluster size and still amortizes per-task
-    # setup.  Cluster-scale: defaultParallelism = total executor cores.
-    # NOTE: the repartition hashes on _bucket, so the number of NON-EMPTY
-    # partitions is bounded by min(n_parts, n_buckets) — n_parts beyond
-    # n_buckets buys nothing; size n_buckets >= cores*4 to keep waves full.
-    n_parts = max(upserts.sparkSession.sparkContext.defaultParallelism * 4, 8)
-    tagged = upserts.withColumn("_bucket", bucket_expr(key, n_buckets)).repartition(
-        n_parts, F.col("_bucket")
+    tagged = upserts.withColumn("_bucket", bucket_expr(key, n_buckets))
+    tagged = (
+        tagged.repartition(n_parts, F.col("_bucket"))
+        if n_parts
+        else tagged.repartition(F.col("_bucket"))
     )
 
     out_fields = _text_after_html_fields(tagged.schema.fields, "_bucket")
     out_schema = T.StructType(out_fields)
     out_cols = [f.name for f in out_fields]
 
-    def _collapse_and_extract(it: "Iterator") -> "Iterator":
+    def _collapse_and_extract_arrow(it: "Iterator") -> "Iterator":
         # mapInArrow, not mapInPandas: the row payload (html binary, text)
         # stays in Arrow buffers end-to-end — a pandas pass materialized
         # every html as a Python bytes object and every text as a Python
@@ -142,8 +150,37 @@ def _bulk_upserts(
                 [cols[name] for name in out_cols], names=out_cols
             )
 
-    final = tagged.mapInArrow(_collapse_and_extract, out_schema)
+    final = tagged.mapInArrow(_collapse_and_extract_arrow, out_schema)
     return align_to_schema(final, target_schema)
+
+
+def _bulk_upserts(
+    batch_df: DataFrame,
+    key: str,
+    n_buckets: int,
+    target_schema: T.StructType,
+    cleanup: list,
+    n_rows: int | None,
+) -> DataFrame:
+    """Fresh-table bulk apply: :func:`lww_winner_rows` (``n_rows`` bounds
+    the winner count, so no measuring job when it fits the broadcast budget)
+    then :func:`_collapse_and_extract`."""
+    winners = lww_winner_rows(
+        batch_df, key, broadcast_keys=n_rows, cleanup=cleanup, unique_order_col="log_offset"
+    )
+    # explicit partition count at 4 tasks/core: AQE's post-shuffle coalesce
+    # targets bytes-per-partition, which at this payload size lands a task
+    # count BELOW the core count's next multiple (measured: 5 tasks on 4
+    # cores = a full wave of 4 then a 1-task straggler wave, ~40% of the
+    # stage idle).  The extract stage is python-worker-bound, so wave
+    # balance — not bytes — is the binding constraint; 4x parallelism keeps
+    # the tail short at every cluster size and still amortizes per-task
+    # setup.  Cluster-scale: defaultParallelism = total executor cores.
+    # NOTE: the repartition hashes on _bucket, so the number of NON-EMPTY
+    # partitions is bounded by min(n_parts, n_buckets) — n_parts beyond
+    # n_buckets buys nothing; size n_buckets >= cores*4 to keep waves full.
+    n_parts = max(batch_df.sparkSession.sparkContext.defaultParallelism * 4, 8)
+    return _collapse_and_extract(winners, key, n_buckets, target_schema, n_parts)
 
 
 def apply_batch(
@@ -153,8 +190,6 @@ def apply_batch(
     epoch_source: str = "cdc",
     salted: bool = False,
     n_salts: int = 16,
-    merge_partitions: int | None = None,
-    dedup_strategy: str = "semi",
     prune_buckets: bool = True,
     compact_appends_every: int = 32,
     decision_col: str | None = None,
@@ -163,25 +198,26 @@ def apply_batch(
     """Apply one micro-batch of change events. Returns stats. Idempotent:
     re-delivery of an already-committed batch_id is a no-op.
 
+    ``salted=True`` splits the key-only argmax in two phases
+    (:func:`lww_dedup_salted`) for hot urls.
+
     ``decision_col`` names a pre-resolution column (the stateful in-stream
     LWW operator's ``decision``): only rows marked ``'apply'`` are applied,
     and — because the state store already guarantees each such row is
     strictly newer than everything previously seen for its url — the
-    stale-filter and tombstone-guard joins against the stored table are
-    skipped entirely (the operator's whole point: per-batch work stays
-    proportional to the batch, not the table).  The tombstone audit still
-    sees EVERY delete delivery, resolved or not (reference app.py:15-21
-    appends every delete).
+    stored keys and tombstones stay out of the LWW union (the operator's
+    whole point: per-batch work stays proportional to the batch, not the
+    table).  The tombstone audit still sees EVERY delete delivery, resolved
+    or not (reference app.py:15-21 appends every delete).
 
     ``keep_applied``: when a list is passed, the applied-upserts frame
-    (post stale-filter/guard, WITH extracted ``text``) is persisted and
-    appended to it instead of being torn down — the caller owns the
-    unpersist.  A derived-index maintainer (update_lsh_index) can then
-    consume the rows this batch actually applied at O(batch) cost with no
-    table read-back and no second HTML->text extraction: the write job
-    materializes the cache, the index reads it.  Empty when the batch was
-    an epoch no-op (caller falls back to a table read for that
-    crash-recovery case)."""
+    (WITH extracted ``text``) is persisted and appended to it instead of
+    being torn down — the caller owns the unpersist.  A derived-index
+    maintainer (update_lsh_index) can then consume the rows this batch
+    actually applied at O(batch) cost with no table read-back and no second
+    HTML->text extraction: the write job materializes the cache, the index
+    reads it.  Empty when the batch was an epoch no-op (caller falls back
+    to a table read for that crash-recovery case)."""
     if batch_id <= table.last_epoch(epoch_source):
         return {"batch_id": batch_id, "skipped": True}
 
@@ -195,10 +231,10 @@ def apply_batch(
     m = table.manifest()
     key, nb = m["key"], m["n_buckets"]
     # batch_df is deliberately NOT cached: its passes (touched discovery,
-    # lineage stats, dedup, tombstone scan) each prune to a few columns, so
-    # columnar re-reads from the source beat materializing full rows on heap
+    # lineage stats, LWW keys, payload fetch, tombstone audit) each prune to
+    # a few columns, so columnar re-reads from the source beat materializing
+    # full rows on heap
     _caches: list = []
-    persisted: list = []
     try:
         _mark("manifest_read")  # time since t0: the manifest open above
 
@@ -210,123 +246,93 @@ def apply_batch(
             else batch_df
         )
 
-        # 1. bucket pruning: which table buckets does this batch touch?
-        #    Discovered from the RAW batch (same distinct url set as the
-        #    dedup output — a narrow url-column scan, so the deduped payload
-        #    never needs persisting just for discovery).  A bulk replay
-        #    touches every bucket anyway — prune_buckets=False skips the job.
+        # 1. bucket pruning: which table buckets does this batch touch, and
+        #    how many rows does it have (an upper bound on its winners, which
+        #    sizes the winner joins below without a measuring job)?  A narrow
+        #    url-column scan of the RAW batch.  A bulk replay touches every
+        #    bucket anyway — prune_buckets=False skips the job.
         if prune_buckets:
-            touched = [
-                r[0]
-                for r in resolved.select(bucket_expr(key, nb).alias("b")).distinct().collect()
-            ]
+            counts = resolved.groupBy(bucket_expr(key, nb).alias("b")).count().collect()
+            touched = [r[0] for r in counts]
+            n_rows = sum(r[1] for r in counts)
         else:
-            touched = list(range(nb))
+            touched, n_rows = list(range(nb)), None
         # manifest-level emptiness: a fresh table / bulk first replay has no
-        # stored rows and no tombstones — skip the stale-filter and guard
-        # joins outright instead of shuffling every winner (wide rows!)
-        # against provably-empty sides.  With pre-resolved rows the state
-        # store already proved strictly-newer, so both joins are skipped
-        # even against a populated table.
+        # stored rows and no tombstones, so nothing can beat a batch winner.
+        # With pre-resolved rows the state store already proved
+        # strictly-newer, so stored keys and tombstones never compete.
         has_current = any(m["buckets"].get(str(b)) for b in touched)
         has_tombs = bool(m["tombstone_files"])
-        need_stale_filter = has_current and not decision_col
-        need_guard = has_tombs and not decision_col
+        rivals_tombs = has_tombs and not decision_col
         evolved = reconcile_schema(table.schema(m), pages_schema_for(resolved.schema))
         _mark("dedup_and_touched")
 
-        if (
-            not has_current
-            and not need_guard
-            and not salted
-            and dedup_strategy == "semi"
-            and not merge_partitions
-        ):
-            # FUSED bulk path: no stored rows and no guard means the
-            # stale filter and guard are provably no-ops — winner rows go
-            # through one bucket-keyed shuffle with the duplicate collapse
-            # and text extraction fused into a single Arrow pass.  Passed
-            # as a thunk: the winner-offset collect inside it (a full
-            # narrow scan) then runs in overwrite_buckets' pool thread,
+        if not has_current and not rivals_tombs and not salted:
+            # FUSED bulk path: winner rows go through one bucket-keyed
+            # shuffle with the duplicate collapse and text extraction fused
+            # into a single Arrow pass.  Passed as a thunk: any measuring
+            # job inside it then runs in overwrite_buckets' pool thread,
             # overlapping the tombstone/lineage append jobs.
             if keep_applied is not None:
                 def new_data() -> DataFrame:
-                    df = _bulk_upserts(resolved, key, nb, evolved, _caches)
+                    df = _bulk_upserts(resolved, key, nb, evolved, _caches, n_rows)
                     df = df.persist(StorageLevel.MEMORY_AND_DISK)
                     keep_applied.append(df)
                     return df
             else:
-                new_data = lambda: _bulk_upserts(resolved, key, nb, evolved, _caches)  # noqa: E731
+                new_data = lambda: _bulk_upserts(resolved, key, nb, evolved, _caches, n_rows)  # noqa: E731
             pre_partitioned = True
         else:
             pre_partitioned = False
-            # 2. in-batch LWW dedup (explicit salting optional per
-            #    north_rule).  'semi' shuffles ordering keys only (payloads
-            #    of losing events never move).
-            if salted:
-                dedup = lww_dedup_salted(resolved, key, n_salts=n_salts)
-            elif dedup_strategy == "semi":
-                dedup = lww_dedup_semi(
-                    resolved, key, cleanup=_caches, unique_order_col="log_offset"
-                )
-            else:
-                dedup = lww_dedup(resolved, key)
-            if merge_partitions:
-                dedup = dedup.repartition(merge_partitions, key)
-
-            current = align_to_schema(table.read_buckets(touched, m), evolved)
-
-            # 3. stale filter: strictly-newer-than-stored (struct comparison
-            #    is lexicographic on (warc_ts, log_offset) — the LWW order)
-            if need_stale_filter:
-                stored = current.select(
-                    F.col(key),
-                    F.struct(F.col("warc_ts").alias("ts"), F.col("log_offset").alias("off")).alias("_stored"),
-                )
-                j = dedup.join(stored, key, "left")
-                newer = F.col("_stored").isNull() | (
-                    F.struct(F.col("warc_ts").alias("ts"), F.col("log_offset").alias("off")) > F.col("_stored")
-                )
-                appliable = j.filter(newer).drop("_stored")
-            else:
-                appliable = dedup
-
-            # 4. resurrection guard vs prior-batch tombstones.  Tombstones
-            #    are pruned to the batch's touched buckets first: the guard
-            #    then joins against a slice proportional to the batch, not
-            #    the table's whole delete history (strategy left to AQE).
-            if need_guard:
-                tombs = table.read_tombstones(TOMBSTONE_SCHEMA).withColumnRenamed("deleted_ts", "warc_ts")
-                if prune_buckets and len(touched) < nb:
-                    tombs = tombs.filter(bucket_expr(key, nb).isin(touched))
-                appliable = tombstone_guard(appliable, tombs, key)
+            # 2. key-only LWW over batch (src 0) ∪ stored rows (src 1) ∪
+            #    tombstones (src 1) of the touched buckets: ONE aggregation
+            #    decides everything.  src breaks (warc_ts, log_offset) ties
+            #    toward the rivals, so a batch event applies iff it is
+            #    strictly newer than the stored row AND the latest tombstone
+            #    (idempotent upsert, app.py:34-39; no resurrection by stale
+            #    events, app.py:54-67).
+            cols = [key, "warc_ts", "log_offset"]
+            cands = resolved.select(*cols, F.lit(0).alias("_src"))
             if has_current:
-                # two consumers ahead (anti-join keys + upsert projection)
-                # whenever stored rows exist — including the decision-col
-                # path, where appliable IS dedup (the state store already
-                # proved strictly-newer) but the winner join would still
-                # re-run once per consumer without the cache.  Without
-                # stored rows there is only the upsert path — no cache.
-                appliable = appliable.persist(StorageLevel.MEMORY_AND_DISK)
-                persisted.append(appliable)
-
-            applied_keys = appliable.select(key)
-            upserts = (
-                appliable.filter(F.col("op") != OP_DELETE)
-                .withColumn("text", html_to_text(F.col("html")))
+                current = align_to_schema(table.read_buckets(touched, m), evolved)
+            if has_current and not decision_col:
+                cands = cands.unionByName(current.select(*cols, F.lit(1).alias("_src")))
+            if rivals_tombs:
+                tombs = table.read_tombstones(TOMBSTONE_SCHEMA)
+                if prune_buckets and len(touched) < nb:
+                    tombs = tombs.filter(bucket_expr("url", nb).isin(touched))
+                cands = cands.unionByName(tombs.select(
+                    F.col("url").alias(key), F.col("deleted_ts").alias("warc_ts"),
+                    "log_offset", F.lit(1).alias("_src"),
+                ))
+            # the explicit not-null key filter matches the one the survivor
+            # anti-join below infers, so both consumers of the aggregation
+            # plan the same exchange and Spark reuses it (one LWW shuffle)
+            cands = cands.filter(F.col(key).isNotNull())
+            order = ("warc_ts", "log_offset", "_src")
+            won = (
+                lww_dedup_salted(cands, key, order, n_salts=n_salts)
+                if salted
+                else lww_dedup(cands, key, order)
             )
-            upserts = align_to_schema(upserts, evolved)
+            # the batch's applied (url, offset) pairs: at most n_rows
+            won = bounded_broadcast(
+                won.filter(F.col("_src") == 0).select(key, "log_offset"), n_rows, cleanup=_caches
+            )
+            # 3. payload fetch by winning offset, then collapse + extract
+            winners = resolved.join(won.select("log_offset"), "log_offset")
+            upserts = _collapse_and_extract(winners, key, nb, evolved)
             if keep_applied is not None:
                 upserts = upserts.persist(StorageLevel.MEMORY_AND_DISK)
                 keep_applied.append(upserts)
 
-            # 5. copy-on-write: survivors of touched buckets + applied upserts
+            # 4. copy-on-write: survivors of touched buckets + applied upserts
             if has_current:
-                new_data = current.join(applied_keys, key, "left_anti").unionByName(upserts)
+                new_data = current.join(won.select(key), key, "left_anti").unionByName(upserts)
             else:
                 new_data = upserts
 
-        # 6. tombstone audit: every delete event in the batch (reference
+        # 5. tombstone audit: every delete event in the batch (reference
         #    app.py:15-21 appends every delete to change_log).  Anti-join
         #    against already-stored tombstones so a duplicate delivery that
         #    lands in a *different* micro-batch than its original does not
@@ -422,7 +428,7 @@ def apply_batch(
             "committed_at": datetime.now(timezone.utc).isoformat(),
         }
     finally:
-        for _c in persisted + _caches:
+        for _c in _caches:
             try:
                 _c.unpersist()
             except Exception:

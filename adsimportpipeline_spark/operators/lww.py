@@ -162,11 +162,51 @@ def lww_dedup_salted(
     return lww_dedup(pre, key=key, order_cols=order_cols)
 
 
+def bounded_broadcast(
+    small: DataFrame,
+    bound: int | None,
+    max_rows: int = 4_000_000,
+    cleanup: list | None = None,
+) -> DataFrame:
+    """THE broadcast rule for the small side of an LWW join: hint a
+    broadcast iff an upper bound on its row count fits the budget
+    (:func:`_offset_broadcast_cap_rows`), else a shuffled hash join.
+
+    ``bound`` is the cheapest bound the caller has — the batch row count the
+    apply path's touched-bucket job returns, or parquet footer arithmetic.
+    When it is unknown or does not fit, the frame is persisted and counted
+    (one narrow scan: the count's materialization IS the relation the join
+    consumes) and the exact count decides; the broadcast exchange then
+    collects from the cache JVM-side.  (Collecting the offsets to the driver
+    as Arrow and re-creating a local DataFrame instead left every core idle
+    for >1 s per batch at 4 cores.)  ``cleanup`` gets the persisted
+    frame for the caller to unpersist after its job; without one the cache
+    is dropped at once (the plan keeps the lineage; worst case re-agg).
+    Deferring the choice to AQE instead would be too late — AQE submits both
+    shuffle stages of a sort-merge join before converting it, so the full
+    payload shuffle gets WRITTEN even when the runtime stats would have
+    chosen broadcast (measured: an avoidable 1.3 GB write + read per
+    8M-event batch)."""
+    cap = _offset_broadcast_cap_rows(small.sparkSession, max_rows)
+    if cap > 0 and (bound is None or bound > cap):
+        from pyspark.storagelevel import StorageLevel
+
+        small = small.persist(StorageLevel.MEMORY_AND_DISK)
+        bound = small.count()
+        if cleanup is not None:
+            cleanup.append(small)
+        else:
+            small.unpersist()
+    if cap > 0 and bound <= cap:
+        return F.broadcast(small)
+    return small.hint("shuffle_hash")
+
+
 def lww_winner_rows(
     df: DataFrame,
     key: str = "url",
     order_cols: tuple[str, ...] = DEFAULT_ORDER,
-    broadcast_keys: bool | None = None,
+    broadcast_keys: bool | int | None = None,
     broadcast_max_keys: int = 4_000_000,
     cleanup: list | None = None,
     unique_order_col: str | None = None,
@@ -184,19 +224,15 @@ def lww_winner_rows(
     cluster scale it is the difference between shuffling 100 TB and
     shuffling 400 GB.
 
-    ``broadcast_keys``: ``True``/``False`` force the join strategy.  The
-    default ``None`` MEASURES: the winner-key aggregate itself is persisted
-    and counted — one narrow scan total, because the count's materialization
-    is exactly the relation the join consumes (the earlier design ran a
-    separate ``approx_count_distinct`` scan AND re-ran the aggregate inside
-    the main job — two narrow passes over the full log).  The join
-    broadcasts iff the exact count is under ``broadcast_max_keys``, else
-    falls back to a shuffled join.  Deferring the choice to AQE instead
-    would be too late — AQE submits both shuffle stages of a sort-merge
-    join before converting it, so the full payload shuffle gets WRITTEN
-    even when the runtime stats would have chosen broadcast (measured: an
-    avoidable 1.3 GB write + read per 8M-event batch).  A bulk replay with
-    10^9 distinct keys still takes the shuffled path — no driver OOM.
+    ``broadcast_keys``: ``True``/``False`` force the join strategy.  An int
+    is a caller-known upper bound on the key count (the apply path passes
+    its batch row count); ``None`` takes the parquet-footer bound when
+    ``unique_order_col`` is set and the frame is a plain scan.  Either way
+    :func:`bounded_broadcast` decides, measuring only when no bound fits: a
+    bulk replay with 10^9 distinct keys still takes the shuffled path — no
+    driver OOM.  In ``foreachBatch`` the batch is a ``LogicalRDD``, so the
+    footer bound never applies there and the caller's bound is what keeps
+    the measuring job off the per-batch path.
 
     ``broadcast_max_keys`` gates on row count as a proxy for bytes: a
     (key, order-struct) row is ~50-100 B, so the 4M default keeps the
@@ -204,14 +240,6 @@ def lww_winner_rows(
     executor and of the same order as a generous
     ``spark.sql.autoBroadcastJoinThreshold``.  Raise it only with the
     executor memory to match.
-
-    ``cleanup``: when a list is passed, the persisted key aggregate is
-    appended to it and the caller unpersists after its job (the apply path
-    does — apply.py's ``finally``).  Without one, the cache is dropped
-    immediately after the count so a long-lived session cannot leak it —
-    the join then recomputes the aggregate inside the main job (the
-    count's cost matches the old HLL scan, so the worst case is the old
-    behavior, never worse).
     """
     order_struct = _order_struct(order_cols)
     if unique_order_col is not None:
@@ -241,62 +269,15 @@ def lww_winner_rows(
         )
     else:
         keys = df.groupBy(key).agg(F.max(order_struct).alias("_w"))
-    if broadcast_keys is None and unique_order_col is not None:
-        # 0-cost decision first: parquet footers give an UPPER BOUND on the
-        # key count (keys <= source rows) without touching data.  When the
-        # bound already fits the broadcast budget (8 B per offset row vs
-        # autoBroadcastJoinThreshold), hint the broadcast directly — the
-        # winner aggregation then runs INSIDE the main job's broadcast
-        # exchange: one narrow scan total, no measuring job, no barrier,
-        # and (in the apply path) fully overlapped with the tombstone/
-        # lineage jobs.  A 10^10-row log blows the bound and falls through
-        # to measure-and-cache below.
-        ub = _metadata_row_upper_bound(df)
-        cap_rows = _offset_broadcast_cap_rows(df.sparkSession, broadcast_max_keys)
-        if cap_rows > 0 and ub is not None and ub <= cap_rows:
-            return df.join(F.broadcast(keys), unique_order_col)
-    if broadcast_keys is None and unique_order_col is not None:
-        # measure-and-cache: persist the winner-offset aggregate, count it
-        # (one narrow scan — the count's materialization IS the relation
-        # the join consumes), and broadcast FROM THE CACHE.  The broadcast
-        # exchange then collects from InMemoryTableScan entirely JVM-side
-        # (~0.3s for 300k offsets).  The previous design collected the
-        # offsets to the driver as an Arrow table and re-created a local
-        # DataFrame from it — measured at 4 cores, that Arrow->LocalRelation
-        # round-trip plus re-broadcast left every core idle for >1s per
-        # batch, a pure serial term in the N-vs-4N scaling ratio.  Overflow
-        # falls back to the shuffled join (the 10^9-key bulk case never
-        # touches driver memory).
-        from pyspark.storagelevel import StorageLevel
-
-        keys = keys.persist(StorageLevel.MEMORY_AND_DISK)
-        n_keys = keys.count()
-        if cleanup is not None:
-            cleanup.append(keys)
-        if n_keys <= cap_rows:
-            out = df.join(F.broadcast(keys), unique_order_col)
-            if cleanup is None:
-                keys.unpersist()  # plan keeps the lineage; worst case re-agg
-            return out
-        if cleanup is None:
-            keys.unpersist()
-        broadcast_keys = False
-    if broadcast_keys is None:
-        from pyspark.storagelevel import StorageLevel
-
-        keys = keys.persist(StorageLevel.MEMORY_AND_DISK)
-        n_keys = keys.count()
-        if cleanup is not None:
-            cleanup.append(keys)
-        else:
-            keys.unpersist()
-        broadcast_keys = n_keys <= _offset_broadcast_cap_rows(
-            df.sparkSession, broadcast_max_keys
-        )
-    if broadcast_keys:
+    if broadcast_keys is True:
         keys = F.broadcast(keys)
-    else:
+    elif broadcast_keys is False:
         keys = keys.hint("shuffle_hash")
+    else:
+        bound = broadcast_keys
+        if bound is None and unique_order_col is not None:
+            bound = _metadata_row_upper_bound(df)
+        keys = bounded_broadcast(keys, bound, broadcast_max_keys, cleanup)
     if unique_order_col is not None:
         return df.join(keys, unique_order_col)
     return df.join(keys, key).filter(order_struct == F.col("_w")).drop("_w")
