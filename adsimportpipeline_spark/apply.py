@@ -35,7 +35,11 @@ keys cost 4 Spark jobs per streaming batch.  Together with the separate
 stale-filter join, tombstone-guard join and pandas-UDF extraction they
 made a ~1 k-event micro-batch into a populated table cost 23 Spark jobs;
 this path runs 15, and its median batch wall is ~40 % lower (cdcbench
-``incr_upsert``, 4 vCPUs).
+``incr_upsert``, 4 vCPUs).  The bulk path once hashed its 8 bucket ids
+into 4 × cores = 16 partitions: 9 of the 16 Python tasks were empty at
+~250–350 ms each and two buckets collided in one partition, so the
+extract+write stage ran four waves where one suffices.  Whole buckets now
+land on ``min(buckets, cores)`` partitions by id (``bucket_partitioned``).
 """
 
 from __future__ import annotations
@@ -50,7 +54,7 @@ from pyspark.sql import types as T
 from pyspark.storagelevel import StorageLevel
 
 from .evolve import align_to_schema, reconcile_schema
-from .lake.table import CommitConflictError, LakeTable, bucket_expr
+from .lake.table import CommitConflictError, LakeTable, bucket_expr, bucket_partitioned
 from .operators.cdc import tombstone_guard  # noqa: F401  (re-exported: tracers wrap it by name)
 from .operators.lww import (
     bounded_broadcast,
@@ -90,7 +94,7 @@ def _collapse_and_extract(
     key: str,
     n_buckets: int,
     target_schema: T.StructType,
-    n_parts: int | None = None,
+    buckets: list[int] | None = None,
 ) -> DataFrame:
     """Winner rows -> ONE bucket-keyed payload shuffle -> in-partition
     duplicate collapse + HTML->text in a single Arrow pass.
@@ -103,15 +107,20 @@ def _collapse_and_extract(
     their winning ``log_offset`` (offsets identify events, so co-keyed rows
     are byte-identical deliveries — keeping any one is LWW).
 
-    ``n_parts=None`` leaves the partition count to AQE, which coalesces a
-    micro-batch's few winners into one Python task (each Python task costs
-    ~250 ms however few rows it has).
+    ``buckets`` (the touched bucket ids) places whole buckets on
+    ``min(len(buckets), cores)`` partitions via :func:`bucket_partitioned`:
+    the bulk path's extract+write stage then runs as one wave with no empty
+    task, and its output can be written without a second exchange.
+    ``None`` hashes on the bucket and leaves the count to AQE, which
+    coalesces a micro-batch's ~100 winners into ONE Python task — the
+    cheapest shape there, since each Python task costs ~250 ms however few
+    rows it has.
     """
     upserts = winners.filter(F.col("op") != OP_DELETE).drop("op")
     tagged = upserts.withColumn("_bucket", bucket_expr(key, n_buckets))
     tagged = (
-        tagged.repartition(n_parts, F.col("_bucket"))
-        if n_parts
+        bucket_partitioned(tagged, buckets)
+        if buckets is not None
         else tagged.repartition(F.col("_bucket"))
     )
 
@@ -161,26 +170,15 @@ def _bulk_upserts(
     target_schema: T.StructType,
     cleanup: list,
     n_rows: int | None,
+    touched: list[int],
 ) -> DataFrame:
     """Fresh-table bulk apply: :func:`lww_winner_rows` (``n_rows`` bounds
     the winner count, so no measuring job when it fits the broadcast budget)
-    then :func:`_collapse_and_extract`."""
+    then :func:`_collapse_and_extract` placed on the ``touched`` buckets."""
     winners = lww_winner_rows(
         batch_df, key, broadcast_keys=n_rows, cleanup=cleanup, unique_order_col="log_offset"
     )
-    # explicit partition count at 4 tasks/core: AQE's post-shuffle coalesce
-    # targets bytes-per-partition, which at this payload size lands a task
-    # count BELOW the core count's next multiple (measured: 5 tasks on 4
-    # cores = a full wave of 4 then a 1-task straggler wave, ~40% of the
-    # stage idle).  The extract stage is python-worker-bound, so wave
-    # balance — not bytes — is the binding constraint; 4x parallelism keeps
-    # the tail short at every cluster size and still amortizes per-task
-    # setup.  Cluster-scale: defaultParallelism = total executor cores.
-    # NOTE: the repartition hashes on _bucket, so the number of NON-EMPTY
-    # partitions is bounded by min(n_parts, n_buckets) — n_parts beyond
-    # n_buckets buys nothing; size n_buckets >= cores*4 to keep waves full.
-    n_parts = max(batch_df.sparkSession.sparkContext.defaultParallelism * 4, 8)
-    return _collapse_and_extract(winners, key, n_buckets, target_schema, n_parts)
+    return _collapse_and_extract(winners, key, n_buckets, target_schema, touched)
 
 
 def apply_batch(
@@ -268,19 +266,19 @@ def apply_batch(
         _mark("dedup_and_touched")
 
         if not has_current and not rivals_tombs and not salted:
-            # FUSED bulk path: winner rows go through one bucket-keyed
-            # shuffle with the duplicate collapse and text extraction fused
-            # into a single Arrow pass.  Passed as a thunk: any measuring
-            # job inside it then runs in overwrite_buckets' pool thread,
-            # overlapping the tombstone/lineage append jobs.
-            if keep_applied is not None:
-                def new_data() -> DataFrame:
-                    df = _bulk_upserts(resolved, key, nb, evolved, _caches, n_rows)
+            # FUSED bulk path: winner rows go through one exchange that
+            # places whole touched buckets on partitions, with the duplicate
+            # collapse and text extraction fused into a single Arrow pass
+            # that the write consumes in place.  Passed as a thunk: any
+            # measuring job inside it then runs in overwrite_buckets' pool
+            # thread, overlapping the tombstone/lineage append jobs.
+            def new_data() -> DataFrame:
+                df = _bulk_upserts(resolved, key, nb, evolved, _caches, n_rows, touched)
+                if keep_applied is not None:
                     df = df.persist(StorageLevel.MEMORY_AND_DISK)
                     keep_applied.append(df)
-                    return df
-            else:
-                new_data = lambda: _bulk_upserts(resolved, key, nb, evolved, _caches, n_rows)  # noqa: E731
+                return df
+
             pre_partitioned = True
         else:
             pre_partitioned = False
@@ -319,7 +317,11 @@ def apply_batch(
             won = bounded_broadcast(
                 won.filter(F.col("_src") == 0).select(key, "log_offset"), n_rows, cleanup=_caches
             )
-            # 3. payload fetch by winning offset, then collapse + extract
+            # 3. payload fetch by winning offset, then collapse + extract.
+            #    No bucket placement here: a micro-batch's ~100 winners are
+            #    cheapest as the ONE Python task AQE coalesces a hash
+            #    exchange into (~250 ms per Python task however few rows);
+            #    the write below places survivors ∪ upserts by bucket.
             winners = resolved.join(won.select("log_offset"), "log_offset")
             upserts = _collapse_and_extract(winners, key, nb, evolved)
             if keep_applied is not None:

@@ -66,8 +66,14 @@ def reconcile_schema(table: T.StructType, incoming: T.StructType) -> T.StructTyp
 
 
 def align_to_schema(df: DataFrame, target: T.StructType) -> DataFrame:
-    """Project df onto target schema: cast widened columns, null-fill missing."""
-    have = {f.name: f for f in df.schema.fields}
+    """Project df onto target schema: cast widened columns, null-fill missing.
+    A frame already in the target's column names, order and types comes
+    back unchanged: the identity projection would cost py4j calls and a
+    re-analysis for nothing."""
+    fields = df.schema.fields
+    if [(f.name, f.dataType) for f in fields] == [(f.name, f.dataType) for f in target.fields]:
+        return df
+    have = {f.name: f for f in fields}
     cols = []
     for f in target.fields:
         if f.name in have:

@@ -42,6 +42,7 @@ import os
 import re
 import uuid
 
+import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -161,6 +162,30 @@ def _keys_comparable(a, b) -> bool:
 
 def bucket_expr(key_col: str, n_buckets: int):
     return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+
+
+def bucket_partitioned(df: DataFrame, buckets) -> DataFrame:
+    """Place ``df``'s rows (tagged with ``_bucket``, every value one of
+    ``buckets``) so each bucket lands whole on exactly one of
+    ``P = min(len(buckets), defaultParallelism)`` partitions, none empty.
+
+    The k-th bucket of ``sorted(buckets)`` goes to partition ``k mod P``,
+    read per row by indexing a literal array by bucket id (O(1), no search
+    of the list, which holds thousands of buckets at cluster scale).  A
+    fixed-count ``repartitionById`` exchange: AQE does not coalesce it, so
+    a stage behind it runs as one wave of at most one task per core.  A
+    hash ``repartition(_bucket)`` instead collides bucket ids (two of 8
+    shared one partition) and, at a fixed count above the bucket count,
+    schedules empty tasks — each ~250 ms when the stage runs Python."""
+    ordered = sorted(set(buckets))
+    n_parts = max(1, min(len(ordered), df.sparkSession.sparkContext.defaultParallelism))
+    part_of = np.zeros(ordered[-1] + 1 if ordered else 1, dtype=np.int32)
+    part_of[ordered] = np.arange(len(ordered), dtype=np.int32) % n_parts
+    # one array literal (a numpy array is one py4j call, not one per
+    # bucket); F.get reads an id past its end as NULL (partition 0) even
+    # under ANSI
+    pid = F.get(F.lit(part_of), F.col("_bucket"))
+    return df.repartitionById(n_parts, pid)
 
 
 class LakeTable:
@@ -694,11 +719,10 @@ class LakeTable:
         carry everything else forward, append tombstones/lineage, record the
         commit epoch — all in one atomic manifest flip.
 
-        ``pre_partitioned=True`` asserts the caller already shuffled
-        ``new_data`` so each url's rows are co-located by
+        ``pre_partitioned=True`` asserts the caller already placed
+        ``new_data`` by :func:`bucket_partitioned` on
         ``bucket_expr(key, n_buckets)`` (the fused bulk apply path does);
-        the write then skips its own repartition — no second payload
-        shuffle.
+        the write then skips its own exchange — no second payload shuffle.
 
         ``new_data`` may be a CALLABLE returning the DataFrame: plan
         construction then happens inside the main write's pool thread, so
@@ -727,8 +751,8 @@ class LakeTable:
             m["current_schema_id"] = sid
         sid = m["current_schema_id"]
 
-        # write new bucket data partitioned by bucket dir; repartition by
-        # bucket first so each bucket's rows colocate in few tasks (without
+        # write new bucket data partitioned by bucket dir; place whole
+        # buckets on partitions first so each bucket is one file (without
         # this every task writes a sliver of every bucket -> tasks x buckets
         # tiny files).  The three independent writes (data, tombstones,
         # lineage) are submitted as CONCURRENT Spark jobs — the scheduler
@@ -743,7 +767,7 @@ class LakeTable:
             df = new_data() if callable(new_data) else new_data
             tagged = df.withColumn("_bucket", bucket_expr(key, nb))
             if not pre_partitioned:
-                tagged = tagged.repartition(F.col("_bucket"))
+                tagged = bucket_partitioned(tagged, touched_buckets)
             if sort_cols:
                 # in-partition sort only — no extra shuffle; tightens
                 # row-group stats so pushed predicates skip within files
@@ -842,8 +866,8 @@ class LakeTable:
         key, nb = m["key"], m["n_buckets"]
         self._ensure_stats_friendly_writes(m.get("stats_cols") or [])
         d = os.path.join(self.root, "data", f"a-{uuid.uuid4().hex[:12]}")
-        tagged = new_data.withColumn("_bucket", bucket_expr(key, nb)).repartition(
-            F.col("_bucket")
+        tagged = bucket_partitioned(
+            new_data.withColumn("_bucket", bucket_expr(key, nb)), range(nb)
         )
         if m.get("sort_cols"):
             tagged = tagged.sortWithinPartitions("_bucket", *m["sort_cols"])
@@ -948,9 +972,10 @@ class LakeTable:
             sid = m["current_schema_id"]
             self._ensure_stats_friendly_writes(m.get("stats_cols") or [])
             d = os.path.join(self.root, "data", f"r-{uuid.uuid4().hex[:12]}")
-            tagged = data.withColumn(
-                "_bucket", bucket_expr(key, new_n_buckets)
-            ).repartition(F.col("_bucket"))
+            tagged = bucket_partitioned(
+                data.withColumn("_bucket", bucket_expr(key, new_n_buckets)),
+                range(new_n_buckets),
+            )
             if m.get("sort_cols"):
                 tagged = tagged.sortWithinPartitions("_bucket", *m["sort_cols"])
             tagged.write.mode("overwrite").partitionBy("_bucket").parquet(d)

@@ -144,3 +144,28 @@ def test_reconcile_schema_properties():
     for bad in (TT.StringType(), TT.BooleanType(), TT.BinaryType()):
         with pytest.raises(TypeError):
             reconcile_schema(t, TT.StructType([TT.StructField("a", bad, True)]))
+
+
+def test_align_to_schema_identity_and_widening(spark):
+    """A frame already in the target's names, order and types comes back as
+    the same object; a narrower or partial frame is still cast and
+    null-filled."""
+    from pyspark.sql import types as T
+
+    from adsimportpipeline_spark.evolve import align_to_schema
+
+    target = T.StructType([
+        T.StructField("a", T.LongType()),
+        T.StructField("b", T.StringType()),
+        T.StructField("c", T.DoubleType()),
+    ])
+    same = spark.createDataFrame([(1, "x", 2.0)], target)
+    assert align_to_schema(same, target) is same
+
+    narrow = spark.createDataFrame([("y", 3)], "b string, a int")
+    out = align_to_schema(narrow, target)
+    assert out is not narrow
+    assert [(f.name, f.dataType) for f in out.schema.fields] == [
+        (f.name, f.dataType) for f in target.fields
+    ]
+    assert out.collect() == [(3, "y", None)]
