@@ -29,17 +29,25 @@ fused bulk path takes the batch's own LWW winners straight to step 4.
 
 Negative results, kept so nobody re-adds them: persisting the applied
 rows fixed the Python stage at ``spark.sql.shuffle.partitions`` tasks
-(AQE cannot re-coalesce a cached relation's output), at ~250 ms per task
-however few rows it held; the measure-and-cache ``count()`` of the winner
-keys cost 4 Spark jobs per streaming batch.  Together with the separate
-stale-filter join, tombstone-guard join and pandas-UDF extraction they
-made a ~1 k-event micro-batch into a populated table cost 23 Spark jobs;
-this path runs 15, and its median batch wall is ~40 % lower (cdcbench
-``incr_upsert``, 4 vCPUs).  The bulk path once hashed its 8 bucket ids
-into 4 × cores = 16 partitions: 9 of the 16 Python tasks were empty at
-~250–350 ms each and two buckets collided in one partition, so the
+(AQE cannot re-coalesce a cached relation's output), each paying a Python
+task's fixed cost however few rows it held; the measure-and-cache
+``count()`` of the winner keys cost 4 Spark jobs per streaming batch.
+Together with the separate stale-filter join, tombstone-guard join and
+pandas-UDF extraction they made a ~1 k-event micro-batch into a populated
+table cost 23 Spark jobs; this path runs 15, and its median batch wall is
+~40 % lower (cdcbench ``incr_upsert``, 4 vCPUs).  The bulk path once
+hashed its 8 bucket ids into 4 × cores = 16 partitions: 9 of the 16
+Python tasks were empty and two buckets collided in one partition, so the
 extract+write stage ran four waves where one suffices.  Whole buckets now
 land on ``min(buckets, cores)`` partitions by id (``bucket_partitioned``).
+
+That fixed cost was once ~250 ms per Python task.  Most of it was not Arrow
+transfer or extraction but the worker's per-task set-up: PySpark's
+``importlib.invalidate_caches()`` made each of the worker's ~19 cached zip
+importers (``pyspark.zip``, the spark-core jar, ...) re-read its archive's
+central directory, 120–230 ms per task on 4 vCPUs.  The Arrow pass now
+drops those importers (:func:`.session.forget_zip_importers`), and a task's
+set-up is a few tens of ms.
 """
 
 from __future__ import annotations
@@ -112,9 +120,11 @@ def _collapse_and_extract(
     the bulk path's extract+write stage then runs as one wave with no empty
     task, and its output can be written without a second exchange.
     ``None`` hashes on the bucket and leaves the count to AQE, which
-    coalesces a micro-batch's ~100 winners into ONE Python task — the
-    cheapest shape there, since each Python task costs ~250 ms however few
-    rows it has.
+    coalesces a micro-batch's ~100 winners into ONE Python task: one task
+    suffices for ~100 winners.  Each task's fixed set-up cost is a few tens
+    of ms since the Arrow pass drops the worker's zip importers
+    (:func:`.session.forget_zip_importers`); before, the per-task zip
+    directory re-reads made it ~250 ms.
     """
     upserts = winners.filter(F.col("op") != OP_DELETE).drop("op")
     tagged = upserts.withColumn("_bucket", bucket_expr(key, n_buckets))
@@ -138,7 +148,9 @@ def _collapse_and_extract(
         import pyarrow as pa
 
         from .functions.html import extract_text_arrow
+        from .session import forget_zip_importers
 
+        forget_zip_importers()  # the next task's worker set-up stays cheap
         seen: set = set()  # urls of THIS partition only (one bucket group)
         for batch in it:
             urls = batch.column(batch.schema.get_field_index(key)).to_pylist()
@@ -318,10 +330,10 @@ def apply_batch(
                 won.filter(F.col("_src") == 0).select(key, "log_offset"), n_rows, cleanup=_caches
             )
             # 3. payload fetch by winning offset, then collapse + extract.
-            #    No bucket placement here: a micro-batch's ~100 winners are
-            #    cheapest as the ONE Python task AQE coalesces a hash
-            #    exchange into (~250 ms per Python task however few rows);
-            #    the write below places survivors ∪ upserts by bucket.
+            #    No bucket placement here: one task suffices for ~100
+            #    winners, so AQE coalesces the hash exchange into ONE
+            #    Python task; the write below places survivors ∪ upserts
+            #    by bucket.
             winners = resolved.join(won.select("log_offset"), "log_offset")
             upserts = _collapse_and_extract(winners, key, nb, evolved)
             if keep_applied is not None:

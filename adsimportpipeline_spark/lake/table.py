@@ -175,8 +175,12 @@ def bucket_partitioned(df: DataFrame, buckets) -> DataFrame:
     fixed-count ``repartitionById`` exchange: AQE does not coalesce it, so
     a stage behind it runs as one wave of at most one task per core.  A
     hash ``repartition(_bucket)`` instead collides bucket ids (two of 8
-    shared one partition) and, at a fixed count above the bucket count,
-    schedules empty tasks — each ~250 ms when the stage runs Python."""
+    shared one partition, so the stage ran extra waves) and, at a fixed
+    count above the bucket count, schedules empty tasks, each paying a
+    Python task's set-up when the stage runs Python.  That set-up was
+    ~250 ms while the worker re-read its zip importers' directories every
+    task; it is a few tens of ms since the Arrow pass drops them
+    (``session.forget_zip_importers``)."""
     ordered = sorted(set(buckets))
     n_parts = max(1, min(len(ordered), df.sparkSession.sparkContext.defaultParallelism))
     part_of = np.zeros(ordered[-1] + 1 if ordered else 1, dtype=np.int32)

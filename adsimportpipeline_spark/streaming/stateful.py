@@ -29,6 +29,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..session import forget_zip_importers
+
 #: per-url state: LWW high-water mark.  No delete flag is stored — the LWW
 #: ordering alone provides the resurrection guard (a post-delete event is
 #: 'apply' only if strictly newer than the delete), so the mark is the
@@ -63,6 +65,7 @@ def _make_decider(passthrough: list[str]):
     """Group body parameterized by payload passthrough columns."""
 
     def _decide_group(key, pdfs: Iterator[pd.DataFrame], state: GroupState):
+        forget_zip_importers()  # the next task's worker set-up stays cheap
         url = key[0]
         has_state = state.exists
         if has_state:

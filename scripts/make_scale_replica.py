@@ -8,6 +8,8 @@ per-query walls are comparable to a driver-generated SF at the same scale:
 - ``events``: replica r offsets event_id by r*N_EV and user_id by r*N_USERS
   (user ids stay within the original customer key range, so the
   semi_join_lookup match rate is preserved while group count scales 10x).
+  That holds only while ``factor * N_USERS <= c_custkey`` span (max + 1):
+  exactly 10 × 1500 = 15000 at sf0.1.  A larger factor exits with an error.
 - ``customer``/``orders``/``lineitem``/``part``/``supplier``: key-consistent
   offsets (custkey, orderkey, partkey, suppkey) so every join keeps exactly
   its per-replica structure; value columns untouched.
@@ -66,8 +68,6 @@ def main() -> None:
         print(f"{name}: {tbl.num_rows} rows")
 
     F = args.factor
-    for name in ("region", "nation"):
-        dump(name, load(name))
 
     # key spans derived from the data (max+1), not hard-coded
     spans = {}
@@ -76,6 +76,17 @@ def main() -> None:
                       ("events", "event_id"), ("documents", "doc_id"),
                       ("embeddings", "vec_id")):
         spans[key] = pc.max(load(name)[key]).as_py() + 1
+    ev = load(name="events")
+    n_users = pc.max(ev["user_id"]).as_py() + 1
+    if F * n_users > spans["c_custkey"]:
+        raise SystemExit(
+            f"--factor {F}: replicated user ids reach {F * n_users - 1}, past "
+            f"the customer key range 0..{spans['c_custkey'] - 1}; the largest "
+            f"factor for {args.src} is {spans['c_custkey'] // n_users}"
+        )
+
+    for name in ("region", "nation"):
+        dump(name, load(name))
 
     plans = {
         "customer": {"c_custkey": spans["c_custkey"]},
@@ -90,8 +101,6 @@ def main() -> None:
         dump(name, pa.concat_tables([_offsets(base, cols, r) for r in range(F)]))
 
     # events: user_id cycles within the ORIGINAL customer key range
-    ev = load(name="events")
-    n_users = pc.max(ev["user_id"]).as_py() + 1
     reps = []
     for r in range(F):
         t = _offsets(ev, {"event_id": spans["event_id"]}, r)
