@@ -1,5 +1,5 @@
-"""The micro-batch apply path: touched buckets -> key-only LWW -> payload
-fetch -> Arrow extract -> copy-on-write commit.
+"""The micro-batch apply path: touched buckets -> Arrow extract -> one
+bucket-keyed LWW merge -> copy-on-write commit.
 
 This is the Spark rebuild of the reference's task chain
 ``task_find_new_records -> task_read_records -> task_merge_metadata ->
@@ -9,33 +9,44 @@ DataFrame plan executed per micro-batch inside ``foreachBatch``:
 1. **Touched buckets + row count** in one narrow job
    (``groupBy(bucket).count()``): only the table buckets holding the
    batch's urls are read and rewritten (the semantic twin of the
-   reference's changed-record short-circuit, tasks.py:52-64), and the row
-   count bounds the winners, which sizes the winner joins without a
-   measuring job.
-2. **Key-only LWW** over batch ∪ stored rows ∪ tombstones of the touched
-   buckets: one ``(url, warc_ts, log_offset, src)`` aggregation.  Ties go
-   to the stored side, so a batch event applies iff it is strictly newer
-   than the stored row (idempotent upsert, app.py:34-39) and than the
-   latest tombstone (no resurrection by stale events, app.py:54-67).
-3. **Payload fetch** of the winning rows by one ``log_offset`` join.
-4. **Duplicate collapse + HTML->text** in one ``mapInArrow`` pass, for
-   applied upserts only — never for losers.
-5. **Atomic commit** of the rewritten buckets (survivors ∪ upserts) +
+   reference's changed-record short-circuit, tasks.py:52-64); the row
+   count sizes the bulk path's winner join without a measuring job.
+2. **HTML->text** in one ``mapInArrow`` pass right after the batch scan,
+   for every batch upsert, losers included (O(batch)); stored rows never
+   enter Python.
+3. **One merge** of batch (``_src`` 0) ∪ stored rows (``op='upsert'``) ∪
+   tombstones (``op='delete'``, null payload) of the touched buckets
+   (``_src`` 1): one exchange on ``_bucket``, then ``max_by(payload,
+   (warc_ts, log_offset, _src))`` per ``(_bucket, url)``.  bucket = f(url),
+   so LWW is local to a bucket (the per-file-group merge of Iceberg / Hudi
+   copy-on-write writers).  Ties go to the stored side, so a batch event
+   applies iff it is strictly newer than the stored row (idempotent upsert,
+   app.py:34-39) and the latest tombstone (no resurrection by stale events,
+   app.py:54-67); exact duplicate deliveries share an offset, hence a
+   payload, and collapse in the same aggregate.
+4. **Atomic commit** of the winners that are not deletes (each bucket is
+   whole in one partition: one file per bucket, no second exchange) +
    tombstone audit appends + lineage + the commit epoch, in one manifest
    flip (exactly-once under foreachBatch replays).
 
-A fresh table (no stored rows, no tombstones) skips step 2's rivals: the
-fused bulk path takes the batch's own LWW winners straight to step 4.
+A fresh table (no stored rows, no tombstones) takes the fused bulk path:
+the batch's own LWW winners, placed by bucket, go through one duplicate
+collapse + extract Arrow pass, so text is extracted for winners only.
 
 Negative results, kept so nobody re-adds them: persisting the applied
 rows fixed the Python stage at ``spark.sql.shuffle.partitions`` tasks
-(AQE cannot re-coalesce a cached relation's output), each paying a Python
-task's fixed cost however few rows it held; the measure-and-cache
-``count()`` of the winner keys cost 4 Spark jobs per streaming batch.
-Together with the separate stale-filter join, tombstone-guard join and
-pandas-UDF extraction they made a ~1 k-event micro-batch into a populated
-table cost 23 Spark jobs; this path runs 15, and its median batch wall is
-~40 % lower (cdcbench ``incr_upsert``, 4 vCPUs).  The bulk path once
+(AQE cannot re-coalesce a cached relation's output); a measure-and-cache
+``count()`` of the winner keys cost 4 Spark jobs per batch; with separate
+stale-filter and tombstone-guard joins a ~1 k-event micro-batch into a
+populated table cost 23 jobs.  Deciding key-only, broadcasting the winning
+offsets, fetching payloads by a ``log_offset`` join and taking survivors by
+a left-anti join cost six AQE jobs for the data write and 15 per batch; the
+merge writes in two and a batch runs 10 (cdcbench ``incr_upsert``, 4
+vCPUs).  ``repartitionById`` (:func:`.lake.table.bucket_partitioned`) under
+the merge's aggregate costs two extra exchanges: it does not satisfy the
+aggregate's ``ClusteredDistribution(_bucket, url)``, so Spark adds
+``hashpartitioning(_bucket, url)`` and the write a third exchange; the hash
+``repartition(_bucket)`` does satisfy it.  The bulk path once
 hashed its 8 bucket ids into 4 × cores = 16 partitions: 9 of the 16
 Python tasks were empty and two buckets collided in one partition, so the
 extract+write stage ran four waves where one suffices.  Whole buckets now
@@ -65,8 +76,6 @@ from .evolve import align_to_schema, reconcile_schema
 from .lake.table import CommitConflictError, LakeTable, bucket_expr, bucket_partitioned
 from .operators.cdc import tombstone_guard  # noqa: F401  (re-exported: tracers wrap it by name)
 from .operators.lww import (
-    bounded_broadcast,
-    lww_dedup,
     lww_dedup_salted,
     lww_dedup_semi,  # noqa: F401  (re-exported: tracers wrap it by name)
     lww_winner_rows,
@@ -97,55 +106,25 @@ def pages_schema_for(batch_schema: T.StructType) -> T.StructType:
     return T.StructType(_text_after_html_fields(batch_schema.fields, "op"))
 
 
-def _collapse_and_extract(
-    winners: DataFrame,
-    key: str,
-    n_buckets: int,
-    target_schema: T.StructType,
-    buckets: list[int] | None = None,
-) -> DataFrame:
-    """Winner rows -> ONE bucket-keyed payload shuffle -> in-partition
-    duplicate collapse + HTML->text in a single Arrow pass.
-
-    bucket = f(url), so one shuffle keyed by bucket already co-locates every
-    url's duplicate deliveries in one partition — the collapse is a
-    vectorized in-partition ``drop_duplicates`` fused into the same
-    ``mapInArrow`` pass that extracts text.  Correct only when exact
-    duplicates are the ONLY multiplicity left, i.e. for rows fetched by
-    their winning ``log_offset`` (offsets identify events, so co-keyed rows
-    are byte-identical deliveries — keeping any one is LWW).
-
-    ``buckets`` (the touched bucket ids) places whole buckets on
-    ``min(len(buckets), cores)`` partitions via :func:`bucket_partitioned`:
-    the bulk path's extract+write stage then runs as one wave with no empty
-    task, and its output can be written without a second exchange.
-    ``None`` hashes on the bucket and leaves the count to AQE, which
-    coalesces a micro-batch's ~100 winners into ONE Python task: one task
-    suffices for ~100 winners.  Each task's fixed set-up cost is a few tens
-    of ms since the Arrow pass drops the worker's zip importers
-    (:func:`.session.forget_zip_importers`); before, the per-task zip
-    directory re-reads made it ~250 ms.
-    """
-    upserts = winners.filter(F.col("op") != OP_DELETE).drop("op")
-    tagged = upserts.withColumn("_bucket", bucket_expr(key, n_buckets))
-    tagged = (
-        bucket_partitioned(tagged, buckets)
-        if buckets is not None
-        else tagged.repartition(F.col("_bucket"))
-    )
-
-    out_fields = _text_after_html_fields(tagged.schema.fields, "_bucket")
-    out_schema = T.StructType(out_fields)
+def _arrow_text(df: DataFrame, key: str, collapse: bool) -> DataFrame:
+    """``df`` (minus ``_bucket``) with ``text`` right after ``html``, in ONE
+    ``mapInArrow`` pass; a delete's text stays null (it is never written).
+    ``collapse`` also drops rows whose url this partition has already seen:
+    correct only when each partition holds whole urls and exact duplicate
+    deliveries are the only multiplicity left (offsets identify events, so
+    co-keyed winners are byte-identical — keeping any one is LWW)."""
+    out_fields = _text_after_html_fields(df.schema.fields, "_bucket")
     out_cols = [f.name for f in out_fields]
 
-    def _collapse_and_extract_arrow(it: "Iterator") -> "Iterator":
+    def _text_arrow(it: "Iterator") -> "Iterator":
         # mapInArrow, not mapInPandas: the row payload (html binary, text)
         # stays in Arrow buffers end-to-end — a pandas pass materialized
         # every html as a Python bytes object and every text as a Python
         # str TWICE (in and out), the dominant python-side cost of this
         # stage.  Only the ~30-byte urls are materialized, for the
-        # cross-batch duplicate collapse.
+        # duplicate collapse.
         import pyarrow as pa
+        import pyarrow.compute as pc
 
         from .functions.html import extract_text_arrow
         from .session import forget_zip_importers
@@ -153,26 +132,26 @@ def _collapse_and_extract(
         forget_zip_importers()  # the next task's worker set-up stays cheap
         seen: set = set()  # urls of THIS partition only (one bucket group)
         for batch in it:
-            urls = batch.column(batch.schema.get_field_index(key)).to_pylist()
-            mask = []
-            for u in urls:
-                if u in seen:
-                    mask.append(False)
-                else:
+            if collapse:
+                mask = []
+                for u in batch.column(batch.schema.get_field_index(key)).to_pylist():
+                    mask.append(u not in seen)
                     seen.add(u)
-                    mask.append(True)
-            fresh = batch.filter(pa.array(mask, type=pa.bool_()))
-            if fresh.num_rows == 0:
-                continue
-            cols = {name: fresh.column(fresh.schema.get_field_index(name))
-                    for name in fresh.schema.names}
-            cols["text"] = extract_text_arrow(cols["html"])
+                batch = batch.filter(pa.array(mask, type=pa.bool_()))
+                if batch.num_rows == 0:
+                    continue
+            cols = {name: batch.column(batch.schema.get_field_index(name))
+                    for name in batch.schema.names}
+            html = cols["html"]
+            if "op" in cols:
+                html = pc.if_else(pc.equal(cols["op"], OP_DELETE),
+                                  pa.scalar(None, html.type), html)
+            cols["text"] = extract_text_arrow(html)
             yield pa.RecordBatch.from_arrays(
                 [cols[name] for name in out_cols], names=out_cols
             )
 
-    final = tagged.mapInArrow(_collapse_and_extract_arrow, out_schema)
-    return align_to_schema(final, target_schema)
+    return df.mapInArrow(_text_arrow, T.StructType(out_fields))
 
 
 def _bulk_upserts(
@@ -186,11 +165,18 @@ def _bulk_upserts(
 ) -> DataFrame:
     """Fresh-table bulk apply: :func:`lww_winner_rows` (``n_rows`` bounds
     the winner count, so no measuring job when it fits the broadcast budget)
-    then :func:`_collapse_and_extract` placed on the ``touched`` buckets."""
+    -> ONE exchange placing whole ``touched`` buckets on
+    ``min(len(touched), cores)`` partitions (:func:`bucket_partitioned`) ->
+    duplicate collapse + HTML->text in one Arrow pass.  bucket = f(url), so
+    each url's duplicate deliveries share a partition; the extract+write
+    stage runs as one wave with no empty task, and the write needs no
+    second exchange."""
     winners = lww_winner_rows(
         batch_df, key, broadcast_keys=n_rows, cleanup=cleanup, unique_order_col="log_offset"
     )
-    return _collapse_and_extract(winners, key, n_buckets, target_schema, touched)
+    upserts = winners.filter(F.col("op") != OP_DELETE).drop("op")
+    tagged = bucket_partitioned(upserts.withColumn("_bucket", bucket_expr(key, n_buckets)), touched)
+    return align_to_schema(_arrow_text(tagged, key, collapse=True), target_schema)
 
 
 def apply_batch(
@@ -208,26 +194,27 @@ def apply_batch(
     """Apply one micro-batch of change events. Returns stats. Idempotent:
     re-delivery of an already-committed batch_id is a no-op.
 
-    ``salted=True`` splits the key-only argmax in two phases
-    (:func:`lww_dedup_salted`) for hot urls.
+    ``salted=True`` splits the merge's argmax in two phases
+    (:func:`lww_dedup_salted`) for hot urls; the write then places buckets
+    with its own exchange.
 
     ``decision_col`` names a pre-resolution column (the stateful in-stream
     LWW operator's ``decision``): only rows marked ``'apply'`` are applied,
     and — because the state store already guarantees each such row is
-    strictly newer than everything previously seen for its url — the
-    stored keys and tombstones stay out of the LWW union (the operator's
-    whole point: per-batch work stays proportional to the batch, not the
-    table).  The tombstone audit still sees EVERY delete delivery, resolved
-    or not (reference app.py:15-21 appends every delete).
+    strictly newer than everything previously seen for its url — batch
+    rows outrank every stored row and tombstones stay out of the merge.
+    Stored rows stay in it: they are the survivors.  The tombstone audit
+    still sees EVERY delete delivery, resolved or not (reference
+    app.py:15-21 appends every delete).
 
     ``keep_applied``: when a list is passed, the applied-upserts frame
     (WITH extracted ``text``) is persisted and appended to it instead of
     being torn down — the caller owns the unpersist.  A derived-index
     maintainer (update_lsh_index) can then consume the rows this batch
     actually applied at O(batch) cost with no table read-back and no second
-    HTML->text extraction: the write job materializes the cache, the index
-    reads it.  Empty when the batch was an epoch no-op (caller falls back
-    to a table read for that crash-recovery case)."""
+    HTML->text extraction: the write job fills the cache the applied rows
+    are taken from.  Empty when the batch was an epoch no-op (caller falls
+    back to a table read for that crash-recovery case)."""
     if batch_id <= table.last_epoch(epoch_source):
         return {"batch_id": batch_id, "skipped": True}
 
@@ -241,9 +228,8 @@ def apply_batch(
     m = table.manifest()
     key, nb = m["key"], m["n_buckets"]
     # batch_df is deliberately NOT cached: its passes (touched discovery,
-    # lineage stats, LWW keys, payload fetch, tombstone audit) each prune to
-    # a few columns, so columnar re-reads from the source beat materializing
-    # full rows on heap
+    # lineage stats, tombstone audit) each prune to a few columns, so
+    # columnar re-reads from the source beat materializing full rows on heap
     _caches: list = []
     try:
         _mark("manifest_read")  # time since t0: the manifest open above
@@ -258,9 +244,9 @@ def apply_batch(
 
         # 1. bucket pruning: which table buckets does this batch touch, and
         #    how many rows does it have (an upper bound on its winners, which
-        #    sizes the winner joins below without a measuring job)?  A narrow
-        #    url-column scan of the RAW batch.  A bulk replay touches every
-        #    bucket anyway — prune_buckets=False skips the job.
+        #    sizes the bulk path's winner join without a measuring job)?  A
+        #    narrow url-column scan of the RAW batch.  A bulk replay touches
+        #    every bucket anyway — prune_buckets=False skips the job.
         if prune_buckets:
             counts = resolved.groupBy(bucket_expr(key, nb).alias("b")).count().collect()
             touched = [r[0] for r in counts]
@@ -270,12 +256,13 @@ def apply_batch(
         # manifest-level emptiness: a fresh table / bulk first replay has no
         # stored rows and no tombstones, so nothing can beat a batch winner.
         # With pre-resolved rows the state store already proved
-        # strictly-newer, so stored keys and tombstones never compete.
+        # strictly-newer, so tombstones never compete.
         has_current = any(m["buckets"].get(str(b)) for b in touched)
         has_tombs = bool(m["tombstone_files"])
         rivals_tombs = has_tombs and not decision_col
         evolved = reconcile_schema(table.schema(m), pages_schema_for(resolved.schema))
         _mark("dedup_and_touched")
+        merged = None  # the populated-table merge, once planned
 
         if not has_current and not rivals_tombs and not salted:
             # FUSED bulk path: winner rows go through one exchange that
@@ -293,60 +280,52 @@ def apply_batch(
 
             pre_partitioned = True
         else:
-            pre_partitioned = False
-            # 2. key-only LWW over batch (src 0) ∪ stored rows (src 1) ∪
-            #    tombstones (src 1) of the touched buckets: ONE aggregation
-            #    decides everything.  src breaks (warc_ts, log_offset) ties
-            #    toward the rivals, so a batch event applies iff it is
-            #    strictly newer than the stored row AND the latest tombstone
-            #    (idempotent upsert, app.py:34-39; no resurrection by stale
-            #    events, app.py:54-67).
-            cols = [key, "warc_ts", "log_offset"]
-            cands = resolved.select(*cols, F.lit(0).alias("_src"))
+            # 2-3. ONE bucket-keyed merge: batch rows (src 0, text extracted
+            #    right after the scan) ∪ stored rows and tombstones of the
+            #    touched buckets (src 1).  src breaks (warc_ts, log_offset)
+            #    ties toward the stored side, so a batch event applies iff it
+            #    is strictly newer than the stored row AND the latest
+            #    tombstone; pre-resolved rows outrank every stored row by a
+            #    leading priority field instead.
+            #    Inputs union by name, missing columns null: the projection
+            #    onto ``evolved`` below orders and casts them.
+            batch = _arrow_text(resolved.filter(F.col(key).isNotNull()), key, collapse=False)
+            cands = batch.withColumn("_src", F.lit(0))
             if has_current:
-                current = align_to_schema(table.read_buckets(touched, m), evolved)
-            if has_current and not decision_col:
-                cands = cands.unionByName(current.select(*cols, F.lit(1).alias("_src")))
+                current = table.read_buckets(touched, m)
+                cands = cands.unionByName(
+                    current.withColumns({"op": F.lit("upsert"), "_src": F.lit(1)}),
+                    allowMissingColumns=True,
+                )
             if rivals_tombs:
                 tombs = table.read_tombstones(TOMBSTONE_SCHEMA)
                 if prune_buckets and len(touched) < nb:
                     tombs = tombs.filter(bucket_expr("url", nb).isin(touched))
-                cands = cands.unionByName(tombs.select(
-                    F.col("url").alias(key), F.col("deleted_ts").alias("warc_ts"),
-                    "log_offset", F.lit(1).alias("_src"),
-                ))
-            # the explicit not-null key filter matches the one the survivor
-            # anti-join below infers, so both consumers of the aggregation
-            # plan the same exchange and Spark reuses it (one LWW shuffle)
-            cands = cands.filter(F.col(key).isNotNull())
+                tombs = tombs.selectExpr(f"url AS `{key}`", "deleted_ts AS warc_ts", "log_offset",
+                                         f"'{OP_DELETE}' AS op", "1 AS _src")
+                cands = cands.unionByName(tombs, allowMissingColumns=True)
             order = ("warc_ts", "log_offset", "_src")
-            won = (
-                lww_dedup_salted(cands, key, order, n_salts=n_salts)
-                if salted
-                else lww_dedup(cands, key, order)
-            )
-            # the batch's applied (url, offset) pairs: at most n_rows
-            won = bounded_broadcast(
-                won.filter(F.col("_src") == 0).select(key, "log_offset"), n_rows, cleanup=_caches
-            )
-            # 3. payload fetch by winning offset, then collapse + extract.
-            #    No bucket placement here: one task suffices for ~100
-            #    winners, so AQE coalesces the hash exchange into ONE
-            #    Python task; the write below places survivors ∪ upserts
-            #    by bucket.
-            winners = resolved.join(won.select("log_offset"), "log_offset")
-            upserts = _collapse_and_extract(winners, key, nb, evolved)
-            if keep_applied is not None:
-                upserts = upserts.persist(StorageLevel.MEMORY_AND_DISK)
-                keep_applied.append(upserts)
-
-            # 4. copy-on-write: survivors of touched buckets + applied upserts
-            if has_current:
-                new_data = current.join(won.select(key), key, "left_anti").unionByName(upserts)
+            if decision_col:
+                cands = cands.withColumn("_prio", F.col("_src") == 0)
+                order = ("_prio",) + order
+            pre_partitioned = not salted
+            if salted:
+                merged = lww_dedup_salted(cands, key, order, n_salts=n_salts)
             else:
-                new_data = upserts
+                # a hash exchange, not bucket_partitioned: HashPartitioning
+                # (_bucket) satisfies the aggregate's distribution, so each
+                # bucket lands whole in one partition with no second exchange
+                cands = cands.withColumn("_bucket", bucket_expr(key, nb)).repartition("_bucket")
+                payload = ", ".join(f"`{c}`" for c in cands.columns if c not in (key, "_bucket"))
+                winner = F.expr(f"max_by(struct({payload}), struct({', '.join(order)}))")
+                merged = cands.groupBy("_bucket", key).agg(winner.alias("w")).select(key, "w.*")
+            merged = merged.filter(F.col("op") != OP_DELETE)
+            if keep_applied is not None:
+                merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
+                _caches.append(merged)
+            new_data = align_to_schema(merged, evolved)
 
-        # 5. tombstone audit: every delete event in the batch (reference
+        # 4. tombstone audit: every delete event in the batch (reference
         #    app.py:15-21 appends every delete to change_log).  Anti-join
         #    against already-stored tombstones so a duplicate delivery that
         #    lands in a *different* micro-batch than its original does not
@@ -416,6 +395,12 @@ def apply_batch(
             # its top (bucket pruning, has_current, epochs all came from it)
             parent_version=m["version"],
         )
+        if merged is not None and keep_applied is not None:
+            # taken from the merge the write just cached: no second extract
+            applied = align_to_schema(merged.filter(F.col("_src") == 0), evolved)
+            applied = applied.persist(StorageLevel.MEMORY_AND_DISK)
+            applied.count()
+            keep_applied.append(applied)
         _mark("commit_write")
         # periodic fold of the append-only tombstone/lineage branches keeps
         # per-batch guard reads and the manifest O(1) over the table's

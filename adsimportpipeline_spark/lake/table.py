@@ -161,7 +161,8 @@ def _keys_comparable(a, b) -> bool:
 
 
 def bucket_expr(key_col: str, n_buckets: int):
-    return F.pmod(F.xxhash64(F.col(key_col)), F.lit(n_buckets)).cast("int")
+    # one parsed SQL expression: a py4j round trip or two, not one per node
+    return F.expr(f"CAST(pmod(xxhash64(`{key_col}`), {int(n_buckets)}) AS INT)")
 
 
 def bucket_partitioned(df: DataFrame, buckets) -> DataFrame:
@@ -723,10 +724,11 @@ class LakeTable:
         carry everything else forward, append tombstones/lineage, record the
         commit epoch — all in one atomic manifest flip.
 
-        ``pre_partitioned=True`` asserts the caller already placed
-        ``new_data`` by :func:`bucket_partitioned` on
-        ``bucket_expr(key, n_buckets)`` (the fused bulk apply path does);
-        the write then skips its own exchange — no second payload shuffle.
+        ``pre_partitioned=True`` asserts the caller already put each bucket
+        of ``bucket_expr(key, n_buckets)`` whole in one partition (the fused
+        bulk apply path by :func:`bucket_partitioned`, the merge by a hash
+        exchange on the bucket); the write then skips its own exchange — no
+        second payload shuffle.
 
         ``new_data`` may be a CALLABLE returning the DataFrame: plan
         construction then happens inside the main write's pool thread, so
@@ -778,10 +780,12 @@ class LakeTable:
                 tagged = tagged.sortWithinPartitions("_bucket", *sort_cols)
             tagged.write.mode("overwrite").partitionBy("_bucket").parquet(d)
 
-        # repartition(1), not coalesce(1): coalesce would collapse the whole
-        # upstream distinct/aggregation into a single task; repartition keeps
-        # the computation parallel and only funnels the (small) result to one
-        # output file
+        # one output file per append.  The tombstone audit ends in
+        # repartition(1): its anti-join can be a shuffle join at scale, and
+        # coalesce(1) would collapse that join into a single task.  Lineage
+        # ends in coalesce(1): its upstream is an aggregate over at most
+        # (batch partitions) rows whose own exchange keeps the scan
+        # parallel, so a second exchange would only cost a job.
         jobs = [_write_main]
         results: dict[str, str] = {}
         if tombstone_appends is not None:
@@ -800,7 +804,7 @@ class LakeTable:
                 "lin",
                 self._write_data_dir(
                     (lineage_appends() if callable(lineage_appends)
-                     else lineage_appends).repartition(1),
+                     else lineage_appends).coalesce(1),
                     "lin",
                 )))
         if len(jobs) > 1:

@@ -60,8 +60,13 @@ def main() -> None:
     args = ap.parse_args()
     os.makedirs(args.dst, exist_ok=True)
 
+    tables: dict[str, pa.Table] = {}
+
     def load(name: str) -> pa.Table:
-        return pq.read_table(os.path.join(args.src, f"{name}.parquet"))
+        # each source table is read once: the span loop's reads are reused
+        if name not in tables:
+            tables[name] = pq.read_table(os.path.join(args.src, f"{name}.parquet"))
+        return tables[name]
 
     def dump(name: str, tbl: pa.Table) -> None:
         pq.write_table(tbl, os.path.join(args.dst, f"{name}.parquet"))
@@ -76,7 +81,7 @@ def main() -> None:
                       ("events", "event_id"), ("documents", "doc_id"),
                       ("embeddings", "vec_id")):
         spans[key] = pc.max(load(name)[key]).as_py() + 1
-    ev = load(name="events")
+    ev = load("events")
     n_users = pc.max(ev["user_id"]).as_py() + 1
     if F * n_users > spans["c_custkey"]:
         raise SystemExit(

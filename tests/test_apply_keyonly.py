@@ -1,8 +1,9 @@
-"""The populated-table apply path: one key-only LWW over batch ∪ stored rows ∪
-tombstones decides which events apply.  Each case is checked against
-``replay_oracle`` (a pure-Python global LWW over everything delivered), plus
-the applied-rows frame ``keep_applied`` hands back, which shows what the
-batch actually applied rather than only what the table ends up holding."""
+"""The populated-table apply path: one bucket-keyed LWW merge over batch ∪
+stored rows ∪ tombstones decides which events apply.  Each case is checked
+against ``replay_oracle`` (a pure-Python global LWW over everything
+delivered), plus the applied-rows frame ``keep_applied`` hands back, which
+shows what the batch actually applied rather than only what the table ends
+up holding."""
 
 from __future__ import annotations
 
@@ -115,9 +116,10 @@ def test_delete_only_batch_empties_its_bucket(spark, tmp_path):
 
 
 def test_salted_and_decision_col_match_plain_path(spark, tmp_path):
-    """The three ways into the key-only LWW give one table: the plain path,
+    """The three ways into the LWW merge give one table: the plain path,
     ``salted=True`` (two-phase argmax), and ``decision_col`` (pre-resolved
-    rows, batch-only union) fed by decisions a state store would make."""
+    rows outrank stored ones, no tombstones) fed by decisions a state store
+    would make."""
     spec = GenSpec(n_events=1500, n_urls=100, seed=5)
     events = [r.asDict() for r in generate_change_log(spark, spec).collect()]
     batches = [[e for e in events if lo <= e["log_offset"] < lo + 500]
@@ -154,9 +156,11 @@ def test_salted_and_decision_col_match_plain_path(spark, tmp_path):
 
 #: Spark jobs one warm apply_batch of a small batch into a populated table
 #: (stored rows and tombstones in every touched bucket) may launch.  The
-#: key-only path measured 15; the earlier stale-filter/guard path with its
-#: measuring count() and persisted applied rows launched 21.
-MAX_APPLY_JOBS = 15
+#: bucket-keyed merge measured 10 (its data write is 2 AQE jobs); the
+#: key-only decide/broadcast/join path before it launched 15, and the
+#: stale-filter/guard path with its measuring count() and persisted applied
+#: rows 21.
+MAX_APPLY_JOBS = 10
 
 
 def test_warm_apply_job_count(spark, tmp_path):
