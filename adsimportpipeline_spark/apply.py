@@ -82,6 +82,12 @@ from .operators.lww import (
 )
 from .schema import LINEAGE_SCHEMA, OP_DELETE, TOMBSTONE_SCHEMA
 
+#: Every this many batch ids, ``apply_batch`` folds the append-only
+#: tombstone/lineage branches (:meth:`LakeTable.compact_appends`): one file
+#: per batch each would otherwise grow the per-batch tombstone reads and the
+#: manifest with the table's lifetime; the fold keeps both O(1).
+COMPACT_APPENDS_EVERY = 32
+
 
 def _text_after_html_fields(
     fields: list[T.StructField], skip: str
@@ -187,8 +193,6 @@ def apply_batch(
     salted: bool = False,
     n_salts: int = 16,
     prune_buckets: bool = True,
-    compact_appends_every: int = 32,
-    decision_col: str | None = None,
     keep_applied: list | None = None,
 ) -> dict:
     """Apply one micro-batch of change events. Returns stats. Idempotent:
@@ -197,15 +201,6 @@ def apply_batch(
     ``salted=True`` splits the merge's argmax in two phases
     (:func:`lww_dedup_salted`) for hot urls; the write then places buckets
     with its own exchange.
-
-    ``decision_col`` names a pre-resolution column (the stateful in-stream
-    LWW operator's ``decision``): only rows marked ``'apply'`` are applied,
-    and — because the state store already guarantees each such row is
-    strictly newer than everything previously seen for its url — batch
-    rows outrank every stored row and tombstones stay out of the merge.
-    Stored rows stay in it: they are the survivors.  The tombstone audit
-    still sees EVERY delete delivery, resolved or not (reference
-    app.py:15-21 appends every delete).
 
     ``keep_applied``: when a list is passed, the applied-upserts frame
     (WITH extracted ``text``) is persisted and appended to it instead of
@@ -234,37 +229,26 @@ def apply_batch(
     try:
         _mark("manifest_read")  # time since t0: the manifest open above
 
-        # pre-resolved mode: only 'apply' rows flow to the merge; the raw
-        # batch is kept for the tombstone audit + lineage stats
-        resolved = (
-            batch_df.filter(F.col(decision_col) == "apply").drop(decision_col)
-            if decision_col
-            else batch_df
-        )
-
         # 1. bucket pruning: which table buckets does this batch touch, and
         #    how many rows does it have (an upper bound on its winners, which
         #    sizes the bulk path's winner join without a measuring job)?  A
-        #    narrow url-column scan of the RAW batch.  A bulk replay touches
+        #    narrow url-column scan of the batch.  A bulk replay touches
         #    every bucket anyway — prune_buckets=False skips the job.
         if prune_buckets:
-            counts = resolved.groupBy(bucket_expr(key, nb).alias("b")).count().collect()
+            counts = batch_df.groupBy(bucket_expr(key, nb).alias("b")).count().collect()
             touched = [r[0] for r in counts]
             n_rows = sum(r[1] for r in counts)
         else:
             touched, n_rows = list(range(nb)), None
         # manifest-level emptiness: a fresh table / bulk first replay has no
         # stored rows and no tombstones, so nothing can beat a batch winner.
-        # With pre-resolved rows the state store already proved
-        # strictly-newer, so tombstones never compete.
         has_current = any(m["buckets"].get(str(b)) for b in touched)
         has_tombs = bool(m["tombstone_files"])
-        rivals_tombs = has_tombs and not decision_col
-        evolved = reconcile_schema(table.schema(m), pages_schema_for(resolved.schema))
+        evolved = reconcile_schema(table.schema(m), pages_schema_for(batch_df.schema))
         _mark("dedup_and_touched")
         merged = None  # the populated-table merge, once planned
 
-        if not has_current and not rivals_tombs and not salted:
+        if not has_current and not has_tombs and not salted:
             # FUSED bulk path: winner rows go through one exchange that
             # places whole touched buckets on partitions, with the duplicate
             # collapse and text extraction fused into a single Arrow pass
@@ -272,7 +256,7 @@ def apply_batch(
             # measuring job inside it then runs in overwrite_buckets' pool
             # thread, overlapping the tombstone/lineage append jobs.
             def new_data() -> DataFrame:
-                df = _bulk_upserts(resolved, key, nb, evolved, _caches, n_rows, touched)
+                df = _bulk_upserts(batch_df, key, nb, evolved, _caches, n_rows, touched)
                 if keep_applied is not None:
                     df = df.persist(StorageLevel.MEMORY_AND_DISK)
                     keep_applied.append(df)
@@ -285,11 +269,10 @@ def apply_batch(
             #    touched buckets (src 1).  src breaks (warc_ts, log_offset)
             #    ties toward the stored side, so a batch event applies iff it
             #    is strictly newer than the stored row AND the latest
-            #    tombstone; pre-resolved rows outrank every stored row by a
-            #    leading priority field instead.
+            #    tombstone.
             #    Inputs union by name, missing columns null: the projection
             #    onto ``evolved`` below orders and casts them.
-            batch = _arrow_text(resolved.filter(F.col(key).isNotNull()), key, collapse=False)
+            batch = _arrow_text(batch_df.filter(F.col(key).isNotNull()), key, collapse=False)
             cands = batch.withColumn("_src", F.lit(0))
             if has_current:
                 current = table.read_buckets(touched, m)
@@ -297,7 +280,7 @@ def apply_batch(
                     current.withColumns({"op": F.lit("upsert"), "_src": F.lit(1)}),
                     allowMissingColumns=True,
                 )
-            if rivals_tombs:
+            if has_tombs:
                 tombs = table.read_tombstones(TOMBSTONE_SCHEMA)
                 if prune_buckets and len(touched) < nb:
                     tombs = tombs.filter(bucket_expr("url", nb).isin(touched))
@@ -305,9 +288,6 @@ def apply_batch(
                                          f"'{OP_DELETE}' AS op", "1 AS _src")
                 cands = cands.unionByName(tombs, allowMissingColumns=True)
             order = ("warc_ts", "log_offset", "_src")
-            if decision_col:
-                cands = cands.withColumn("_prio", F.col("_src") == 0)
-                order = ("_prio",) + order
             pre_partitioned = not salted
             if salted:
                 merged = lww_dedup_salted(cands, key, order, n_salts=n_salts)
@@ -402,16 +382,14 @@ def apply_batch(
             applied.count()
             keep_applied.append(applied)
         _mark("commit_write")
-        # periodic fold of the append-only tombstone/lineage branches keeps
-        # per-batch guard reads and the manifest O(1) over the table's
-        # lifetime (its own atomic commit; a crash between the two commits
-        # loses only the fold, never data).  The fold is COSMETIC: losing a
-        # CAS to a concurrent maintenance job (compact/expire between the
-        # data commit above and here) must not kill the streaming query —
-        # absorb one conflict with a fresh re-plan, and if the table is
-        # racing that hard this trigger just skips; the next scheduled
-        # batch folds everything anyway.
-        if compact_appends_every and batch_id % compact_appends_every == compact_appends_every - 1:
+        # periodic fold (COMPACT_APPENDS_EVERY) in its own atomic commit: a
+        # crash between the two commits loses only the fold, never data.
+        # The fold is COSMETIC: losing a CAS to a concurrent maintenance job
+        # (compact/expire between the data commit above and here) must not
+        # kill the streaming query — absorb one conflict with a fresh
+        # re-plan, and if the table is racing that hard this trigger just
+        # skips; the next scheduled batch folds everything anyway.
+        if batch_id % COMPACT_APPENDS_EVERY == COMPACT_APPENDS_EVERY - 1:
             try:
                 table.compact_appends(retries=1)
             except CommitConflictError:

@@ -688,6 +688,43 @@ class LakeTable:
             if f.endswith(".parquet")
         )
 
+    def _write_buckets(
+        self,
+        df: DataFrame,
+        m: dict,
+        n_buckets: int,
+        buckets,
+        tag: str,
+        pre_partitioned: bool = False,
+    ) -> dict[int, list[str]]:
+        """THE bucketed file layout: write ``df`` (rows of ``buckets`` of
+        ``bucket_expr(key, n_buckets)`` only, ``key`` from manifest ``m``)
+        under a fresh data dir, one ``_bucket=<id>`` directory per bucket,
+        and return ``{bucket: files}``.
+
+        Whole buckets are placed on partitions first
+        (:func:`bucket_partitioned`, skipped when ``pre_partitioned`` says
+        the caller already did) so each bucket is one file — without it
+        every task writes a sliver of every bucket, tasks x buckets tiny
+        files.  The table's ``sort_cols`` sort within partitions only — no
+        extra shuffle; it tightens row-group stats so pushed predicates skip
+        within files."""
+        d = os.path.join(self.root, "data", f"{tag}-{uuid.uuid4().hex[:12]}")
+        tagged = df.withColumn("_bucket", bucket_expr(m["key"], n_buckets))
+        if not pre_partitioned:
+            tagged = bucket_partitioned(tagged, buckets)
+        if m.get("sort_cols"):
+            tagged = tagged.sortWithinPartitions("_bucket", *m["sort_cols"])
+        tagged.write.mode("overwrite").partitionBy("_bucket").parquet(d)
+        # one listdir of the dir instead of one per bucket: 128+ buckets =
+        # 128 serial listdir calls (~100ms of commit tail)
+        by_bucket: dict[int, list[str]] = {}
+        if os.path.isdir(d):
+            for sub in os.listdir(d):
+                if sub.startswith("_bucket="):
+                    by_bucket[int(sub.split("=", 1)[1])] = self._parquet_files(d, sub)
+        return by_bucket
+
     def _ensure_stats_friendly_writes(self, stats_cols: list[str]) -> None:
         """Stats tables need footer min/max on every recorded column:
         INT96 timestamps (Spark's legacy parquet encoding) carry none, so
@@ -747,7 +784,6 @@ class LakeTable:
         m = self.manifest()
         if parent_version is None:
             parent_version = m["version"]
-        key, nb = m["key"], m["n_buckets"]
         stats_cols = m.get("stats_cols") or []
         self._ensure_stats_friendly_writes(stats_cols)
 
@@ -757,28 +793,18 @@ class LakeTable:
             m["current_schema_id"] = sid
         sid = m["current_schema_id"]
 
-        # write new bucket data partitioned by bucket dir; place whole
-        # buckets on partitions first so each bucket is one file (without
-        # this every task writes a sliver of every bucket -> tasks x buckets
-        # tiny files).  The three independent writes (data, tombstones,
-        # lineage) are submitted as CONCURRENT Spark jobs — the scheduler
-        # interleaves their tasks, so the small appends ride along instead of
+        # The three independent writes (data, tombstones, lineage) are
+        # submitted as CONCURRENT Spark jobs — the scheduler interleaves
+        # their tasks, so the small appends ride along instead of
         # serializing after the big write (atomicity is unaffected: nothing
         # is visible until the single manifest flip below).
-        d = os.path.join(self.root, "data", f"c-{uuid.uuid4().hex[:12]}")
-
-        sort_cols = m.get("sort_cols") or []
+        by_bucket: dict[int, list[str]] = {}
 
         def _write_main() -> None:
             df = new_data() if callable(new_data) else new_data
-            tagged = df.withColumn("_bucket", bucket_expr(key, nb))
-            if not pre_partitioned:
-                tagged = bucket_partitioned(tagged, touched_buckets)
-            if sort_cols:
-                # in-partition sort only — no extra shuffle; tightens
-                # row-group stats so pushed predicates skip within files
-                tagged = tagged.sortWithinPartitions("_bucket", *sort_cols)
-            tagged.write.mode("overwrite").partitionBy("_bucket").parquet(d)
+            by_bucket.update(self._write_buckets(
+                df, m, m["n_buckets"], touched_buckets, "c", pre_partitioned=pre_partitioned
+            ))
 
         # one output file per append.  The tombstone audit ends in
         # repartition(1): its anti-join can be a shuffle join at scale, and
@@ -816,13 +842,6 @@ class LakeTable:
         else:
             jobs[0]()
 
-        # one listdir of the commit dir instead of one per bucket: 128+
-        # buckets = 128 serial listdir calls (~100ms of commit tail)
-        by_bucket: dict[int, list[str]] = {}
-        if os.path.isdir(d):
-            for sub in os.listdir(d):
-                if sub.startswith("_bucket="):
-                    by_bucket[int(sub.split("=", 1)[1])] = self._parquet_files(d, sub)
         for b in touched_buckets:
             files = by_bucket.get(b, [])
             m["buckets"][str(b)] = [self._data_entry(p, sid, stats_cols) for p in files]
@@ -871,20 +890,9 @@ class LakeTable:
             and int(epoch) <= int(m["committed_epochs"].get(epoch_source, -1))
         ):
             return m["version"]
-        key, nb = m["key"], m["n_buckets"]
+        nb = m["n_buckets"]
         self._ensure_stats_friendly_writes(m.get("stats_cols") or [])
-        d = os.path.join(self.root, "data", f"a-{uuid.uuid4().hex[:12]}")
-        tagged = bucket_partitioned(
-            new_data.withColumn("_bucket", bucket_expr(key, nb)), range(nb)
-        )
-        if m.get("sort_cols"):
-            tagged = tagged.sortWithinPartitions("_bucket", *m["sort_cols"])
-        tagged.write.mode("overwrite").partitionBy("_bucket").parquet(d)
-        by_bucket: dict[int, list[str]] = {}
-        if os.path.isdir(d):
-            for sub in os.listdir(d):
-                if sub.startswith("_bucket="):
-                    by_bucket[int(sub.split("=", 1)[1])] = self._parquet_files(d, sub)
+        by_bucket = self._write_buckets(new_data, m, nb, range(nb), "a")
         # stats are a property of the (immutable) files: compute once,
         # reuse across CAS retries
         stats_cols = m.get("stats_cols") or []
@@ -976,27 +984,16 @@ class LakeTable:
             m = self.manifest()
             parent = m["version"]
             data = self.read()
-            key = m["key"]
             sid = m["current_schema_id"]
             self._ensure_stats_friendly_writes(m.get("stats_cols") or [])
-            d = os.path.join(self.root, "data", f"r-{uuid.uuid4().hex[:12]}")
-            tagged = bucket_partitioned(
-                data.withColumn("_bucket", bucket_expr(key, new_n_buckets)),
-                range(new_n_buckets),
+            by_bucket = self._write_buckets(
+                data, m, new_n_buckets, range(new_n_buckets), "r"
             )
-            if m.get("sort_cols"):
-                tagged = tagged.sortWithinPartitions("_bucket", *m["sort_cols"])
-            tagged.write.mode("overwrite").partitionBy("_bucket").parquet(d)
             stats_cols = m.get("stats_cols") or []
-            buckets: dict[str, list[dict]] = {}
-            if os.path.isdir(d):
-                for sub in os.listdir(d):
-                    if sub.startswith("_bucket="):
-                        buckets[sub.split("=", 1)[1]] = [
-                            self._data_entry(p, sid, stats_cols)
-                            for p in self._parquet_files(d, sub)
-                        ]
-            m["buckets"] = buckets
+            m["buckets"] = {
+                str(b): [self._data_entry(p, sid, stats_cols) for p in files]
+                for b, files in by_bucket.items()
+            }
             m["n_buckets"] = int(new_n_buckets)
             m["version"] = parent + 1
             try:

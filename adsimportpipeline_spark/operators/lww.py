@@ -31,6 +31,14 @@ from pyspark.sql import functions as F
 #: LWW ordering: event time first, log offset as the tie-break
 DEFAULT_ORDER = ("warc_ts", "log_offset")
 
+#: Row cap on a broadcast LWW join side (:func:`bounded_broadcast`), a proxy
+#: for bytes: a (key, order-struct) row is ~50-100 B, so 4M rows keep the
+#: replicated table in the low hundreds of MB — inside a default-sized
+#: executor and of the same order as a generous
+#: ``spark.sql.autoBroadcastJoinThreshold``.  Raise it only with the
+#: executor memory to match.
+BROADCAST_MAX_KEYS = 4_000_000
+
 
 def _is_simple_scan(df: DataFrame) -> bool:
     """True iff ``df``'s analyzed plan is ONE file-relation leaf with only
@@ -165,12 +173,12 @@ def lww_dedup_salted(
 def bounded_broadcast(
     small: DataFrame,
     bound: int | None,
-    max_rows: int = 4_000_000,
     cleanup: list | None = None,
 ) -> DataFrame:
     """THE broadcast rule for the small side of an LWW join: hint a
     broadcast iff an upper bound on its row count fits the budget
-    (:func:`_offset_broadcast_cap_rows`), else a shuffled hash join.
+    (:func:`_offset_broadcast_cap_rows` of :data:`BROADCAST_MAX_KEYS`),
+    else a shuffled hash join.
 
     ``bound`` is the cheapest bound the caller has — the batch row count the
     apply path's touched-bucket job returns, or parquet footer arithmetic.
@@ -187,7 +195,7 @@ def bounded_broadcast(
     payload shuffle gets WRITTEN even when the runtime stats would have
     chosen broadcast (measured: an avoidable 1.3 GB write + read per
     8M-event batch)."""
-    cap = _offset_broadcast_cap_rows(small.sparkSession, max_rows)
+    cap = _offset_broadcast_cap_rows(small.sparkSession, BROADCAST_MAX_KEYS)
     if cap > 0 and (bound is None or bound > cap):
         from pyspark.storagelevel import StorageLevel
 
@@ -207,7 +215,6 @@ def lww_winner_rows(
     key: str = "url",
     order_cols: tuple[str, ...] = DEFAULT_ORDER,
     broadcast_keys: bool | int | None = None,
-    broadcast_max_keys: int = 4_000_000,
     cleanup: list | None = None,
     unique_order_col: str | None = None,
 ) -> DataFrame:
@@ -233,13 +240,6 @@ def lww_winner_rows(
     driver OOM.  In ``foreachBatch`` the batch is a ``LogicalRDD``, so the
     footer bound never applies there and the caller's bound is what keeps
     the measuring job off the per-batch path.
-
-    ``broadcast_max_keys`` gates on row count as a proxy for bytes: a
-    (key, order-struct) row is ~50-100 B, so the 4M default keeps the
-    replicated table in the low hundreds of MB — inside a default-sized
-    executor and of the same order as a generous
-    ``spark.sql.autoBroadcastJoinThreshold``.  Raise it only with the
-    executor memory to match.
     """
     order_struct = _order_struct(order_cols)
     if unique_order_col is not None:
@@ -277,7 +277,7 @@ def lww_winner_rows(
         bound = broadcast_keys
         if bound is None and unique_order_col is not None:
             bound = _metadata_row_upper_bound(df)
-        keys = bounded_broadcast(keys, bound, broadcast_max_keys, cleanup)
+        keys = bounded_broadcast(keys, bound, cleanup)
     if unique_order_col is not None:
         return df.join(keys, unique_order_col)
     return df.join(keys, key).filter(order_struct == F.col("_w")).drop("_w")
@@ -288,7 +288,6 @@ def lww_dedup_semi(
     key: str = "url",
     order_cols: tuple[str, ...] = DEFAULT_ORDER,
     broadcast_keys: bool | None = None,
-    broadcast_max_keys: int = 4_000_000,
     cleanup: list | None = None,
     unique_order_col: str | None = None,
 ) -> DataFrame:
@@ -306,7 +305,6 @@ def lww_dedup_semi(
         key=key,
         order_cols=order_cols,
         broadcast_keys=broadcast_keys,
-        broadcast_max_keys=broadcast_max_keys,
         cleanup=cleanup,
         unique_order_col=unique_order_col,
     )

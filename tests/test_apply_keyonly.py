@@ -10,7 +10,6 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from adsimportpipeline_spark.apply import apply_batch
 from adsimportpipeline_spark.datagen import GenSpec, generate_change_log, replay_oracle
@@ -115,43 +114,23 @@ def test_delete_only_batch_empties_its_bucket(spark, tmp_path):
     assert table.manifest()["buckets"]["0"] == []
 
 
-def test_salted_and_decision_col_match_plain_path(spark, tmp_path):
-    """The three ways into the LWW merge give one table: the plain path,
-    ``salted=True`` (two-phase argmax), and ``decision_col`` (pre-resolved
-    rows outrank stored ones, no tombstones) fed by decisions a state store
-    would make."""
+def test_salted_matches_plain_path(spark, tmp_path):
+    """Both ways into the LWW merge give one table: the plain path and
+    ``salted=True`` (two-phase argmax)."""
     spec = GenSpec(n_events=1500, n_urls=100, seed=5)
     events = [r.asDict() for r in generate_change_log(spark, spec).collect()]
     batches = [[e for e in events if lo <= e["log_offset"] < lo + 500]
                for lo in (0, 500, 1000)]
 
-    decided_schema = T.StructType(
-        CHANGE_EVENT_SCHEMA.fields + [T.StructField("decision", T.StringType())]
-    )
-    seen: dict[str, tuple] = {}
     tables = {}
-    for mode in ("plain", "salted", "decision"):
+    for mode in ("plain", "salted"):
         table = LakeTable.create(spark, str(tmp_path / mode), PAGES_SCHEMA, n_buckets=8)
         for i, rows in enumerate(batches):
-            if mode == "decision":
-                # apply iff strictly newer than everything an EARLIER batch
-                # delivered for the url (deletes included)
-                decided = [dict(e, decision="apply" if e["url"] not in seen
-                                or (e["warc_ts"], e["log_offset"]) > seen[e["url"]]
-                                else "stale")
-                           for e in rows]
-                for e in rows:
-                    k = (e["warc_ts"], e["log_offset"])
-                    seen[e["url"]] = max(seen.get(e["url"], k), k)
-                df = spark.createDataFrame(decided, decided_schema)
-                apply_batch(table, df, i, decision_col="decision")
-            else:
-                df = spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA)
-                apply_batch(table, df, i, salted=(mode == "salted"))
+            df = spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA)
+            apply_batch(table, df, i, salted=(mode == "salted"))
         tables[mode] = table
     _assert_matches_oracle(tables["plain"], events)
     assert _rows(tables["salted"]) == _rows(tables["plain"])
-    assert _rows(tables["decision"]) == _rows(tables["plain"])
 
 
 #: Spark jobs one warm apply_batch of a small batch into a populated table

@@ -93,108 +93,3 @@ def test_stateful_first_event_pre_epoch_is_applied(spark, tmp_path):
     assert got[("u-pre", 1)] == "apply"   # pre-epoch first sight
     assert got[("u-pre", 2)] == "apply"   # strictly newer
     assert got[("u-norm", 3)] == "apply"
-
-
-def test_stateful_replay_kill_and_resume(spark, tmp_path):
-    """The FULL state-store replay mode (run_replay_stateful): in-stream LWW
-    decisions drive the sink with no stale/guard table joins; an injected
-    crash mid-replay, then resume from the same checkpoint — the state store
-    rolls back to the failed batch's version, decisions replay identically,
-    committed epochs no-op, and the final table equals the oracle."""
-    import pytest
-
-    from adsimportpipeline_spark.apply import apply_batch
-    from adsimportpipeline_spark.datagen import replay_oracle
-    from adsimportpipeline_spark.lake.table import LakeTable
-    from adsimportpipeline_spark.schema import PAGES_SCHEMA, TOMBSTONE_SCHEMA
-    from adsimportpipeline_spark.streaming.runner import run_replay_stateful
-
-    spec = GenSpec(n_events=6000, n_urls=300, seed=11)
-    log = str(tmp_path / "slog")
-    root = str(tmp_path / "stbl")
-    ckpt = str(tmp_path / "sckpt")
-    write_change_log(spark, log, spec, n_files=8)
-    table = LakeTable.create(spark, root, PAGES_SCHEMA, n_buckets=16)
-
-    # crash injection: run the stateful pipeline manually, die on batch 2
-    from pyspark.sql import functions as F
-
-    from adsimportpipeline_spark.streaming.stateful import stateful_lww_decisions
-
-    hits: list = []
-
-    def _apply_once(batch_df, batch_id):
-        if len(hits) >= 2:
-            raise RuntimeError("injected crash")
-        hits.append(batch_id)
-        pruned = batch_df.filter(
-            (F.col("decision") == "apply") | (F.col("op") == "delete")
-        )
-        apply_batch(table, pruned, batch_id, decision_col="decision")
-
-    decided = stateful_lww_decisions(
-        stream_change_log(spark, log, 2), passthrough_payload=True
-    )
-    q = (
-        decided.writeStream.foreachBatch(_apply_once)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    with pytest.raises(Exception):
-        q.awaitTermination()
-    assert len(hits) == 2  # crashed mid-replay with real progress committed
-
-    # resume from the same checkpoint: the in-flight batch replays against
-    # the rolled-back state version, later batches complete the backlog
-    run_replay_stateful(spark, log, root, ckpt, max_files_per_trigger=2)
-
-    events = [r.asDict() for r in generate_change_log(spark, spec).collect()]
-    pages, tombs = replay_oracle(events)
-    got = {r["url"]: r.asDict() for r in table.read().collect()}
-    assert len(got) == len(pages)
-    for url, exp in pages.items():
-        assert got[url]["text"] == exp["text"]
-        assert got[url]["log_offset"] == exp["log_offset"]
-        assert got[url]["warc_ts"] == exp["warc_ts"]
-    got_tombs = sorted(
-        (r["url"], r["deleted_ts"], r["log_offset"])
-        for r in table.read_tombstones(TOMBSTONE_SCHEMA).collect()
-    )
-    assert got_tombs == tombs
-
-
-def test_stateful_replay_maintains_lsh_index(spark, tmp_path):
-    """Stateful replay with lsh_index_root: the in-stream LWW path maintains
-    the same band index as the default path — valid pairs equal a full batch
-    recompute over the final table."""
-    from adsimportpipeline_spark.lake.table import LakeTable
-    from adsimportpipeline_spark.operators import dedup
-    from adsimportpipeline_spark.operators.incremental_dedup import lsh_index_pairs
-    from adsimportpipeline_spark.schema import PAGES_SCHEMA
-    from adsimportpipeline_spark.streaming.runner import run_replay_stateful
-
-    spec = GenSpec(n_events=3000, n_urls=150, seed=23)
-    log = str(tmp_path / "log")
-    write_change_log(spark, log, spec, n_files=5)
-    table = LakeTable.create(spark, str(tmp_path / "pages"), PAGES_SCHEMA, n_buckets=8)
-    run_replay_stateful(
-        spark, log, table.root, str(tmp_path / "ckpt"),
-        max_files_per_trigger=2, lsh_index_root=str(tmp_path / "lsh"),
-    )
-    index = LakeTable.load(spark, str(tmp_path / "lsh"))
-    final = table.read()
-    incremental = {
-        tuple(r)
-        for r in lsh_index_pairs(
-            index, final.select("url", "warc_ts", "log_offset")
-        ).collect()
-    }
-    sigs = dedup.minhash_signatures(
-        dedup.word_shingles(final, id_col="url"), id_col="url"
-    )
-    batch = {
-        tuple(r) for r in dedup.lsh_candidate_pairs(sigs, id_col="url").collect()
-    }
-    assert incremental == batch
-    assert incremental
