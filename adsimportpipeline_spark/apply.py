@@ -6,11 +6,14 @@ This is the Spark rebuild of the reference's task chain
 update_storage`` (tasks.py:34-119, app.py:24-74) collapsed into one
 DataFrame plan executed per micro-batch inside ``foreachBatch``:
 
-1. **Touched buckets + row count** in one narrow job
-   (``groupBy(bucket).count()``): only the table buckets holding the
-   batch's urls are read and rewritten (the semantic twin of the
-   reference's changed-record short-circuit, tasks.py:52-64); the row
-   count sizes the bulk path's winner join without a measuring job.
+1. **One discovery query** (``groupBy(bucket)``, collected through
+   ``toArrow()``, which keeps the UTC timestamps): per touched bucket the
+   event count, ``min``/``max(log_offset)`` and the bucket's distinct delete
+   events (``collect_set``).  Only the table buckets holding the batch's
+   urls are read and rewritten (the semantic twin of the reference's
+   changed-record short-circuit, tasks.py:52-64); the row count sizes the
+   bulk path's winner join without a measuring job; the deletes and counts
+   become the tombstone audit and the lineage, written by the driver.
 2. **HTML->text** in one ``mapInArrow`` pass right after the batch scan,
    for every batch upsert, losers included (O(batch)); stored rows never
    enter Python.
@@ -24,10 +27,19 @@ DataFrame plan executed per micro-batch inside ``foreachBatch``:
    app.py:34-39) and the latest tombstone (no resurrection by stale events,
    app.py:54-67); exact duplicate deliveries share an offset, hence a
    payload, and collapse in the same aggregate.
-4. **Atomic commit** of the winners that are not deletes (each bucket is
-   whole in one partition: one file per bucket, no second exchange) +
-   tombstone audit appends + lineage + the commit epoch, in one manifest
-   flip (exactly-once under foreachBatch replays).
+4. **Atomic commit**: the data write (each bucket whole in one partition:
+   one file per bucket, no second exchange) is the only other Spark query.
+   After it the driver writes, with pyarrow, the batch's delete events to
+   the tombstone audit and one lineage row per touched bucket carrying the
+   merge latency measured there; one manifest flip attaches the data,
+   tombstone and lineage files and records the commit epoch (exactly-once
+   under foreachBatch replays).  The audit is append-only: a delete
+   re-delivered in a later batch is stored again, and
+   :meth:`.LakeTable.read_tombstones` and ``compact_appends`` drop the
+   duplicate (the merge reads the raw files: duplicates collapse in its
+   ``max_by``).  A batch with too many deletes to collect
+   (``MAX_COLLECTED_DELETES``) appends them with one narrow Spark write
+   instead.
 
 A fresh table (no stored rows, no tombstones) takes the fused bulk path:
 the batch's own LWW winners, placed by bucket, go through one duplicate
@@ -51,6 +63,17 @@ hashed its 8 bucket ids into 4 × cores = 16 partitions: 9 of the 16
 Python tasks were empty and two buckets collided in one partition, so the
 extract+write stage ran four waves where one suffices.  Whole buckets now
 land on ``min(buckets, cores)`` partitions by id (``bucket_partitioned``).
+The tombstone audit once ran as a Spark write of its own, with a left-anti
+join against every stored tombstone to keep the audit a distinct set, and
+lineage as another; with the collect that made four queries and 10 jobs per
+``incr_upsert`` batch, where the collect and the data write now run 4.  On
+4 vCPUs a Spark query costs ~50 ms as a collect and ~100 ms as a parquet
+write.  So an ``Observation``-carrying tombstone write in place of the
+collect (lineage from its metrics) gave only -10 to -13 % batch wall: the
+write query costs about twice the collect it replaces.  Also measured
+for this design: ``repartition(min(touched, cores), "_bucket")`` for a
+more parallel merge write gave no gain, and
+``spark.sql.adaptive.enabled=false`` made the apply slower.
 
 That fixed cost was once ~250 ms per Python task.  Most of it was not Arrow
 transfer or extraction but the worker's per-task set-up: PySpark's
@@ -67,9 +90,12 @@ import time
 from collections.abc import Iterator
 from datetime import datetime, timezone
 
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.storagelevel import StorageLevel
 
 from .evolve import align_to_schema, reconcile_schema
@@ -87,6 +113,14 @@ from .schema import LINEAGE_SCHEMA, OP_DELETE, TOMBSTONE_SCHEMA
 #: per batch each would otherwise grow the per-batch tombstone reads and the
 #: manifest with the table's lifetime; the fold keeps both O(1).
 COMPACT_APPENDS_EVERY = 32
+
+#: Bound on the delete events the touched-bucket collect brings to the
+#: driver (a url and two 8-byte fields each): each bucket returns its
+#: distinct deletes only while it has at most ``MAX_COLLECTED_DELETES //
+#: n_buckets`` delete events.  A batch with any bucket over that share
+#: appends its audit with one narrow Spark write instead
+#: (:func:`_tombstone_rows`).
+MAX_COLLECTED_DELETES = 100_000
 
 
 def _text_after_html_fields(
@@ -160,6 +194,54 @@ def _arrow_text(df: DataFrame, key: str, collapse: bool) -> DataFrame:
     return df.mapInArrow(_text_arrow, T.StructType(out_fields))
 
 
+def _touched_summary(batch_df: DataFrame, key: str, n_buckets: int) -> pa.Table:
+    """THE discovery query: a pyarrow Table with one row per touched bucket
+    ``b``: event count ``n``, ``lo``/``hi`` log offsets and ``dels``, the
+    bucket's distinct delete events as (url, deleted_ts, log_offset)
+    structs, null when the bucket holds more than its share of
+    ``MAX_COLLECTED_DELETES``.  ``toArrow()``, not ``collect()``: the
+    timestamps stay UTC instead of turning into local-time datetimes."""
+    cap = MAX_COLLECTED_DELETES // n_buckets
+    is_del = f"op = '{OP_DELETE}'"
+    dels = (f"collect_set(CASE WHEN {is_del} THEN named_struct('url', `{key}`, "
+            "'deleted_ts', warc_ts, 'log_offset', log_offset) END)")
+    aggs = ["count(1) AS n", "min(log_offset) AS lo", "max(log_offset) AS hi",
+            f"CASE WHEN count_if({is_del}) <= {cap} THEN {dels} END AS dels"]
+    return (batch_df.groupBy(bucket_expr(key, n_buckets).alias("b"))
+            .agg(*[F.expr(a) for a in aggs]).toArrow())
+
+
+def _tombstone_rows(batch_df: DataFrame, key: str) -> DataFrame:
+    """The batch's delete events as TOMBSTONE_SCHEMA rows, for the Spark
+    write of a batch whose deletes were not collected.  Narrow: no distinct
+    and no anti-join against stored tombstones; the audit's readers drop
+    duplicates."""
+    return batch_df.filter(F.col("op") == OP_DELETE).selectExpr(
+        f"`{key}` AS url", "warc_ts AS deleted_ts", "'deleted' AS key", "log_offset")
+
+
+def _arrow_tombstones(summary) -> pa.Table:
+    """The collected deletes as a TOMBSTONE_SCHEMA table."""
+    rows = pc.list_flatten(summary.column("dels")).combine_chunks()
+    return pa.Table.from_arrays(
+        [rows.field("url"), rows.field("deleted_ts"),
+         pa.array(["deleted"] * len(rows), pa.string()), rows.field("log_offset")],
+        schema=to_arrow_schema(TOMBSTONE_SCHEMA),
+    )
+
+
+def _arrow_lineage(summary, batch_id: int, latency_ms: float) -> pa.Table:
+    """One LINEAGE_SCHEMA row per touched bucket: its offset range and the
+    events it received."""
+    k = summary.num_rows
+    return pa.Table.from_arrays(
+        [pa.array([batch_id] * k, pa.int64()), summary.column("b"),
+         summary.column("lo"), summary.column("hi"), summary.column("n"),
+         pa.array([latency_ms] * k, pa.float64()), pa.array([batch_id] * k, pa.int64())],
+        schema=to_arrow_schema(LINEAGE_SCHEMA),
+    )
+
+
 def _bulk_upserts(
     batch_df: DataFrame,
     key: str,
@@ -198,6 +280,10 @@ def apply_batch(
     """Apply one micro-batch of change events. Returns stats. Idempotent:
     re-delivery of an already-committed batch_id is a no-op.
 
+    ``prune_buckets`` has no effect: the touched-bucket discovery always
+    runs, because the tombstone audit and lineage come from it.  The
+    parameter stays for callers that still pass it.
+
     ``salted=True`` splits the merge's argmax in two phases
     (:func:`lww_dedup_salted`) for hot urls; the write then places buckets
     with its own exchange.
@@ -222,24 +308,20 @@ def apply_batch(
 
     m = table.manifest()
     key, nb = m["key"], m["n_buckets"]
-    # batch_df is deliberately NOT cached: its passes (touched discovery,
-    # lineage stats, tombstone audit) each prune to a few columns, so
-    # columnar re-reads from the source beat materializing full rows on heap
+    # batch_df is deliberately NOT cached: its two passes (the discovery
+    # query and the merge) prune to different columns, so columnar
+    # re-reads from the source beat materializing full rows on heap
     _caches: list = []
     try:
         _mark("manifest_read")  # time since t0: the manifest open above
 
-        # 1. bucket pruning: which table buckets does this batch touch, and
-        #    how many rows does it have (an upper bound on its winners, which
-        #    sizes the bulk path's winner join without a measuring job)?  A
-        #    narrow url-column scan of the batch.  A bulk replay touches
-        #    every bucket anyway — prune_buckets=False skips the job.
-        if prune_buckets:
-            counts = batch_df.groupBy(bucket_expr(key, nb).alias("b")).count().collect()
-            touched = [r[0] for r in counts]
-            n_rows = sum(r[1] for r in counts)
-        else:
-            touched, n_rows = list(range(nb)), None
+        # 1. discovery: which table buckets does this batch touch, how many
+        #    rows does it have (an upper bound on its winners, which sizes
+        #    the bulk path's winner join without a measuring job), and its
+        #    tombstone audit and lineage, from one narrow scan of the batch
+        summary = _touched_summary(batch_df, key, nb)
+        touched = summary.column("b").to_pylist()
+        n_rows = sum(summary.column("n").to_pylist())
         # manifest-level emptiness: a fresh table / bulk first replay has no
         # stored rows and no tombstones, so nothing can beat a batch winner.
         has_current = any(m["buckets"].get(str(b)) for b in touched)
@@ -252,16 +334,11 @@ def apply_batch(
             # FUSED bulk path: winner rows go through one exchange that
             # places whole touched buckets on partitions, with the duplicate
             # collapse and text extraction fused into a single Arrow pass
-            # that the write consumes in place.  Passed as a thunk: any
-            # measuring job inside it then runs in overwrite_buckets' pool
-            # thread, overlapping the tombstone/lineage append jobs.
-            def new_data() -> DataFrame:
-                df = _bulk_upserts(batch_df, key, nb, evolved, _caches, n_rows, touched)
-                if keep_applied is not None:
-                    df = df.persist(StorageLevel.MEMORY_AND_DISK)
-                    keep_applied.append(df)
-                return df
-
+            # that the write consumes in place.
+            new_data = _bulk_upserts(batch_df, key, nb, evolved, _caches, n_rows, touched)
+            if keep_applied is not None:
+                new_data = new_data.persist(StorageLevel.MEMORY_AND_DISK)
+                keep_applied.append(new_data)
             pre_partitioned = True
         else:
             # 2-3. ONE bucket-keyed merge: batch rows (src 0, text extracted
@@ -281,8 +358,10 @@ def apply_batch(
                     allowMissingColumns=True,
                 )
             if has_tombs:
-                tombs = table.read_tombstones(TOMBSTONE_SCHEMA)
-                if prune_buckets and len(touched) < nb:
+                # the raw audit files: a re-delivered delete stored twice
+                # collapses in the max_by below like any duplicate
+                tombs = table.read_tombstones(TOMBSTONE_SCHEMA, distinct=False)
+                if len(touched) < nb:
                     tombs = tombs.filter(bucket_expr("url", nb).isin(touched))
                 tombs = tombs.selectExpr(f"url AS `{key}`", "deleted_ts AS warc_ts", "log_offset",
                                          f"'{OP_DELETE}' AS op", "1 AS _src")
@@ -305,61 +384,27 @@ def apply_batch(
                 _caches.append(merged)
             new_data = align_to_schema(merged, evolved)
 
-        # 4. tombstone audit: every delete event in the batch (reference
-        #    app.py:15-21 appends every delete to change_log).  Anti-join
-        #    against already-stored tombstones so a duplicate delivery that
-        #    lands in a *different* micro-batch than its original does not
-        #    append a second (url, ts, offset) row — the audit log stays a
-        #    distinct set, matching replay_oracle's semantics exactly.
-        #    Passed as a THUNK: its driver-side plan construction runs in
-        #    overwrite_buckets' pool thread, overlapped with the main write.
-        def _tomb_appends() -> DataFrame:
-            t = (
-                batch_df.filter(F.col("op") == OP_DELETE)
-                .select(
-                    F.col(key).alias("url"),
-                    F.col("warc_ts").alias("deleted_ts"),
-                    F.lit("deleted").alias("key"),
-                    F.col("log_offset"),
-                )
-                .distinct()
-            )
-            if has_tombs:
-                t = t.join(
-                    table.read_tombstones(TOMBSTONE_SCHEMA).select(
-                        "url", "deleted_ts", "log_offset"
-                    ),
-                    ["url", "deleted_ts", "log_offset"],
-                    "left_anti",
-                )
-            return t
+        # 4. the append-only branches, written once the data write is done
+        #    (so the lineage carries the true merge latency) and attached in
+        #    the same manifest flip.  Every delete event of the batch goes to
+        #    the audit (reference app.py:15-21 appends every delete to
+        #    change_log); it stays a distinct set to its readers.
+        latency_ms = 0.0
 
-        # lineage: per-source-partition offset range + row counts
-        # (north_rule).  A pure transformation — no driver collect; plan
-        # built in the pool thread, write runs as a concurrent Spark job
-        # alongside the data write inside overwrite_buckets.  The reported
-        # merge latency is captured HERE (plan time), not at thunk call.
-        latency_ms = (time.time() - t0) * 1000.0
-
-        def _lineage_df() -> DataFrame:
-            ldf = (
-                batch_df.groupBy(F.spark_partition_id().alias("partition_id"))
-                .agg(
-                    F.min("log_offset").alias("offset_start"),
-                    F.max("log_offset").alias("offset_end"),
-                    F.count(F.lit(1)).alias("rows_applied"),
-                )
-                .select(
-                    F.lit(int(batch_id)).alias("batch_id"),
-                    "partition_id",
-                    "offset_start",
-                    "offset_end",
-                    "rows_applied",
-                    F.lit(float(latency_ms)).alias("merge_latency_ms"),
-                    F.lit(int(batch_id)).alias("commit_epoch"),
-                )
-            )
-            return align_to_schema(ldf, LINEAGE_SCHEMA)
+        def _appends() -> dict[str, list[str]]:
+            nonlocal latency_ms
+            latency_ms = (time.time() - t0) * 1000.0
+            out = {"lineage_files": [], "tombstone_files": []}
+            if summary.num_rows:
+                out["lineage_files"] = table.write_append(
+                    _arrow_lineage(summary, batch_id, latency_ms), "lin")
+            if summary.column("dels").null_count:
+                out["tombstone_files"] = table.write_append(_tombstone_rows(batch_df, key), "tomb")
+            else:
+                tombs = _arrow_tombstones(summary)
+                if tombs.num_rows:
+                    out["tombstone_files"] = table.write_append(tombs, "tomb")
+            return out
 
         _mark("plan_build")
         version = table.overwrite_buckets(
@@ -368,8 +413,7 @@ def apply_batch(
             epoch_source=epoch_source,
             epoch=batch_id,
             new_schema=evolved,
-            tombstone_appends=_tomb_appends,
-            lineage_appends=_lineage_df,
+            appends=_appends,
             pre_partitioned=pre_partitioned,
             # revalidation parent = the snapshot THIS batch's plan read at
             # its top (bucket pruning, has_current, epochs all came from it)

@@ -653,12 +653,18 @@ class LakeTable:
             df = df.filter(F.col(col) <= F.lit(hi).cast(dt))
         return df
 
-    def read_tombstones(self, tomb_schema: T.StructType) -> DataFrame:
+    def read_tombstones(self, tomb_schema: T.StructType, distinct: bool = True) -> DataFrame:
+        """The delete audit as a distinct set.  Appends never check what is
+        stored, so a delete delivered in two batches is in two files; reads
+        drop the duplicate (as Iceberg readers apply delete files).
+        ``distinct=False`` gives the raw rows, for a consumer whose own
+        aggregate collapses duplicates anyway."""
         m = self.manifest()
         paths = [e["path"] for e in m["tombstone_files"]]
         if not paths:
             return self.spark.createDataFrame([], tomb_schema)
-        return self.spark.read.schema(tomb_schema).parquet(*paths)
+        df = self.spark.read.schema(tomb_schema).parquet(*paths)
+        return df.distinct() if distinct else df
 
     def read_lineage(self, lineage_schema: T.StructType) -> DataFrame:
         m = self.manifest()
@@ -672,10 +678,22 @@ class LakeTable:
         return int(self.manifest()["committed_epochs"].get(source, -1))
 
     # -------------------------------------------------------------- writes
-    def _write_data_dir(self, df: DataFrame, tag: str) -> str:
+    def write_append(self, rows, tag: str) -> list[str]:
+        """Write ``rows`` for an append-only branch (tombstones, lineage)
+        under a fresh data dir and return its parquet files, for
+        :meth:`overwrite_buckets`' ``appends``.  A pyarrow Table is written
+        by the driver as one file, with no Spark job; a DataFrame by one
+        Spark write."""
         d = os.path.join(self.root, "data", f"{tag}-{uuid.uuid4().hex[:12]}")
-        df.write.mode("overwrite").parquet(d)
-        return d
+        if isinstance(rows, DataFrame):
+            rows.write.mode("overwrite").parquet(d)
+            return self._parquet_files(d)
+        import pyarrow.parquet as pq
+
+        os.makedirs(d)
+        path = os.path.join(d, "part-00000.parquet")
+        pq.write_table(rows, path)
+        return [path]
 
     @staticmethod
     def _parquet_files(d: str, subdir: str | None = None) -> list[str]:
@@ -746,20 +764,19 @@ class LakeTable:
 
     def overwrite_buckets(
         self,
-        new_data,
+        new_data: DataFrame,
         touched_buckets: list[int],
         epoch_source: str | None = None,
         epoch: int | None = None,
         new_schema: T.StructType | None = None,
-        tombstone_appends=None,
-        lineage_appends=None,
+        appends=None,
         pre_partitioned: bool = False,
         parent_version: int | None = None,
     ) -> int:
         """Copy-on-write commit: replace the file groups of ``touched_buckets``
         with ``new_data`` (which must contain only rows of those buckets),
-        carry everything else forward, append tombstones/lineage, record the
-        commit epoch — all in one atomic manifest flip.
+        carry everything else forward, attach appended tombstone/lineage
+        files, record the commit epoch — all in one atomic manifest flip.
 
         ``pre_partitioned=True`` asserts the caller already put each bucket
         of ``bucket_expr(key, n_buckets)`` whole in one partition (the fused
@@ -767,13 +784,12 @@ class LakeTable:
         exchange on the bucket); the write then skips its own exchange — no
         second payload shuffle.
 
-        ``new_data`` may be a CALLABLE returning the DataFrame: plan
-        construction then happens inside the main write's pool thread, so
-        any eager work it does (the LWW winner-offset collect is a full
-        narrow scan of the batch) runs CONCURRENTLY with the tombstone and
-        lineage append jobs instead of serializing before them — on an
-        otherwise idle 4-core leg those small jobs fill the scan's wave
-        gaps for free.
+        ``appends``, when given, is called once the data files are written
+        and before the flip; it returns ``{"tombstone_files": [...],
+        "lineage_files": [...]}``, files it has already written (e.g. by
+        :meth:`write_append`), which the flip attaches to those branches.
+        Called after the write, it can record what the write cost.  The
+        data write is the only Spark job here.
 
         ``parent_version`` names the snapshot this commit's plan was built
         against (a caller that read the manifest earlier passes it down);
@@ -793,66 +809,14 @@ class LakeTable:
             m["current_schema_id"] = sid
         sid = m["current_schema_id"]
 
-        # The three independent writes (data, tombstones, lineage) are
-        # submitted as CONCURRENT Spark jobs — the scheduler interleaves
-        # their tasks, so the small appends ride along instead of
-        # serializing after the big write (atomicity is unaffected: nothing
-        # is visible until the single manifest flip below).
-        by_bucket: dict[int, list[str]] = {}
-
-        def _write_main() -> None:
-            df = new_data() if callable(new_data) else new_data
-            by_bucket.update(self._write_buckets(
-                df, m, m["n_buckets"], touched_buckets, "c", pre_partitioned=pre_partitioned
-            ))
-
-        # one output file per append.  The tombstone audit ends in
-        # repartition(1): its anti-join can be a shuffle join at scale, and
-        # coalesce(1) would collapse that join into a single task.  Lineage
-        # ends in coalesce(1): its upstream is an aggregate over at most
-        # (batch partitions) rows whose own exchange keeps the scan
-        # parallel, so a second exchange would only cost a job.
-        jobs = [_write_main]
-        results: dict[str, str] = {}
-        if tombstone_appends is not None:
-            # appends may be CALLABLES like new_data: their (driver-side)
-            # plan construction then runs in the pool thread, overlapped
-            # with the main write instead of serializing before it
-            jobs.append(lambda: results.__setitem__(
-                "tomb",
-                self._write_data_dir(
-                    (tombstone_appends() if callable(tombstone_appends)
-                     else tombstone_appends).repartition(1),
-                    "tomb",
-                )))
-        if lineage_appends is not None:
-            jobs.append(lambda: results.__setitem__(
-                "lin",
-                self._write_data_dir(
-                    (lineage_appends() if callable(lineage_appends)
-                     else lineage_appends).coalesce(1),
-                    "lin",
-                )))
-        if len(jobs) > 1:
-            from concurrent.futures import ThreadPoolExecutor
-
-            with ThreadPoolExecutor(max_workers=len(jobs)) as pool:
-                for fut in [pool.submit(j) for j in jobs]:
-                    fut.result()
-        else:
-            jobs[0]()
-
+        by_bucket = self._write_buckets(
+            new_data, m, m["n_buckets"], touched_buckets, "c", pre_partitioned=pre_partitioned
+        )
         for b in touched_buckets:
             files = by_bucket.get(b, [])
             m["buckets"][str(b)] = [self._data_entry(p, sid, stats_cols) for p in files]
-        if "tomb" in results:
-            m["tombstone_files"] += [
-                {"path": p, "schema_id": sid} for p in self._parquet_files(results["tomb"])
-            ]
-        if "lin" in results:
-            m["lineage_files"] += [
-                {"path": p, "schema_id": sid} for p in self._parquet_files(results["lin"])
-            ]
+        for branch, paths in (appends() if appends is not None else {}).items():
+            m[branch] += [{"path": p, "schema_id": sid} for p in paths]
 
         if epoch_source is not None and epoch is not None:
             m["committed_epochs"][epoch_source] = int(epoch)
@@ -1009,8 +973,10 @@ class LakeTable:
         rewrite_manifests + position-delete compaction analog).  Without
         this, N micro-batches mean N tombstone files re-read by EVERY
         subsequent batch's resurrection guard and an O(N) manifest; with
-        periodic folding both stay O(1).  Contents are preserved exactly
-        (the audit log is a distinct set; folding does not dedup rows).
+        periodic folding both stay O(1).  The tombstones fold to a distinct
+        set: a delete delivered in two batches was appended twice, and
+        :meth:`read_tombstones` gives the same set before and after the
+        fold.  Lineage rows are kept as they are.
 
         ``retries`` follows :meth:`compact`'s contract: pass 1 from a
         scheduled maintenance job to absorb one lost CAS against a live
@@ -1022,11 +988,12 @@ class LakeTable:
                 paths = [e["path"] for e in m[branch]]
                 if len(paths) <= 1:
                     continue
-                df = self.spark.read.parquet(*paths).repartition(1)
-                d = self._write_data_dir(df, f"{tag}c")
+                df = self.spark.read.parquet(*paths)
+                if branch == "tombstone_files":
+                    df = df.distinct()
                 m[branch] = [
                     {"path": p, "schema_id": m["current_schema_id"]}
-                    for p in self._parquet_files(d)
+                    for p in self.write_append(df.repartition(1), f"{tag}c")
                 ]
             m["version"] = m["version"] + 1
             try:

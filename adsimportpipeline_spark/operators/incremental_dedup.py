@@ -39,8 +39,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..apply import COMPACT_APPENDS_EVERY
 from ..functions.html import html_to_text
-from ..lake.table import LakeTable, bucket_expr
+from ..lake.table import CommitConflictError, LakeTable, bucket_expr
 from ..schema import OP_DELETE
 from .dedup import _banded_buckets, minhash_signatures, word_shingles
 from .lww import lww_dedup_semi
@@ -170,9 +171,11 @@ def update_lsh_index(
     Scale shape: everything is ∝ batch — the only index I/O is the
     bucket-pruned read of the lake buckets the batch's band hashes touch
     plus the O(batch) fast-append; the pages validity join sees only
-    candidate rows.  The candidate plan is bound to the PRE-append snapshot
-    (immutable files), so the returned DataFrame is safe to evaluate after
-    the append commits."""
+    candidate rows.  Once every ``COMPACT_APPENDS_EVERY`` appends a touched
+    bucket's file group is compacted, which keeps that read's file count
+    bounded.  The candidate plan is bound to the PRE-append snapshot
+    (immutable files, which compaction does not delete), so the returned
+    DataFrame is safe to evaluate after the append commits."""
     if batch_id <= index.last_epoch(EPOCH_SOURCE):
         return None
 
@@ -223,6 +226,7 @@ def update_lsh_index(
             epoch=batch_id,
             retries=1,  # appends commute; absorb one lost CAS
         )
+        _fold_index_files(index, touched)
         return pairs
     finally:
         # the persist serves the in-function consumers (touched-bucket
@@ -237,6 +241,21 @@ def update_lsh_index(
             cleanup.append(rows)
         else:
             rows.unpersist(blocking=False)
+
+
+def _fold_index_files(index: LakeTable, touched: list[int]) -> None:
+    """Compact each of ``touched``'s index buckets whose file group has
+    grown past ``COMPACT_APPENDS_EVERY`` files.  Every batch fast-appends one
+    file per bucket it touches, so without the fold the next batch's
+    bucket-pruned read opens one more file per bucket each time.  Cosmetic
+    like :meth:`LakeTable.compact_appends`: a lost CAS just skips it."""
+    groups = index.manifest()["buckets"]
+    over = [b for b in touched if len(groups.get(str(b), [])) > COMPACT_APPENDS_EVERY]
+    if over:
+        try:
+            index.compact(bucket_ids=over, retries=1)
+        except CommitConflictError:
+            pass
 
 
 def lsh_index_pairs(
@@ -292,8 +311,6 @@ def compact_lsh_index(
     collapse).  The index's analog of the main table's copy-on-write — run
     it on the compaction schedule, not per batch.  ``retries`` follows
     :meth:`LakeTable.compact`'s contract against a live streaming writer."""
-    from ..lake.table import CommitConflictError
-
     for attempt in range(retries + 1):
         m = index.manifest()
         ids = [int(b) for b in m["buckets"]]

@@ -2049,10 +2049,11 @@ def q_cdc_apply_replay(spark, sf_dir):
     oracle verifies the *storage engine*, not just the expression.
 
     Deliberately NOT pre-winnowed: apply_batch's input contract is the raw
-    change log (the bench replay feeds it one), and its consumers (winner
-    offsets, tombstone audit, lineage) each re-read the simple scan with
-    column pruning — measured cheaper than handing it an aggregated frame
-    those consumers would re-compute per pass (r06)."""
+    change log (the bench replay feeds it one), and its two passes (the
+    touched-bucket collect, which also carries the tombstone audit and
+    lineage, and the winner rows) each re-read the simple scan with column
+    pruning — measured cheaper than handing it an aggregated frame those
+    passes would re-compute (r06)."""
     from ..apply import apply_batch, pages_schema_for
     from ..lake.table import LakeTable
 
@@ -2063,7 +2064,7 @@ def q_cdc_apply_replay(spark, sf_dir):
     table = LakeTable.create(
         spark, root, pages_schema_for(changes.schema), n_buckets=8
     )
-    apply_batch(table, changes, batch_id=0, prune_buckets=False)
+    apply_batch(table, changes, batch_id=0)
     final = table.read()
     return final.select(
         "url", "warc_ts", "log_offset", "lang", F.md5(F.col("text")).alias("text_md5")
@@ -2089,15 +2090,9 @@ def q_snapshot_changelog(spark, sf_dir):
     table = LakeTable.create(
         spark, root, pages_schema_for(changes.schema), n_buckets=8
     )
-    apply_batch(
-        table, changes.filter(F.col("log_offset") <= cut), batch_id=0,
-        prune_buckets=False,
-    )
+    apply_batch(table, changes.filter(F.col("log_offset") <= cut), batch_id=0)
     v_from = table.current_version()
-    apply_batch(
-        table, changes.filter(F.col("log_offset") > cut), batch_id=1,
-        prune_buckets=False,
-    )
+    apply_batch(table, changes.filter(F.col("log_offset") > cut), batch_id=1)
     v_to = table.current_version()
     ch = table.read_changes(v_from, v_to)
     return ch.select(
@@ -2134,14 +2129,8 @@ def q_time_slice_read(spark, sf_dir):
         stats_cols=["warc_ts"],
     )
     half = cut // 2
-    apply_batch(
-        table, changes.filter(F.col("log_offset") <= half), batch_id=0,
-        prune_buckets=False,
-    )
-    apply_batch(
-        table, changes.filter(F.col("log_offset") > half), batch_id=1,
-        prune_buckets=False,
-    )
+    apply_batch(table, changes.filter(F.col("log_offset") <= half), batch_id=0)
+    apply_batch(table, changes.filter(F.col("log_offset") > half), batch_id=1)
     # window bound: the ⌊n/2⌋-th smallest warc_ts of the final state — a
     # VALUE, so ties at the boundary resolve identically under any sort
     # order; the oracle computes the same discrete quantile in SQL.  (A

@@ -64,6 +64,12 @@ TOMBSTONE_SCHEMA = T.StructType(
 
 #: per-partition replay metrics (north_rule: "per-partition lineage records
 #: (source offset range, rows applied, merge latency) emitted as metrics").
+#: One row per (batch, touched table bucket): ``partition_id`` is the bucket
+#: id, the offsets are the bucket's min/max ``log_offset`` in the batch, and
+#: ``rows_applied`` counts the events the bucket RECEIVED in the batch
+#: (stale losers and duplicate deliveries included, not only the winners).
+#: ``merge_latency_ms`` runs from the start of ``apply_batch`` to the end
+#: of its data write, the same for every row of a batch.
 LINEAGE_SCHEMA = T.StructType(
     [
         T.StructField("batch_id", T.LongType(), False),

@@ -11,6 +11,7 @@ from datetime import datetime, timedelta
 
 from pyspark.sql import functions as F
 
+from adsimportpipeline_spark import apply as apply_mod
 from adsimportpipeline_spark.apply import apply_batch
 from adsimportpipeline_spark.datagen import GenSpec, generate_change_log, replay_oracle
 from adsimportpipeline_spark.lake.table import LakeTable
@@ -133,35 +134,85 @@ def test_salted_matches_plain_path(spark, tmp_path):
     assert _rows(tables["salted"]) == _rows(tables["plain"])
 
 
+def test_uncollected_deletes_take_the_spark_append(spark, tmp_path, monkeypatch):
+    """Both sides of ``MAX_COLLECTED_DELETES``: the touched-bucket collect
+    brings each batch's deletes to the driver, and with the bound at 0 every
+    batch with a delete appends them by a Spark write instead.  Both give
+    the same table and tombstones, equal to ``replay_oracle``, over batches
+    with duplicate deliveries and a delete re-delivered in a later batch."""
+    spec = GenSpec(n_events=1500, n_urls=100, seed=5)
+    events = [r.asDict() for r in generate_change_log(spark, spec).collect()]
+    batches = [[e for e in events if lo <= e["log_offset"] < lo + 500]
+               for lo in (0, 500, 1000)]
+    redelivered = next(e for e in batches[0] if e["op"] == "delete")
+    batches[2].append(redelivered)
+    assert all(any(e["op"] == "delete" for e in b) for b in batches)
+
+    spark_appends = []
+    orig = apply_mod._tombstone_rows
+
+    def _spy(*args):
+        spark_appends.append(1)
+        return orig(*args)
+
+    monkeypatch.setattr(apply_mod, "_tombstone_rows", _spy)
+    got = {}
+    for side, bound in (("driver", apply_mod.MAX_COLLECTED_DELETES), ("spark", 0)):
+        monkeypatch.setattr(apply_mod, "MAX_COLLECTED_DELETES", bound)
+        spark_appends.clear()
+        table = LakeTable.create(spark, str(tmp_path / side), PAGES_SCHEMA, n_buckets=8)
+        for i, rows in enumerate(batches):
+            apply_batch(table, spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA), i)
+        assert len(spark_appends) == (0 if side == "driver" else len(batches))
+        _assert_matches_oracle(table, [e for b in batches for e in b])
+        got[side] = (_rows(table), sorted(table.read_tombstones(TOMBSTONE_SCHEMA).collect()))
+    assert got["spark"] == got["driver"]
+
+
 #: Spark jobs one warm apply_batch of a small batch into a populated table
-#: (stored rows and tombstones in every touched bucket) may launch.  The
-#: bucket-keyed merge measured 10 (its data write is 2 AQE jobs); the
-#: key-only decide/broadcast/join path before it launched 15, and the
-#: stale-filter/guard path with its measuring count() and persisted applied
-#: rows 21.
-MAX_APPLY_JOBS = 10
+#: (stored rows and tombstones in every touched bucket) may launch: the
+#: touched-bucket collect and the data write, 2 AQE jobs each.  It launched
+#: 10 while the tombstone audit (4 jobs, with its anti-join) and lineage (2)
+#: were Spark writes of their own, 15 before the bucket-keyed merge, and 21
+#: with the stale-filter/guard path's measuring count() and persisted
+#: applied rows.
+MAX_APPLY_JOBS = 4
+
+#: The same for a bulk apply into a fresh table (the fused path: collect 2,
+#: winner rows and data write 4); 11 with the Spark-written audit and
+#: lineage.
+MAX_BULK_APPLY_JOBS = 6
+
+
+def _jobs_of(spark, fn) -> int:
+    """Spark jobs ``fn()`` launches, from the status tracker."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    bus.waitUntilEmpty()
+    before = set(sc.statusTracker().getJobIdsForGroup(None))
+    fn()
+    bus.waitUntilEmpty()
+    return len(set(sc.statusTracker().getJobIdsForGroup(None)) - before)
 
 
 def test_warm_apply_job_count(spark, tmp_path):
-    """Regression guard on the fixed per-batch cost: a re-added persist or
-    measuring count() adds jobs and fails here.  Jobs are counted from the
-    status tracker (it sees jobs of overwrite_buckets' pool threads too)."""
+    """Regression guard on the fixed per-batch cost: a re-added persist,
+    measuring count() or Spark-side append adds jobs and fails here, on a
+    warm apply into a populated table and on a bulk apply into a fresh
+    one."""
     log = str(tmp_path / "log")
     generate_change_log(spark, GenSpec(n_events=3000, n_urls=300, seed=9)).write.parquet(log)
     ev = spark.read.parquet(log)
-    table = LakeTable.create(spark, str(tmp_path / "t"), PAGES_SCHEMA, n_buckets=8)
-    apply_batch(table, ev.filter("log_offset < 2000"), 0)
+    bulk = []
+    for i in range(3):
+        table = LakeTable.create(spark, str(tmp_path / f"t{i}"), PAGES_SCHEMA, n_buckets=8)
+        bulk.append(_jobs_of(spark, lambda: apply_batch(table, ev.filter("log_offset < 2000"), 0)))
 
-    sc = spark.sparkContext
-    bus = sc._jsc.sc().listenerBus()
     counts = []
     for i, lo in enumerate((2000, 2300, 2600), start=1):
         batch = ev.filter(F.col("log_offset").between(lo, lo + 299))
-        bus.waitUntilEmpty()
-        before = set(sc.statusTracker().getJobIdsForGroup(None))
-        apply_batch(table, batch, i)
-        bus.waitUntilEmpty()
-        counts.append(len(set(sc.statusTracker().getJobIdsForGroup(None)) - before))
+        counts.append(_jobs_of(spark, lambda: apply_batch(table, batch, i)))
     assert table.manifest()["tombstone_files"], "the guard rival must be exercised"
-    # the first of these batches is warm-up (python workers, codegen)
+    # the first of each is warm-up (python workers, codegen)
+    assert max(bulk[1:]) <= MAX_BULK_APPLY_JOBS, bulk
     assert max(counts[1:]) <= MAX_APPLY_JOBS, counts

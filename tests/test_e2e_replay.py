@@ -165,15 +165,36 @@ def test_stream_onto_preloaded_table(spark, tmp_path, events_and_oracle):
     _assert_state_matches(table, pages, tombs)
 
 
-def test_kill_mid_replay_then_resume(spark, tmp_path, events_and_oracle):
+def test_kill_mid_replay_then_resume(spark, tmp_path, events_and_oracle, monkeypatch):
     """Simulate a crash after some batches: re-run from the same checkpoint;
-    replayed epochs are skipped, the rest applied, final state correct."""
+    replayed epochs are skipped, the rest applied, final state correct.
+    Lineage holds one row per (batch, touched bucket), resumed batches
+    included: per batch its rows_applied add up to the events delivered in
+    it, and its merge_latency_ms covers the batch's data write."""
+    import time
+
+    from adsimportpipeline_spark.schema import LINEAGE_SCHEMA
+    from adsimportpipeline_spark.streaming import runner
+
     df, rows, pages, tombs = events_and_oracle
     log = str(tmp_path / "log2")
     root = str(tmp_path / "tbl_k")
     ckpt = str(tmp_path / "ckpt2")
     write_change_log(spark, log, SPEC, n_files=8)
     table = LakeTable.create(spark, root, PAGES_SCHEMA, n_buckets=16)
+
+    delivered: dict[int, int] = {}
+    write_walls: list[float] = []  # seconds, in commit order
+    write_buckets = LakeTable._write_buckets
+
+    def _timed_write(self, *args, **kwargs):
+        t = time.perf_counter()
+        try:
+            return write_buckets(self, *args, **kwargs)
+        finally:
+            write_walls.append(time.perf_counter() - t)
+
+    monkeypatch.setattr(LakeTable, "_write_buckets", _timed_write)
 
     # first run processes only part of the backlog (2 files/trigger, then we
     # "crash" by limiting with maxFilesPerTrigger and stopping after 1 batch)
@@ -186,6 +207,7 @@ def test_kill_mid_replay_then_resume(spark, tmp_path, events_and_oracle):
         if len(hits) >= 2:
             raise RuntimeError("injected crash")
         hits.append(batch_id)
+        delivered[batch_id] = batch_df.count()
         _ab(table, batch_df, batch_id)
 
     q = (
@@ -198,10 +220,28 @@ def test_kill_mid_replay_then_resume(spark, tmp_path, events_and_oracle):
     with pytest.raises(Exception):
         q.awaitTermination()
 
+    def _counted(table, batch_df, batch_id, **kwargs):
+        delivered[batch_id] = batch_df.count()
+        return _ab(table, batch_df, batch_id, **kwargs)
+
+    monkeypatch.setattr(runner, "apply_batch", _counted)
     # resume from the same checkpoint — including a replay of the failed batch
     stats: list = []
     run_replay(spark, log, root, ckpt, max_files_per_trigger=2, collect_stats=stats)
     _assert_state_matches(table, pages, tombs)
+
+    lineage = table.read_lineage(LINEAGE_SCHEMA).collect()
+    batches = sorted({r.batch_id for r in lineage})
+    assert batches == sorted(delivered) and len(batches) >= 3
+    assert sum(delivered.values()) == SPEC.n_events
+    assert len({(r.batch_id, r.partition_id) for r in lineage}) == len(lineage)
+    assert len(write_walls) == len(batches)
+    for b, wall in zip(batches, write_walls):
+        mine = [r for r in lineage if r.batch_id == b]
+        assert sum(r.rows_applied for r in mine) == delivered[b]
+        assert all(0 <= r.partition_id < 16 and r.commit_epoch == b for r in mine)
+        assert all(r.offset_start <= r.offset_end for r in mine)
+        assert min(r.merge_latency_ms for r in mine) >= wall * 1000.0
 
 
 def test_rescale_mid_replay_matches_oracle(spark, tmp_path, events_and_oracle):

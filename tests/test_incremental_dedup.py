@@ -191,6 +191,29 @@ def test_append_buckets_fast_append(spark, tmp_path):
     assert t.read().count() == 3
 
 
+def test_index_file_groups_stay_bounded(spark, tmp_path):
+    """Every batch fast-appends one file per index bucket it touches; over a
+    replay longer than ``COMPACT_APPENDS_EVERY`` batches, the touched
+    buckets are compacted so no file group grows past that bound, and no
+    band row is lost."""
+    from adsimportpipeline_spark.apply import COMPACT_APPENDS_EVERY
+
+    index = create_lsh_index(spark, str(tmp_path / "lsh"), n_buckets=2)
+    worst = []
+    for i in range(COMPACT_APPENDS_EVERY + 4):
+        upserts = spark.createDataFrame(
+            [(f"u{i}", T0 + timedelta(minutes=i), i, TPL_A)],
+            "url string, warc_ts timestamp, log_offset long, text string",
+        )
+        update_lsh_index(index, upserts, i)
+        worst.append(max(len(es) for es in index.manifest()["buckets"].values()))
+    assert max(worst) == COMPACT_APPENDS_EVERY, worst  # reached, never passed
+    assert worst[-1] < COMPACT_APPENDS_EVERY  # folded once it was passed
+    rows = index.read()
+    assert rows.select("url").distinct().count() == COMPACT_APPENDS_EVERY + 4
+    assert rows.count() == rows.distinct().count()
+
+
 def test_update_survives_restart(replayed, spark, tmp_path):
     """A fresh LakeTable handle over the same roots (driver restart) sees
     the committed epochs and the same pair answer."""

@@ -62,10 +62,10 @@ def test_epoch_bookkeeping(spark, tmp_path):
 def _tomb_rows(spark, n, batch):
     from adsimportpipeline_spark.schema import TOMBSTONE_SCHEMA
 
-    return spark.createDataFrame(
-        [(f"u{batch}-{i}", datetime(2024, 1, 1), "deleted", batch * 100 + i) for i in range(n)],
-        TOMBSTONE_SCHEMA,
-    )
+    rows = [(f"u{batch}-{i}", datetime(2024, 1, 1), "deleted", batch * 100 + i) for i in range(n)]
+    if batch in (3, 7):  # one delete delivered again, in two later batches
+        rows.append(("u0-0", datetime(2024, 1, 1), "deleted", 0))
+    return spark.createDataFrame(rows, TOMBSTONE_SCHEMA)
 
 
 def test_append_compaction_and_snapshot_expiry(spark, tmp_path):
@@ -73,20 +73,27 @@ def test_append_compaction_and_snapshot_expiry(spark, tmp_path):
 
     t = LakeTable.create(spark, str(tmp_path / "t4"), PAGES_SCHEMA, n_buckets=2)
     for b in range(12):
+        tombs = t.write_append(_tomb_rows(spark, 2, b).coalesce(1), "tomb")
         t.overwrite_buckets(
             _rows(spark, [f"u{b}"]), [0, 1],
             epoch_source="cdc", epoch=b,
-            tombstone_appends=_tomb_rows(spark, 2, b),
+            appends=lambda: {"tombstone_files": tombs},
         )
     m = t.manifest()
     assert len(m["tombstone_files"]) == 12  # one append file per micro-batch
-    before = {tuple(r) for r in t.read_tombstones(TOMBSTONE_SCHEMA).collect()}
+    raw = spark.read.parquet(*[e["path"] for e in m["tombstone_files"]])
+    assert raw.filter("log_offset = 0").count() == 3
+    read = [tuple(r) for r in t.read_tombstones(TOMBSTONE_SCHEMA).collect()]
+    before = set(read)
+    assert len(read) == len(before) == 24  # read as a distinct set
 
     t.compact_appends()
     m2 = t.manifest()
     assert len(m2["tombstone_files"]) == 1  # folded to O(1)
+    folded = spark.read.parquet(m2["tombstone_files"][0]["path"])
+    assert folded.count() == 24  # the fold keeps the repeated delete once
     after = {tuple(r) for r in t.read_tombstones(TOMBSTONE_SCHEMA).collect()}
-    assert after == before  # contents exactly preserved
+    assert after == before  # the same set before and after the fold
 
     import os
 
