@@ -1,85 +1,90 @@
-"""The micro-batch apply path: touched buckets -> Arrow extract -> one
-bucket-keyed LWW merge -> copy-on-write commit.
+"""The micro-batch apply path: touched buckets -> one bucket-keyed LWW
+merge -> one pass that extracts text and writes the bucket files ->
+copy-on-write commit.
 
 This is the Spark rebuild of the reference's task chain
 ``task_find_new_records -> task_read_records -> task_merge_metadata ->
-update_storage`` (tasks.py:34-119, app.py:24-74) collapsed into one
-DataFrame plan executed per micro-batch inside ``foreachBatch``:
+update_storage`` (tasks.py:34-119, app.py:24-74) collapsed into two Spark
+queries per micro-batch, the same for a fresh table and a populated one:
 
 1. **One discovery query** (``groupBy(bucket)``, collected through
    ``toArrow()``, which keeps the UTC timestamps): per touched bucket the
    event count, ``min``/``max(log_offset)`` and the bucket's distinct delete
    events (``collect_set``).  Only the table buckets holding the batch's
    urls are read and rewritten (the semantic twin of the reference's
-   changed-record short-circuit, tasks.py:52-64); the row count sizes the
-   bulk path's winner join without a measuring job; the deletes and counts
+   changed-record short-circuit, tasks.py:52-64); the deletes and counts
    become the tombstone audit and the lineage, written by the driver.
-2. **HTML->text** in one ``mapInArrow`` pass right after the batch scan,
-   for every batch upsert, losers included (O(batch)); stored rows never
-   enter Python.
-3. **One merge** of batch (``_src`` 0) ∪ stored rows (``op='upsert'``) ∪
-   tombstones (``op='delete'``, null payload) of the touched buckets
-   (``_src`` 1): one exchange on ``_bucket``, then ``max_by(payload,
-   (warc_ts, log_offset, _src))`` per ``(_bucket, url)``.  bucket = f(url),
-   so LWW is local to a bucket (the per-file-group merge of Iceberg / Hudi
-   copy-on-write writers).  Ties go to the stored side, so a batch event
-   applies iff it is strictly newer than the stored row (idempotent upsert,
-   app.py:34-39) and the latest tombstone (no resurrection by stale events,
-   app.py:54-67); exact duplicate deliveries share an offset, hence a
-   payload, and collapse in the same aggregate.
-4. **Atomic commit**: the data write (each bucket whole in one partition:
-   one file per bucket, no second exchange) is the only other Spark query.
-   After it the driver writes, with pyarrow, the batch's delete events to
-   the tombstone audit and one lineage row per touched bucket carrying the
-   merge latency measured there; one manifest flip attaches the data,
-   tombstone and lineage files and records the commit epoch (exactly-once
-   under foreachBatch replays).  The audit is append-only: a delete
-   re-delivered in a later batch is stored again, and
+2. **One merge** of batch (``_src`` 0, no Python on the map side) ∪ stored
+   rows (``op='upsert'``) ∪ tombstones (``op='delete'``, null payload) of
+   the touched buckets (``_src`` 1): one AQE-coalesced hash exchange on
+   ``_bucket``, then ``max_by(payload, (warc_ts, log_offset, _src))`` per
+   ``(_bucket, url)``.  bucket = f(url), so LWW is local to a bucket (the
+   per-file-group merge of Iceberg / Hudi copy-on-write writers).  Ties go
+   to the stored side, so a batch event applies iff it is strictly newer
+   than the stored row (idempotent upsert, app.py:34-39) and the latest
+   tombstone (no resurrection by stale events, app.py:54-67); exact
+   duplicate deliveries share an offset, hence a payload, and collapse in
+   the same aggregate.  On a fresh table the stored and tombstone inputs are
+   empty and left out: the merge is the batch's own LWW.
+3. **One write pass** over the winners, in the merge's reduce tasks: ONE
+   ``mapInArrow`` (:meth:`.LakeTable._write_buckets`) extracts text for
+   batch winners only (``_src`` 0; stored rows keep their stored text) and
+   streams each bucket's rows to its own parquet file with pyarrow.  It
+   yields each file's (bucket, path, rows), which the driver collects, so
+   each row crosses from the engine to Python once.
+4. **Atomic commit**: after the write the driver writes, with pyarrow, the
+   batch's delete events to the tombstone audit and one lineage row per
+   touched bucket carrying the merge latency measured there; one manifest
+   flip attaches the data, tombstone and lineage files and records the
+   commit epoch (exactly-once under foreachBatch replays).  The audit is
+   append-only: a delete re-delivered in a later batch is stored again, and
    :meth:`.LakeTable.read_tombstones` and ``compact_appends`` drop the
    duplicate (the merge reads the raw files: duplicates collapse in its
    ``max_by``).  A batch with too many deletes to collect
    (``MAX_COLLECTED_DELETES``) appends them with one narrow Spark write
    instead.
 
-A fresh table (no stored rows, no tombstones) takes the fused bulk path:
-the batch's own LWW winners, placed by bucket, go through one duplicate
-collapse + extract Arrow pass, so text is extracted for winners only.
-
 Negative results, kept so nobody re-adds them: persisting the applied
 rows fixed the Python stage at ``spark.sql.shuffle.partitions`` tasks
-(AQE cannot re-coalesce a cached relation's output); a measure-and-cache
+(AQE cannot re-coalesce a cached relation's output), and keeping them for
+the LSH index cost 14 Spark jobs per batch against 10; a measure-and-cache
 ``count()`` of the winner keys cost 4 Spark jobs per batch; with separate
 stale-filter and tombstone-guard joins a ~1 k-event micro-batch into a
 populated table cost 23 jobs.  Deciding key-only, broadcasting the winning
 offsets, fetching payloads by a ``log_offset`` join and taking survivors by
 a left-anti join cost six AQE jobs for the data write and 15 per batch; the
-merge writes in two and a batch runs 10 (cdcbench ``incr_upsert``, 4
-vCPUs).  ``repartitionById`` (:func:`.lake.table.bucket_partitioned`) under
-the merge's aggregate costs two extra exchanges: it does not satisfy the
+merge writes in two (cdcbench ``incr_upsert``, 4 vCPUs).  The fresh-table
+apply once took its own path (key-only LWW aggregate, winner join, Arrow
+extract with a per-partition duplicate collapse, Spark parquet write): 6
+jobs against 4 now, and cdcbench ``bulk_load`` ran 93.7 k ev/s against
+132 k (medians of 10 alternating pairs, 4 vCPUs).
+``repartitionById`` (:func:`.lake.table.bucket_partitioned`) under the
+merge's aggregate costs two extra exchanges: it does not satisfy the
 aggregate's ``ClusteredDistribution(_bucket, url)``, so Spark adds
 ``hashpartitioning(_bucket, url)`` and the write a third exchange; the hash
-``repartition(_bucket)`` does satisfy it.  The bulk path once
-hashed its 8 bucket ids into 4 × cores = 16 partitions: 9 of the 16
-Python tasks were empty and two buckets collided in one partition, so the
-extract+write stage ran four waves where one suffices.  Whole buckets now
-land on ``min(buckets, cores)`` partitions by id (``bucket_partitioned``).
-The tombstone audit once ran as a Spark write of its own, with a left-anti
-join against every stored tombstone to keep the audit a distinct set, and
-lineage as another; with the collect that made four queries and 10 jobs per
-``incr_upsert`` batch, where the collect and the data write now run 4.  On
-4 vCPUs a Spark query costs ~50 ms as a collect and ~100 ms as a parquet
-write.  So an ``Observation``-carrying tombstone write in place of the
-collect (lineage from its metrics) gave only -10 to -13 % batch wall: the
-write query costs about twice the collect it replaces.  Also measured
-for this design: ``repartition(min(touched, cores), "_bucket")`` for a
-more parallel merge write gave no gain, and
-``spark.sql.adaptive.enabled=false`` made the apply slower.
+``repartition(_bucket)`` does satisfy it.  A fixed-count
+``repartition(min(touched, cores), "_bucket")`` for a more parallel write
+was slower than the AQE-coalesced one: ``bulk_load`` 126–127 k against
+133 k ev/s, ``incr_upsert`` 1914–1930 against 2031 ev/s, and 90–190 MB
+more RSS.  A writer chained as a second ``mapInArrow`` after the extract
+raised peak PSS by ~300 MB: each task got a second Python worker.
+Spark's file writer took 110–145 ms for an 8-file, 174 KB bucket write
+(144 ms under ``partitionOverwriteMode=dynamic``, 112 ms static), pyarrow
+8 ms.  The tombstone audit once ran as a Spark write of its own, with a
+left-anti join against every stored tombstone to keep the audit a distinct
+set, and lineage as another; with the collect that made four queries and
+10 jobs per ``incr_upsert`` batch.  On 4 vCPUs a Spark query costs ~50 ms
+as a collect and ~100 ms as a parquet write.  So an
+``Observation``-carrying tombstone write in place of the collect (lineage
+from its metrics) gave only -10 to -13 % batch wall: the write query costs
+about twice the collect it replaces.  ``spark.sql.adaptive.enabled=false``
+made the apply slower.
 
-That fixed cost was once ~250 ms per Python task.  Most of it was not Arrow
+A Python task's fixed cost was once ~250 ms.  Most of it was not Arrow
 transfer or extraction but the worker's per-task set-up: PySpark's
 ``importlib.invalidate_caches()`` made each of the worker's ~19 cached zip
 importers (``pyspark.zip``, the spark-core jar, ...) re-read its archive's
-central directory, 120–230 ms per task on 4 vCPUs.  The Arrow pass now
+central directory, 120–230 ms per task on 4 vCPUs.  The write pass now
 drops those importers (:func:`.session.forget_zip_importers`), and a task's
 set-up is a few tens of ms.
 """
@@ -87,7 +92,6 @@ set-up is a few tens of ms.
 from __future__ import annotations
 
 import time
-from collections.abc import Iterator
 from datetime import datetime, timezone
 
 import pyarrow as pa
@@ -96,14 +100,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
-from pyspark.storagelevel import StorageLevel
 
 from .evolve import align_to_schema, reconcile_schema
-from .lake.table import CommitConflictError, LakeTable, bucket_expr, bucket_partitioned
+from .lake.table import CommitConflictError, LakeTable, bucket_expr
 from .operators.cdc import tombstone_guard  # noqa: F401  (re-exported: tracers wrap it by name)
-from .operators.lww import (
-    lww_dedup_salted,
-    lww_dedup_semi,  # noqa: F401  (re-exported: tracers wrap it by name)
+from .operators.lww import (  # noqa: F401  (re-exported: tracers wrap them by name)
+    lww_dedup_semi,
     lww_winner_rows,
 )
 from .schema import LINEAGE_SCHEMA, OP_DELETE, TOMBSTONE_SCHEMA
@@ -122,76 +124,22 @@ COMPACT_APPENDS_EVERY = 32
 #: (:func:`_tombstone_rows`).
 MAX_COLLECTED_DELETES = 100_000
 
-
-def _text_after_html_fields(
-    fields: list[T.StructField], skip: str
-) -> list[T.StructField]:
-    """THE target-row field order: input fields minus ``skip``, with the
-    derived ``text`` column inserted right after ``html``.  One definition —
-    pages_schema_for and the fused bulk path's Arrow output schema must
-    agree on it exactly."""
-    out: list[T.StructField] = []
-    for f in fields:
-        if f.name == skip:
-            continue
-        out.append(f)
-        if f.name == "html":
-            out.append(T.StructField("text", T.StringType(), True))
-    return out
+#: The merge's own columns that ride into the write pass: the source side
+#: (0 = batch, whose winners get their text extracted there) and the bucket.
+_MERGE_COLS = [T.StructField("_src", T.IntegerType()), T.StructField("_bucket", T.IntegerType())]
 
 
 def pages_schema_for(batch_schema: T.StructType) -> T.StructType:
     """Target row schema for a change-event schema: drop ``op``, add ``text``
     right after ``html`` (schema evolution on the stream flows through)."""
-    return T.StructType(_text_after_html_fields(batch_schema.fields, "op"))
-
-
-def _arrow_text(df: DataFrame, key: str, collapse: bool) -> DataFrame:
-    """``df`` (minus ``_bucket``) with ``text`` right after ``html``, in ONE
-    ``mapInArrow`` pass; a delete's text stays null (it is never written).
-    ``collapse`` also drops rows whose url this partition has already seen:
-    correct only when each partition holds whole urls and exact duplicate
-    deliveries are the only multiplicity left (offsets identify events, so
-    co-keyed winners are byte-identical — keeping any one is LWW)."""
-    out_fields = _text_after_html_fields(df.schema.fields, "_bucket")
-    out_cols = [f.name for f in out_fields]
-
-    def _text_arrow(it: "Iterator") -> "Iterator":
-        # mapInArrow, not mapInPandas: the row payload (html binary, text)
-        # stays in Arrow buffers end-to-end — a pandas pass materialized
-        # every html as a Python bytes object and every text as a Python
-        # str TWICE (in and out), the dominant python-side cost of this
-        # stage.  Only the ~30-byte urls are materialized, for the
-        # duplicate collapse.
-        import pyarrow as pa
-        import pyarrow.compute as pc
-
-        from .functions.html import extract_text_arrow
-        from .session import forget_zip_importers
-
-        forget_zip_importers()  # the next task's worker set-up stays cheap
-        seen: set = set()  # urls of THIS partition only (one bucket group)
-        for batch in it:
-            if collapse:
-                mask = []
-                for u in batch.column(batch.schema.get_field_index(key)).to_pylist():
-                    mask.append(u not in seen)
-                    seen.add(u)
-                batch = batch.filter(pa.array(mask, type=pa.bool_()))
-                if batch.num_rows == 0:
-                    continue
-            cols = {name: batch.column(batch.schema.get_field_index(name))
-                    for name in batch.schema.names}
-            html = cols["html"]
-            if "op" in cols:
-                html = pc.if_else(pc.equal(cols["op"], OP_DELETE),
-                                  pa.scalar(None, html.type), html)
-            cols["text"] = extract_text_arrow(html)
-            yield pa.RecordBatch.from_arrays(
-                [cols[name] for name in out_cols], names=out_cols
-            )
-
-    return df.mapInArrow(_text_arrow, T.StructType(out_fields))
+    out: list[T.StructField] = []
+    for f in batch_schema.fields:
+        if f.name == "op":
+            continue
+        out.append(f)
+        if f.name == "html":
+            out.append(T.StructField("text", T.StringType(), True))
+    return T.StructType(out)
 
 
 def _touched_summary(batch_df: DataFrame, key: str, n_buckets: int) -> pa.Table:
@@ -242,29 +190,39 @@ def _arrow_lineage(summary, batch_id: int, latency_ms: float) -> pa.Table:
     )
 
 
-def _bulk_upserts(
-    batch_df: DataFrame,
-    key: str,
-    n_buckets: int,
-    target_schema: T.StructType,
-    cleanup: list,
-    n_rows: int | None,
-    touched: list[int],
+def _merged_winners(
+    table: LakeTable, m: dict, batch_df: DataFrame, touched: list[int], target: T.StructType
 ) -> DataFrame:
-    """Fresh-table bulk apply: :func:`lww_winner_rows` (``n_rows`` bounds
-    the winner count, so no measuring job when it fits the broadcast budget)
-    -> ONE exchange placing whole ``touched`` buckets on
-    ``min(len(touched), cores)`` partitions (:func:`bucket_partitioned`) ->
-    duplicate collapse + HTML->text in one Arrow pass.  bucket = f(url), so
-    each url's duplicate deliveries share a partition; the extract+write
-    stage runs as one wave with no empty task, and the write needs no
-    second exchange."""
-    winners = lww_winner_rows(
-        batch_df, key, broadcast_keys=n_rows, cleanup=cleanup, unique_order_col="log_offset"
-    )
-    upserts = winners.filter(F.col("op") != OP_DELETE).drop("op")
-    tagged = bucket_partitioned(upserts.withColumn("_bucket", bucket_expr(key, n_buckets)), touched)
-    return align_to_schema(_arrow_text(tagged, key, collapse=True), target_schema)
+    """THE bucket-keyed merge: the upsert winners of batch ∪ stored rows ∪
+    tombstones of the ``touched`` buckets, projected onto ``target`` plus
+    ``_src`` and ``_bucket``, each bucket whole in one partition.  Inputs
+    union by name, missing columns null (the batch has no ``text``)."""
+    key, nb = m["key"], m["n_buckets"]
+    cands = batch_df.filter(F.col(key).isNotNull()).withColumn("_src", F.lit(0))
+    if any(m["buckets"].get(str(b)) for b in touched):
+        current = table.read_buckets(touched, m)
+        cands = cands.unionByName(
+            current.withColumns({"op": F.lit("upsert"), "_src": F.lit(1)}),
+            allowMissingColumns=True,
+        )
+    if m["tombstone_files"]:
+        # the raw audit files: a re-delivered delete stored twice collapses
+        # in the max_by below like any duplicate
+        tombs = table.read_tombstones(TOMBSTONE_SCHEMA, distinct=False)
+        if len(touched) < nb:
+            tombs = tombs.filter(bucket_expr("url", nb).isin(touched))
+        tombs = tombs.selectExpr(f"url AS `{key}`", "deleted_ts AS warc_ts", "log_offset",
+                                 f"'{OP_DELETE}' AS op", "1 AS _src")
+        cands = cands.unionByName(tombs, allowMissingColumns=True)
+    # a hash exchange, not bucket_partitioned: HashPartitioning(_bucket)
+    # satisfies the aggregate's distribution, so each bucket lands whole in
+    # one partition with no second exchange, and AQE coalesces partitions
+    cands = cands.withColumn("_bucket", bucket_expr(key, nb)).repartition("_bucket")
+    payload = ", ".join(f"`{c}`" for c in cands.columns if c not in (key, "_bucket"))
+    winner = F.expr(f"max_by(struct({payload}), struct(warc_ts, log_offset, _src))")
+    merged = cands.groupBy("_bucket", key).agg(winner.alias("w")).select("_bucket", key, "w.*")
+    merged = merged.filter(F.col("op") != OP_DELETE)
+    return align_to_schema(merged, T.StructType([*target.fields, *_MERGE_COLS]))
 
 
 def apply_batch(
@@ -272,30 +230,14 @@ def apply_batch(
     batch_df: DataFrame,
     batch_id: int,
     epoch_source: str = "cdc",
-    salted: bool = False,
-    n_salts: int = 16,
     prune_buckets: bool = True,
-    keep_applied: list | None = None,
 ) -> dict:
     """Apply one micro-batch of change events. Returns stats. Idempotent:
     re-delivery of an already-committed batch_id is a no-op.
 
     ``prune_buckets`` has no effect: the touched-bucket discovery always
     runs, because the tombstone audit and lineage come from it.  The
-    parameter stays for callers that still pass it.
-
-    ``salted=True`` splits the merge's argmax in two phases
-    (:func:`lww_dedup_salted`) for hot urls; the write then places buckets
-    with its own exchange.
-
-    ``keep_applied``: when a list is passed, the applied-upserts frame
-    (WITH extracted ``text``) is persisted and appended to it instead of
-    being torn down — the caller owns the unpersist.  A derived-index
-    maintainer (update_lsh_index) can then consume the rows this batch
-    actually applied at O(batch) cost with no table read-back and no second
-    HTML->text extraction: the write job fills the cache the applied rows
-    are taken from.  Empty when the batch was an epoch no-op (caller falls
-    back to a table read for that crash-recovery case)."""
+    parameter stays for callers that still pass it."""
     if batch_id <= table.last_epoch(epoch_source):
         return {"batch_id": batch_id, "skipped": True}
 
@@ -308,149 +250,73 @@ def apply_batch(
 
     m = table.manifest()
     key, nb = m["key"], m["n_buckets"]
+    _mark("manifest_read")
     # batch_df is deliberately NOT cached: its two passes (the discovery
-    # query and the merge) prune to different columns, so columnar
-    # re-reads from the source beat materializing full rows on heap
-    _caches: list = []
-    try:
-        _mark("manifest_read")  # time since t0: the manifest open above
+    # query and the merge) prune to different columns, so columnar re-reads
+    # from the source beat materializing full rows on heap.
+    # 1. discovery: which table buckets does this batch touch, and its
+    #    tombstone audit and lineage, from one narrow scan of the batch
+    summary = _touched_summary(batch_df, key, nb)
+    touched = summary.column("b").to_pylist()
+    evolved = reconcile_schema(table.schema(m), pages_schema_for(batch_df.schema))
+    _mark("dedup_and_touched")
+    # 2-3. the merge; the write pass runs in its reduce tasks
+    new_data = _merged_winners(table, m, batch_df, touched, evolved)
 
-        # 1. discovery: which table buckets does this batch touch, how many
-        #    rows does it have (an upper bound on its winners, which sizes
-        #    the bulk path's winner join without a measuring job), and its
-        #    tombstone audit and lineage, from one narrow scan of the batch
-        summary = _touched_summary(batch_df, key, nb)
-        touched = summary.column("b").to_pylist()
-        n_rows = sum(summary.column("n").to_pylist())
-        # manifest-level emptiness: a fresh table / bulk first replay has no
-        # stored rows and no tombstones, so nothing can beat a batch winner.
-        has_current = any(m["buckets"].get(str(b)) for b in touched)
-        has_tombs = bool(m["tombstone_files"])
-        evolved = reconcile_schema(table.schema(m), pages_schema_for(batch_df.schema))
-        _mark("dedup_and_touched")
-        merged = None  # the populated-table merge, once planned
+    # 4. the append-only branches, written once the data write is done (so
+    #    the lineage carries the true merge latency) and attached in the
+    #    same manifest flip.  Every delete event of the batch goes to the
+    #    audit (reference app.py:15-21 appends every delete to change_log);
+    #    it stays a distinct set to its readers.
+    latency_ms = 0.0
 
-        if not has_current and not has_tombs and not salted:
-            # FUSED bulk path: winner rows go through one exchange that
-            # places whole touched buckets on partitions, with the duplicate
-            # collapse and text extraction fused into a single Arrow pass
-            # that the write consumes in place.
-            new_data = _bulk_upserts(batch_df, key, nb, evolved, _caches, n_rows, touched)
-            if keep_applied is not None:
-                new_data = new_data.persist(StorageLevel.MEMORY_AND_DISK)
-                keep_applied.append(new_data)
-            pre_partitioned = True
+    def _appends() -> dict[str, list[str]]:
+        nonlocal latency_ms
+        latency_ms = (time.time() - t0) * 1000.0
+        out = {"lineage_files": [], "tombstone_files": []}
+        if summary.num_rows:
+            out["lineage_files"] = table.write_append(
+                _arrow_lineage(summary, batch_id, latency_ms), "lin")
+        if summary.column("dels").null_count:
+            out["tombstone_files"] = table.write_append(_tombstone_rows(batch_df, key), "tomb")
         else:
-            # 2-3. ONE bucket-keyed merge: batch rows (src 0, text extracted
-            #    right after the scan) ∪ stored rows and tombstones of the
-            #    touched buckets (src 1).  src breaks (warc_ts, log_offset)
-            #    ties toward the stored side, so a batch event applies iff it
-            #    is strictly newer than the stored row AND the latest
-            #    tombstone.
-            #    Inputs union by name, missing columns null: the projection
-            #    onto ``evolved`` below orders and casts them.
-            batch = _arrow_text(batch_df.filter(F.col(key).isNotNull()), key, collapse=False)
-            cands = batch.withColumn("_src", F.lit(0))
-            if has_current:
-                current = table.read_buckets(touched, m)
-                cands = cands.unionByName(
-                    current.withColumns({"op": F.lit("upsert"), "_src": F.lit(1)}),
-                    allowMissingColumns=True,
-                )
-            if has_tombs:
-                # the raw audit files: a re-delivered delete stored twice
-                # collapses in the max_by below like any duplicate
-                tombs = table.read_tombstones(TOMBSTONE_SCHEMA, distinct=False)
-                if len(touched) < nb:
-                    tombs = tombs.filter(bucket_expr("url", nb).isin(touched))
-                tombs = tombs.selectExpr(f"url AS `{key}`", "deleted_ts AS warc_ts", "log_offset",
-                                         f"'{OP_DELETE}' AS op", "1 AS _src")
-                cands = cands.unionByName(tombs, allowMissingColumns=True)
-            order = ("warc_ts", "log_offset", "_src")
-            pre_partitioned = not salted
-            if salted:
-                merged = lww_dedup_salted(cands, key, order, n_salts=n_salts)
-            else:
-                # a hash exchange, not bucket_partitioned: HashPartitioning
-                # (_bucket) satisfies the aggregate's distribution, so each
-                # bucket lands whole in one partition with no second exchange
-                cands = cands.withColumn("_bucket", bucket_expr(key, nb)).repartition("_bucket")
-                payload = ", ".join(f"`{c}`" for c in cands.columns if c not in (key, "_bucket"))
-                winner = F.expr(f"max_by(struct({payload}), struct({', '.join(order)}))")
-                merged = cands.groupBy("_bucket", key).agg(winner.alias("w")).select(key, "w.*")
-            merged = merged.filter(F.col("op") != OP_DELETE)
-            if keep_applied is not None:
-                merged = merged.persist(StorageLevel.MEMORY_AND_DISK)
-                _caches.append(merged)
-            new_data = align_to_schema(merged, evolved)
+            tombs = _arrow_tombstones(summary)
+            if tombs.num_rows:
+                out["tombstone_files"] = table.write_append(tombs, "tomb")
+        return out
 
-        # 4. the append-only branches, written once the data write is done
-        #    (so the lineage carries the true merge latency) and attached in
-        #    the same manifest flip.  Every delete event of the batch goes to
-        #    the audit (reference app.py:15-21 appends every delete to
-        #    change_log); it stays a distinct set to its readers.
-        latency_ms = 0.0
-
-        def _appends() -> dict[str, list[str]]:
-            nonlocal latency_ms
-            latency_ms = (time.time() - t0) * 1000.0
-            out = {"lineage_files": [], "tombstone_files": []}
-            if summary.num_rows:
-                out["lineage_files"] = table.write_append(
-                    _arrow_lineage(summary, batch_id, latency_ms), "lin")
-            if summary.column("dels").null_count:
-                out["tombstone_files"] = table.write_append(_tombstone_rows(batch_df, key), "tomb")
-            else:
-                tombs = _arrow_tombstones(summary)
-                if tombs.num_rows:
-                    out["tombstone_files"] = table.write_append(tombs, "tomb")
-            return out
-
-        _mark("plan_build")
-        version = table.overwrite_buckets(
-            new_data,
-            touched,
-            epoch_source=epoch_source,
-            epoch=batch_id,
-            new_schema=evolved,
-            appends=_appends,
-            pre_partitioned=pre_partitioned,
-            # revalidation parent = the snapshot THIS batch's plan read at
-            # its top (bucket pruning, has_current, epochs all came from it)
-            parent_version=m["version"],
-        )
-        if merged is not None and keep_applied is not None:
-            # taken from the merge the write just cached: no second extract
-            applied = align_to_schema(merged.filter(F.col("_src") == 0), evolved)
-            applied = applied.persist(StorageLevel.MEMORY_AND_DISK)
-            applied.count()
-            keep_applied.append(applied)
-        _mark("commit_write")
-        # periodic fold (COMPACT_APPENDS_EVERY) in its own atomic commit: a
-        # crash between the two commits loses only the fold, never data.
-        # The fold is COSMETIC: losing a CAS to a concurrent maintenance job
-        # (compact/expire between the data commit above and here) must not
-        # kill the streaming query — absorb one conflict with a fresh
-        # re-plan, and if the table is racing that hard this trigger just
-        # skips; the next scheduled batch folds everything anyway.
-        if batch_id % COMPACT_APPENDS_EVERY == COMPACT_APPENDS_EVERY - 1:
-            try:
-                table.compact_appends(retries=1)
-            except CommitConflictError:
-                pass
-            _mark("compact_appends")
-        return {
-            "batch_id": batch_id,
-            "skipped": False,
-            "version": version,
-            "touched_buckets": len(touched),
-            "latency_ms": latency_ms,
-            "phases": phases,
-            "committed_at": datetime.now(timezone.utc).isoformat(),
-        }
-    finally:
-        for _c in _caches:
-            try:
-                _c.unpersist()
-            except Exception:
-                pass
+    _mark("plan_build")
+    version = table.overwrite_buckets(
+        new_data,
+        touched,
+        epoch_source=epoch_source,
+        epoch=batch_id,
+        new_schema=evolved,
+        appends=_appends,
+        # revalidation parent = the snapshot THIS batch's plan read at its
+        # top (bucket pruning, stored rows, epochs all came from it)
+        parent_version=m["version"],
+    )
+    _mark("commit_write")
+    # periodic fold (COMPACT_APPENDS_EVERY) in its own atomic commit: a
+    # crash between the two commits loses only the fold, never data.  The
+    # fold is COSMETIC: losing a CAS to a concurrent maintenance job
+    # (compact/expire between the data commit above and here) must not kill
+    # the streaming query — absorb one conflict with a fresh re-plan, and if
+    # the table is racing that hard this trigger just skips; the next
+    # scheduled batch folds everything anyway.
+    if batch_id % COMPACT_APPENDS_EVERY == COMPACT_APPENDS_EVERY - 1:
+        try:
+            table.compact_appends(retries=1)
+        except CommitConflictError:
+            pass
+        _mark("compact_appends")
+    return {
+        "batch_id": batch_id,
+        "skipped": False,
+        "version": version,
+        "touched_buckets": len(touched),
+        "latency_ms": latency_ms,
+        "phases": phases,
+        "committed_at": datetime.now(timezone.utc).isoformat(),
+    }

@@ -193,6 +193,92 @@ def bucket_partitioned(df: DataFrame, buckets) -> DataFrame:
     return df.repartitionById(n_parts, pid)
 
 
+#: What a data write hands back to the driver: one row per file written.
+_WRITTEN_FILES = T.StructType([
+    T.StructField("bucket", T.IntegerType(), False),
+    T.StructField("path", T.StringType(), False),
+    T.StructField("rows", T.LongType(), False),
+])
+
+#: Row bytes one write task buffers before it writes every buffered bucket
+#: as a row group: the task's Python memory stays bounded whatever its
+#: partition's size or bucket count.
+_WRITE_BUFFER_BYTES = 64 << 20
+
+
+def _bucket_writer(d: str, cols: list[str]):
+    """The ``mapInArrow`` body of :meth:`LakeTable._write_buckets`: stream
+    each bucket of a partition's rows to its own zstd parquet file under
+    ``d`` (columns ``cols``; ``_bucket`` and ``_src`` are not written) and
+    yield one ``_WRITTEN_FILES`` row per file.
+
+    Rows with ``_src`` = 0 get ``text`` extracted from ``html`` in the same
+    pass (``apply_batch``'s batch winners); other rows keep the ``text``
+    they carry.  A task keeps one file open per bucket it holds until its
+    input ends.  File names are uuids, so a retried task's files never
+    collide with its failed attempt's: only the paths the driver collects
+    are committed, and :meth:`LakeTable.remove_orphans` reclaims the rest.
+    pyarrow writes timestamps as int64 UTC micros with footer min/max, what
+    the manifest's column stats read."""
+
+    def _write(it):
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        from ..functions.html import extract_text_arrow
+        from ..session import forget_zip_importers
+
+        forget_zip_importers()  # the next task's worker set-up stays cheap
+        files: dict = {}  # bucket -> [ParquetWriter, path, rows]
+        held: dict = {}   # bucket -> record batches not yet written
+        held_bytes = 0
+
+        def _flush():
+            for b, parts in held.items():
+                if b not in files:
+                    path = os.path.join(d, f"{b:05d}-{uuid.uuid4().hex}.parquet")
+                    files[b] = [pq.ParquetWriter(path, parts[0].schema, compression="zstd"), path, 0]
+                files[b][0].write_table(pa.Table.from_batches(parts))
+                files[b][2] += sum(p.num_rows for p in parts)
+            held.clear()
+
+        os.makedirs(d, exist_ok=True)
+        for batch in it:
+            if batch.num_rows == 0:
+                continue
+            arrays = {c: batch.column(c) for c in cols}
+            if "_src" in batch.schema.names:
+                fresh = pc.equal(batch.column("_src"), 0)
+                if pc.any(fresh).as_py():
+                    html = pc.if_else(fresh, arrays["html"], pa.scalar(None, arrays["html"].type))
+                    text = extract_text_arrow(html).cast(arrays["text"].type)
+                    arrays["text"] = pc.if_else(fresh, text, arrays["text"])
+            # one stable sort by bucket, then a zero-copy slice per bucket
+            order = pc.sort_indices(batch.column("_bucket"))
+            rows = pa.RecordBatch.from_arrays([arrays[c] for c in cols], names=cols).take(order)
+            ids = batch.column("_bucket").take(order).to_numpy()
+            starts = np.flatnonzero(np.diff(ids, prepend=-1))
+            for s, e in zip(starts, [*starts[1:], len(ids)]):
+                held.setdefault(int(ids[s]), []).append(rows.slice(s, e - s))
+            held_bytes += rows.nbytes
+            if held_bytes > _WRITE_BUFFER_BYTES:
+                _flush()
+                held_bytes = 0
+        _flush()
+        for w, _path, _n in files.values():
+            w.close()
+        if files:
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(list(files), pa.int32()),
+                 pa.array([f[1] for f in files.values()], pa.string()),
+                 pa.array([f[2] for f in files.values()], pa.int64())],
+                names=["bucket", "path", "rows"],
+            )
+
+    return _write
+
+
 class LakeTable:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
@@ -696,63 +782,42 @@ class LakeTable:
         return [path]
 
     @staticmethod
-    def _parquet_files(d: str, subdir: str | None = None) -> list[str]:
-        base = os.path.join(d, subdir) if subdir else d
-        if not os.path.isdir(base):
+    def _parquet_files(d: str) -> list[str]:
+        if not os.path.isdir(d):
             return []
-        return sorted(
-            os.path.join(base, f)
-            for f in os.listdir(base)
-            if f.endswith(".parquet")
-        )
+        return sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
 
     def _write_buckets(
-        self,
-        df: DataFrame,
-        m: dict,
-        n_buckets: int,
-        buckets,
-        tag: str,
-        pre_partitioned: bool = False,
+        self, df: DataFrame, m: dict, n_buckets: int, buckets, tag: str
     ) -> dict[int, list[str]]:
         """THE bucketed file layout: write ``df`` (rows of ``buckets`` of
         ``bucket_expr(key, n_buckets)`` only, ``key`` from manifest ``m``)
-        under a fresh data dir, one ``_bucket=<id>`` directory per bucket,
-        and return ``{bucket: files}``.
+        under a fresh data dir, one file per bucket, and return ``{bucket:
+        files}``.
 
-        Whole buckets are placed on partitions first
-        (:func:`bucket_partitioned`, skipped when ``pre_partitioned`` says
-        the caller already did) so each bucket is one file — without it
-        every task writes a sliver of every bucket, tasks x buckets tiny
-        files.  The table's ``sort_cols`` sort within partitions only — no
-        extra shuffle; it tightens row-group stats so pushed predicates skip
+        One ``mapInArrow`` (:func:`_bucket_writer`) writes the files with
+        pyarrow and returns their paths, which the caller commits: no Spark
+        file writer, commit protocol, staging dir or listing of the dir.  A
+        frame that already carries ``_bucket`` must hold each bucket whole
+        in one partition (``apply_batch``'s merge ends in a hash exchange on
+        it); any other frame is tagged and placed here
+        (:func:`bucket_partitioned`).  A ``_src`` column marks the rows
+        whose ``text`` the writer derives from ``html`` (``_src`` = 0).  The
+        table's ``sort_cols`` sort within partitions only — no extra
+        shuffle; it tightens row-group stats so pushed predicates skip
         within files."""
         d = os.path.join(self.root, "data", f"{tag}-{uuid.uuid4().hex[:12]}")
-        tagged = df.withColumn("_bucket", bucket_expr(m["key"], n_buckets))
-        if not pre_partitioned:
-            tagged = bucket_partitioned(tagged, buckets)
+        if "_bucket" not in df.columns:
+            df = bucket_partitioned(df.withColumn("_bucket", bucket_expr(m["key"], n_buckets)), buckets)
         if m.get("sort_cols"):
-            tagged = tagged.sortWithinPartitions("_bucket", *m["sort_cols"])
-        tagged.write.mode("overwrite").partitionBy("_bucket").parquet(d)
-        # one listdir of the dir instead of one per bucket: 128+ buckets =
-        # 128 serial listdir calls (~100ms of commit tail)
+            df = df.sortWithinPartitions("_bucket", *m["sort_cols"])
+        cols = [c for c in df.columns if c not in ("_bucket", "_src")]
+        written = df.mapInArrow(_bucket_writer(d, cols), _WRITTEN_FILES).toArrow()
         by_bucket: dict[int, list[str]] = {}
-        if os.path.isdir(d):
-            for sub in os.listdir(d):
-                if sub.startswith("_bucket="):
-                    by_bucket[int(sub.split("=", 1)[1])] = self._parquet_files(d, sub)
+        for b, path in sorted(zip(written.column("bucket").to_pylist(),
+                                  written.column("path").to_pylist())):
+            by_bucket.setdefault(b, []).append(path)
         return by_bucket
-
-    def _ensure_stats_friendly_writes(self, stats_cols: list[str]) -> None:
-        """Stats tables need footer min/max on every recorded column:
-        INT96 timestamps (Spark's legacy parquet encoding) carry none, so
-        flip the session to TIMESTAMP_MICROS before writing.  Session-wide
-        and sticky by design — MICROS is the non-deprecated encoding and
-        reads back identically."""
-        if stats_cols:
-            self.spark.conf.set(
-                "spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS"
-            )
 
     def _data_entry(self, path: str, sid: int, stats_cols: list[str]) -> dict:
         e = {"path": path, "schema_id": sid}
@@ -770,26 +835,22 @@ class LakeTable:
         epoch: int | None = None,
         new_schema: T.StructType | None = None,
         appends=None,
-        pre_partitioned: bool = False,
         parent_version: int | None = None,
     ) -> int:
         """Copy-on-write commit: replace the file groups of ``touched_buckets``
         with ``new_data`` (which must contain only rows of those buckets),
         carry everything else forward, attach appended tombstone/lineage
         files, record the commit epoch — all in one atomic manifest flip.
-
-        ``pre_partitioned=True`` asserts the caller already put each bucket
-        of ``bucket_expr(key, n_buckets)`` whole in one partition (the fused
-        bulk apply path by :func:`bucket_partitioned`, the merge by a hash
-        exchange on the bucket); the write then skips its own exchange — no
-        second payload shuffle.
+        ``new_data`` is written by :meth:`_write_buckets`: a frame that
+        carries ``_bucket`` is written as it is placed, with no exchange of
+        its own.
 
         ``appends``, when given, is called once the data files are written
         and before the flip; it returns ``{"tombstone_files": [...],
         "lineage_files": [...]}``, files it has already written (e.g. by
         :meth:`write_append`), which the flip attaches to those branches.
         Called after the write, it can record what the write cost.  The
-        data write is the only Spark job here.
+        data write is the only Spark query here.
 
         ``parent_version`` names the snapshot this commit's plan was built
         against (a caller that read the manifest earlier passes it down);
@@ -801,7 +862,6 @@ class LakeTable:
         if parent_version is None:
             parent_version = m["version"]
         stats_cols = m.get("stats_cols") or []
-        self._ensure_stats_friendly_writes(stats_cols)
 
         if new_schema is not None and new_schema.json() != m["schemas"][str(m["current_schema_id"])]:
             sid = max(int(k) for k in m["schemas"]) + 1
@@ -809,9 +869,7 @@ class LakeTable:
             m["current_schema_id"] = sid
         sid = m["current_schema_id"]
 
-        by_bucket = self._write_buckets(
-            new_data, m, m["n_buckets"], touched_buckets, "c", pre_partitioned=pre_partitioned
-        )
+        by_bucket = self._write_buckets(new_data, m, m["n_buckets"], touched_buckets, "c")
         for b in touched_buckets:
             files = by_bucket.get(b, [])
             m["buckets"][str(b)] = [self._data_entry(p, sid, stats_cols) for p in files]
@@ -855,7 +913,6 @@ class LakeTable:
         ):
             return m["version"]
         nb = m["n_buckets"]
-        self._ensure_stats_friendly_writes(m.get("stats_cols") or [])
         by_bucket = self._write_buckets(new_data, m, nb, range(nb), "a")
         # stats are a property of the (immutable) files: compute once,
         # reuse across CAS retries
@@ -949,7 +1006,6 @@ class LakeTable:
             parent = m["version"]
             data = self.read()
             sid = m["current_schema_id"]
-            self._ensure_stats_friendly_writes(m.get("stats_cols") or [])
             by_bucket = self._write_buckets(
                 data, m, new_n_buckets, range(new_n_buckets), "r"
             )

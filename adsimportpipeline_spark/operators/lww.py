@@ -295,10 +295,9 @@ def lww_dedup_semi(
     (rows sharing (key, order_cols) are identical payloads by the log's
     offset-uniqueness, so any winner among them is THE winner).
 
-    Callers that already need a payload shuffle downstream (e.g. the bulk
-    apply path repartitioning by storage bucket) should take
+    Callers that already need a payload shuffle downstream should take
     :func:`lww_winner_rows` and fold the duplicate-collapse into that
-    shuffle instead of paying this one — see ``apply._bulk_upserts``.
+    shuffle instead of paying this one.
     """
     matched = lww_winner_rows(
         df,

@@ -128,7 +128,6 @@ def get_spark(
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.executor.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
-        .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
         # PySpark's per-call origin capture (pyspark/errors/utils.py
         # _with_origin) wraps every functions.* call in py4j round trips:
         # look up the active session, read a conf, capture the Python call

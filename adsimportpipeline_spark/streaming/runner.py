@@ -18,42 +18,27 @@ from ..lake.table import LakeTable
 from ..sources.changelog import stream_change_log
 
 
-def _apply_and_maintain_index(table, index, batch_df, batch_id, **apply_kwargs):
-    """apply_batch + incremental LSH index maintenance.  The applied-upserts
-    frame apply_batch materializes (``keep_applied`` — text extracted
-    exactly once, shared with the write job) feeds the index at O(batch)
-    cost; the epoch no-op re-delivery (crash between the table and index
-    commits) falls back to reading the applied rows back from the committed
-    table.  The persisted frame's lifetime covers apply_batch itself, so a
-    commit that raises AFTER the persist (e.g. CommitConflictError) cannot
-    leak pinned storage.
-
-    Negative result, kept so nobody re-runs it: feeding the index from the
-    read-back (:func:`applied_winner_texts`) on every batch, with no
-    ``keep_applied``, made no code simpler.  LSH-index replay of a
-    12 k-event / 1.2 k-url log in 10 files, one file per trigger, 8
-    buckets, ``local[4]`` on 4 vCPUs, 7 alternating pairs: per-batch p50
-    within noise (median 4.41 s with the read-back, 4.46 s without), 24
-    Spark jobs per batch instead of 22, and the first (bulk) batch slower
-    (median 10.27 s instead of 9.40 s)."""
+def _apply_and_maintain_index(table, index, batch_df, batch_id):
+    """apply_batch + incremental LSH index maintenance.  The index is fed
+    the rows the batch left in the table, read back from its committed
+    buckets (:func:`applied_winner_texts`): text is extracted inside the
+    data write, so no frame of the apply carries it.  The same read-back
+    covers the epoch no-op re-delivery (a crash between the table and index
+    commits).  The applied rows were once persisted by the apply and handed
+    over instead: 14 Spark jobs per warm 400-event batch against 10, for a
+    per-batch p50 within noise (LSH-index replay of a 12 k-event / 1.2
+    k-url log in 10 files, one file per trigger, 8 buckets, ``local[4]`` on
+    4 vCPUs, 7 alternating pairs: median 4.46 s handed over, 4.41 s read
+    back)."""
     from ..operators.incremental_dedup import (
         applied_winner_texts,
         update_lsh_index,
     )
 
-    ka: list = [] if index is not None else None
-    try:
-        stats = apply_batch(table, batch_df, batch_id, keep_applied=ka, **apply_kwargs)
-        if index is not None:
-            if ka:
-                applied = ka[0].select("url", "warc_ts", "log_offset", "text")
-            else:
-                applied = applied_winner_texts(table, batch_df)
-            update_lsh_index(index, applied, batch_id)
-        return stats
-    finally:
-        for c in ka or []:
-            c.unpersist()
+    stats = apply_batch(table, batch_df, batch_id)
+    if index is not None:
+        update_lsh_index(index, applied_winner_texts(table, batch_df), batch_id)
+    return stats
 
 
 def run_replay(
@@ -62,7 +47,6 @@ def run_replay(
     table_root: str,
     checkpoint: str,
     max_files_per_trigger: int | None = 8,
-    salted: bool = False,
     available_now: bool = True,
     collect_stats: list | None = None,
     lsh_index_root: str | None = None,
@@ -92,9 +76,7 @@ def run_replay(
         index = create_lsh_index(spark, lsh_index_root)
 
     def _apply(batch_df, batch_id):
-        stats = _apply_and_maintain_index(
-            table, index, batch_df, batch_id, salted=salted
-        )
+        stats = _apply_and_maintain_index(table, index, batch_df, batch_id)
         if collect_stats is not None:
             collect_stats.append(stats)
 

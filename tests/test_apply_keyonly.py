@@ -1,9 +1,9 @@
-"""The populated-table apply path: one bucket-keyed LWW merge over batch ∪
-stored rows ∪ tombstones decides which events apply.  Each case is checked
-against ``replay_oracle`` (a pure-Python global LWW over everything
-delivered), plus the applied-rows frame ``keep_applied`` hands back, which
-shows what the batch actually applied rather than only what the table ends
-up holding."""
+"""The apply path: one bucket-keyed LWW merge over batch ∪ stored rows ∪
+tombstones decides which events apply.  Each case is checked against
+``replay_oracle`` (a pure-Python global LWW over everything delivered),
+plus the rows the batch's commit inserted or updated (``read_changes``),
+which shows what the batch actually applied rather than only what the
+table ends up holding."""
 
 from __future__ import annotations
 
@@ -33,17 +33,15 @@ def _ev(url: str, ts: int, off: int, op: str = "update", body: str = "") -> dict
     }
 
 
-def _apply(spark, table, rows: list[dict], batch_id: int, **kw) -> list:
-    """apply_batch one hand-written batch; returns the applied upserts
-    as (url, log_offset) pairs."""
-    ka: list = []
-    try:
-        apply_batch(table, spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA), batch_id,
-                    keep_applied=ka, **kw)
-        return sorted((r.url, r.log_offset) for r in ka[0].collect()) if ka else []
-    finally:
-        for c in ka:
-            c.unpersist()
+def _apply(spark, table, rows: list[dict], batch_id: int) -> list:
+    """apply_batch one hand-written batch; returns the applied upserts as
+    (url, log_offset) pairs: the rows its commit inserted or updated.  An
+    applied event is strictly newer than the row it replaces, so its row
+    always differs from the stored one."""
+    before = table.current_version()
+    apply_batch(table, spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA), batch_id)
+    changes = table.read_changes(before).filter(F.col("_change_type") != "delete")
+    return sorted((r.url, r.log_offset) for r in changes.collect())
 
 
 def _rows(table) -> list[tuple]:
@@ -115,23 +113,22 @@ def test_delete_only_batch_empties_its_bucket(spark, tmp_path):
     assert table.manifest()["buckets"]["0"] == []
 
 
-def test_salted_matches_plain_path(spark, tmp_path):
-    """Both ways into the LWW merge give one table: the plain path and
-    ``salted=True`` (two-phase argmax)."""
-    spec = GenSpec(n_events=1500, n_urls=100, seed=5)
-    events = [r.asDict() for r in generate_change_log(spark, spec).collect()]
-    batches = [[e for e in events if lo <= e["log_offset"] < lo + 500]
-               for lo in (0, 500, 1000)]
+def test_stored_text_survives_a_bucket_rewrite(spark, tmp_path):
+    """Text is extracted for batch winners only: a stored row whose ``text``
+    is not ``extract_text_str(html)`` keeps it byte for byte when a batch
+    rewrites its bucket, and the batch's own row gets the extracted text."""
+    from adsimportpipeline_spark.functions.html import extract_text_str
 
-    tables = {}
-    for mode in ("plain", "salted"):
-        table = LakeTable.create(spark, str(tmp_path / mode), PAGES_SCHEMA, n_buckets=8)
-        for i, rows in enumerate(batches):
-            df = spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA)
-            apply_batch(table, df, i, salted=(mode == "salted"))
-        tables[mode] = table
-    _assert_matches_oracle(tables["plain"], events)
-    assert _rows(tables["salted"]) == _rows(tables["plain"])
+    table = LakeTable.create(spark, str(tmp_path / "t"), PAGES_SCHEMA, n_buckets=1)
+    stored = _ev("kept", 10, 0)
+    stored.pop("op")
+    text = " stored\u00a0text ≠ extract(html)\n\t"
+    assert text != extract_text_str(stored["html"])
+    table.overwrite_buckets(spark.createDataFrame([{**stored, "text": text}], PAGES_SCHEMA), [0])
+    assert _apply(spark, table, [_ev("new", 20, 1)], 0) == [("new", 1)]
+    got = {r.url: r.text for r in table.read().collect()}
+    assert got["kept"].encode() == text.encode()
+    assert got["new"] == extract_text_str(_ev("new", 20, 1)["html"])
 
 
 def test_uncollected_deletes_take_the_spark_append(spark, tmp_path, monkeypatch):
@@ -178,10 +175,11 @@ def test_uncollected_deletes_take_the_spark_append(spark, tmp_path, monkeypatch)
 #: applied rows.
 MAX_APPLY_JOBS = 4
 
-#: The same for a bulk apply into a fresh table (the fused path: collect 2,
-#: winner rows and data write 4); 11 with the Spark-written audit and
-#: lineage.
-MAX_BULK_APPLY_JOBS = 6
+#: The same for a bulk apply into a fresh table, which runs the same merge:
+#: the collect and the data write, 2 jobs each.  It launched 6 on a path of
+#: its own (key-only LWW aggregate, winner join, extract, Spark parquet
+#: write), and 11 with the Spark-written audit and lineage.
+MAX_BULK_APPLY_JOBS = 4
 
 
 def _jobs_of(spark, fn) -> int:

@@ -1,8 +1,9 @@
-"""Bucket placement: ``bucket_partitioned`` puts each touched bucket whole on
-one of ``min(len(buckets), defaultParallelism)`` partitions, none empty, and
-the fused bulk apply's extract+write stage runs with exactly that many
-tasks.  The populated-table apply writes through one bucket-keyed merge
-exchange, with no broadcast and no join."""
+"""Bucket placement: ``bucket_partitioned`` puts each bucket whole on one
+of ``min(len(buckets), defaultParallelism)`` partitions, none empty (the
+data write places any frame that comes without ``_bucket`` this way).
+Every ``apply_batch`` writes through one bucket-keyed merge exchange, with
+no broadcast and no join, and its one Python pass writes one file per
+touched bucket."""
 
 from __future__ import annotations
 
@@ -45,50 +46,22 @@ def test_bucket_partitioned_places_whole_buckets(spark, buckets):
     assert set().union(*pid_of.values()) == set(range(n_parts))
 
 
-def _python_write(spark, executions_before: int):
-    """The one SQL execution since ``executions_before`` that runs the
-    Arrow extract: the data write."""
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    writes = [
-        execs.apply(i)
-        for i in range(executions_before, execs.size())
-        if "MapInArrow" in execs.apply(i).physicalPlanDescription()
-    ]
+def _apply_executions(spark, fn) -> list:
+    """The SQL executions ``fn()`` runs, from the status store."""
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList
+    bus.waitUntilEmpty()
+    before = execs().size()
+    fn()
+    bus.waitUntilEmpty()
+    return [execs().apply(i) for i in range(before, execs().size())]
+
+
+def _python_write(executions):
+    """The one execution that runs a Python node: the data write."""
+    writes = [e for e in executions if "MapInArrow" in e.physicalPlanDescription()]
     assert len(writes) == 1, [w.description() for w in writes]
     return writes[0]
-
-
-def _stage_tasks_of_python_write(spark, executions_before: int) -> int:
-    """Task count of the result stage of the data write that runs the
-    fused Arrow extract, read from the SQL and job status stores."""
-    sc = spark.sparkContext
-    to_java = sc._jvm.scala.jdk.javaapi.CollectionConverters.asJava
-    last_job = max(to_java(_python_write(spark, executions_before).jobs()).keySet())
-    result_stage = max(sc.statusTracker().getJobInfo(last_job).stageIds)
-    return sc.statusTracker().getStageInfo(result_stage).numTasks
-
-
-def test_bulk_apply_extract_write_runs_one_task_per_bucket_group(spark, tmp_path):
-    """A warm bulk apply into an empty 8-bucket table: the extract+write
-    stage runs min(8, cores) tasks (a hash exchange at 4 x cores ran 32 under
-    local[8], most of them empty), and each bucket gets exactly one data file."""
-    log = str(tmp_path / "log")
-    generate_change_log(spark, GenSpec(n_events=3000, n_urls=300, seed=9)).write.parquet(log)
-    ev = spark.read.parquet(log)
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    store = spark._jsparkSession.sharedState().statusStore()
-    # the first apply is warm-up (python workers, codegen)
-    for run in ("cold", "warm"):
-        table = LakeTable.create(spark, str(tmp_path / run), PAGES_SCHEMA, n_buckets=8)
-        bus.waitUntilEmpty()
-        before = store.executionsList().size()
-        apply_batch(table, ev, 0)
-        bus.waitUntilEmpty()
-    n_tasks = _stage_tasks_of_python_write(spark, before)
-    assert n_tasks == min(8, spark.sparkContext.defaultParallelism)
-    buckets = table.manifest()["buckets"]
-    assert sorted(int(b) for b in buckets) == list(range(8))
-    assert all(len(files) == 1 for files in buckets.values()), buckets
 
 
 def _final_plan_nodes(plan: str) -> list[tuple[int, str]]:
@@ -103,32 +76,109 @@ def _final_plan_nodes(plan: str) -> list[tuple[int, str]]:
     return nodes
 
 
+def _touched(batch, n_buckets: int) -> set[int]:
+    return {r.b for r in batch.select(bucket_expr("url", n_buckets).alias("b")).distinct().collect()}
+
+
+def test_bulk_apply_writes_one_file_per_touched_bucket(spark, tmp_path):
+    """A bulk apply of a few hundred urls into an empty 64-bucket table,
+    with partition coalescing off so the write runs one task per shuffle
+    partition and each task holds several buckets: each touched bucket
+    still gets exactly one file, holding only that bucket's rows, and
+    untouched buckets get none."""
+    log = str(tmp_path / "log")
+    generate_change_log(spark, GenSpec(n_events=600, n_urls=40, seed=9)).write.parquet(log)
+    ev = spark.read.parquet(log)
+    table = LakeTable.create(spark, str(tmp_path / "t"), PAGES_SCHEMA, n_buckets=64)
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    was = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    try:
+        apply_batch(table, ev, 0)
+    finally:
+        spark.conf.set(coalesce, was)
+
+    touched = _touched(ev, 64)
+    live = _touched(table.read(), 64)  # a bucket whose urls all ended deleted has no rows
+    assert len(touched) < 64 and live <= touched
+    buckets = table.manifest()["buckets"]
+    assert {int(b) for b in buckets} == touched
+    assert {int(b) for b, files in buckets.items() if files} == live
+    assert all(len(buckets[str(b)]) == 1 for b in live), buckets
+    n_rows = 0
+    for b in live:
+        (entry,) = buckets[str(b)]
+        rows = spark.read.parquet(entry["path"]).select(bucket_expr("url", 64).alias("b"))
+        assert {r.b for r in rows.distinct().collect()} == {b}
+        n_rows += rows.count()
+    assert n_rows == table.read().count() > 0
+
+
 def test_incremental_apply_write_is_one_merge_exchange(spark, tmp_path):
-    """An apply into a populated 8-bucket table with tombstones: the
-    data write's final plan has exactly one Exchange (the bucket-keyed
-    merge), no broadcast and no join, the Arrow extract sits below that
-    exchange, and each touched bucket gets exactly one data file."""
+    """An apply into a fresh 8-bucket table, then one into the populated
+    table with tombstones: each data write is one SQL execution whose final
+    plan has exactly one Exchange (the bucket-keyed merge), no broadcast and
+    no join, and one MapInArrow above that exchange and none below it.  No
+    Spark file write runs, and each touched bucket gets exactly one data
+    file."""
     log = str(tmp_path / "log")
     generate_change_log(spark, GenSpec(n_events=3000, n_urls=300, seed=9)).write.parquet(log)
     ev = spark.read.parquet(log)
     table = LakeTable.create(spark, str(tmp_path / "t"), PAGES_SCHEMA, n_buckets=8)
-    apply_batch(table, ev.filter("log_offset < 2000"), 0)
-    assert table.manifest()["tombstone_files"], "tombstones must join the merge"
-    bus = spark.sparkContext._jsc.sc().listenerBus()
-    bus.waitUntilEmpty()
-    before = spark._jsparkSession.sharedState().statusStore().executionsList().size()
-    batch = ev.filter(F.col("log_offset").between(2000, 2499))
-    apply_batch(table, batch, 1)
-    bus.waitUntilEmpty()
+    batches = [ev.filter("log_offset < 2000"), ev.filter(F.col("log_offset").between(2000, 2499))]
+    for i, batch in enumerate(batches):
+        if i:
+            assert table.manifest()["tombstone_files"], "tombstones must join the merge"
+        executions = _apply_executions(spark, lambda: apply_batch(table, batch, i))
+        assert not [e for e in executions
+                    if "InsertIntoHadoopFsRelationCommand" in e.physicalPlanDescription()]
 
-    nodes = _final_plan_nodes(_python_write(spark, before).physicalPlanDescription())
-    names = [n for _, n in nodes]
-    assert names.count("Exchange") == 1, names
-    assert not [n for n in names if "BroadcastExchange" in n or "Join" in n], names
-    ex = names.index("Exchange")
-    arrow = names.index("MapInArrow")
-    assert arrow > ex and nodes[arrow][0] > nodes[ex][0], names
+        nodes = _final_plan_nodes(_python_write(executions).physicalPlanDescription())
+        names = [n for _, n in nodes]
+        assert names.count("Exchange") == 1, names
+        assert not [n for n in names if "BroadcastExchange" in n or "Join" in n], names
+        assert names.count("MapInArrow") == 1, names
+        ex = names.index("Exchange")
+        arrow = names.index("MapInArrow")
+        assert arrow < ex and nodes[arrow][0] < nodes[ex][0], names
 
-    touched = {r.b for r in batch.select(bucket_expr("url", 8).alias("b")).distinct().collect()}
-    buckets = table.manifest()["buckets"]
-    assert all(len(buckets[str(b)]) == 1 for b in touched), buckets
+        buckets = table.manifest()["buckets"]
+        assert all(len(buckets[str(b)]) == 1 for b in _touched(batch, 8)), buckets
+
+
+def test_writer_streams_buckets_in_bounded_row_groups(spark, tmp_path, monkeypatch):
+    """With a one-byte write buffer and 25-row Arrow batches, the writer
+    flushes every batch: each bucket's file holds many row groups, its rows
+    stay in the table's ``sort_cols`` order across them, and the table
+    holds exactly the rows written."""
+    import random
+    from datetime import datetime
+
+    import pyarrow.parquet as pq
+
+    from adsimportpipeline_spark.lake import table as table_mod
+
+    urls = [f"u{i:04d}" for i in range(400)]
+    random.Random(3).shuffle(urls)
+    rows = [(u, datetime(2024, 1, 1), i, b"<p>x</p>", f"text {u}", "en", "s", None)
+            for i, u in enumerate(urls)]
+    t = LakeTable.create(spark, str(tmp_path / "t"), PAGES_SCHEMA, n_buckets=4,
+                         sort_cols=["url"])
+    monkeypatch.setattr(table_mod, "_WRITE_BUFFER_BYTES", 1)
+    batch_rows = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    was = spark.conf.get(batch_rows)
+    spark.conf.set(batch_rows, "25")
+    try:
+        t.overwrite_buckets(spark.createDataFrame(rows, PAGES_SCHEMA), [0, 1, 2, 3])
+    finally:
+        spark.conf.set(batch_rows, was)
+
+    buckets = t.manifest()["buckets"]
+    assert all(len(files) == 1 for files in buckets.values()), buckets
+    for (entry,) in buckets.values():
+        f = pq.ParquetFile(entry["path"])
+        assert f.metadata.num_row_groups > 1
+        col = f.read(columns=["url"])["url"].to_pylist()
+        assert col == sorted(col)
+    got = sorted((r.url, r.log_offset, r.text) for r in t.read().collect())
+    assert got == sorted((u, i, f"text {u}") for u, _, i, _, _, _, _, _ in rows)

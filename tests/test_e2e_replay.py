@@ -106,7 +106,7 @@ def test_multi_batch_replay_matches_oracle(spark, tmp_path, events_and_oracle):
         batch = df.filter(
             (df.log_offset >= lo) & (df.log_offset < hi)
         )
-        apply_batch(table, batch, batch_id=i, salted=(i % 2 == 1))
+        apply_batch(table, batch, batch_id=i)
     _assert_state_matches(table, pages, tombs)
 
 

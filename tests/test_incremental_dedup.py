@@ -268,40 +268,3 @@ def test_streaming_replay_maintains_index(spark, tmp_path):
     )
     assert table.current_version() == tv
     assert index.current_version() == iv
-
-
-def test_keep_applied_equals_committed_readback(spark, tmp_path):
-    """apply_batch(keep_applied=[...]) hands back EXACTLY the rows the
-    commit applied — (url, warc_ts, log_offset, text) equal to the
-    committed table's read-back semi-joined on the batch (the O(table)
-    path it replaces in the runners) — on BOTH the fused fresh-table path
-    (batch 0) and the general stale-filter path (batch 1)."""
-    from adsimportpipeline_spark.operators.incremental_dedup import (
-        applied_winner_texts,
-    )
-
-    table = LakeTable.create(
-        spark, str(tmp_path / "pages"), PAGES_SCHEMA, n_buckets=8
-    )
-    for i, rows in enumerate(BATCHES[:2]):
-        batch = spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA)
-        ka: list = []
-        stats = apply_batch(table, batch, batch_id=i, keep_applied=ka)
-        assert not stats["skipped"] and len(ka) == 1
-        got = {
-            tuple(r)
-            for r in ka[0].select("url", "warc_ts", "log_offset", "text").collect()
-        }
-        want = {tuple(r) for r in applied_winner_texts(table, batch).collect()}
-        assert got == want and got  # non-empty on both paths
-        ka[0].unpersist()
-    # epoch no-op re-delivery: the cache is NOT built (runner falls back
-    # to the table read)
-    ka2: list = []
-    stats = apply_batch(
-        table,
-        spark.createDataFrame(BATCHES[0], CHANGE_EVENT_SCHEMA),
-        batch_id=0,
-        keep_applied=ka2,
-    )
-    assert stats["skipped"] and ka2 == []
