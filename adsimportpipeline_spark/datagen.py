@@ -23,7 +23,6 @@ expected final table state for equivalence asserts.
 from __future__ import annotations
 
 from dataclasses import dataclass
-from datetime import datetime, timezone
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -181,9 +180,3 @@ def replay_oracle(events: list[dict]) -> tuple[dict[str, dict], list[tuple]]:
             "fingerprint": ev["fingerprint"],
         }
     return pages, sorted(tombs)
-
-
-def to_utc_naive(dt: datetime) -> datetime:
-    if dt.tzinfo is not None:
-        return dt.astimezone(timezone.utc).replace(tzinfo=None)
-    return dt

@@ -19,7 +19,7 @@ expressions (codegen'd, no UDFs):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 #: F13 analog: lang code -> collection name (reference: PHY->physics etc.)
@@ -50,35 +50,6 @@ def joined_or_dash(arr: Column, sep: str = "; ") -> Column:
     return F.when(F.length(joined) > 0, joined).otherwise(F.lit("-"))
 
 
-def links_json(url_col: str, lang_col: str, n_tokens: Column) -> Column:
-    """Sorted-key JSON string per row (F11, solr_adapter.py:395-405)."""
-    return F.to_json(
-        F.struct(
-            F.col(lang_col).alias("lang"),
-            n_tokens.alias("tokens"),
-            F.col(url_col).alias("url"),
-        )
-    )
-
-
 def empty_to_null(c: Column) -> Column:
     """P6 guard: empty strings are dropped (null) in the output doc."""
     return F.when((c.isNotNull()) & (F.length(c) > 0), c)
-
-
-def adapt_output(pages: DataFrame) -> DataFrame:
-    """Project merged pages into the flat output document."""
-    from .textstats import token_count
-
-    toks = token_count("text")
-    facet0, facet1 = facet_hierarchy("lang", "source_origin")
-    return pages.select(
-        F.col("url"),
-        F.col("warc_ts"),
-        empty_to_null(F.col("text")).alias("text"),
-        lang_collection("lang").alias("collection"),
-        facet0.alias("lang_facet"),
-        facet1.alias("lang_source_facet"),
-        toks.alias("n_tokens"),
-        links_json("url", "lang", toks).alias("links_data"),
-    )

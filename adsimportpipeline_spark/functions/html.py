@@ -40,8 +40,6 @@ import re
 import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
-from pyspark.sql import Column
-from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.functions import pandas_udf
 
@@ -113,10 +111,6 @@ def _decode_utf8_arrow(arr: pa.Array) -> pa.Array:
         return pa.Array.from_pandas(s)
 
 
-def _decode_utf8(html: pd.Series) -> pa.Array:
-    return _decode_utf8_arrow(pa.Array.from_pandas(html, type=pa.binary()))
-
-
 def extract_text_arrow(arr: pa.Array) -> pa.Array:
     """Engine hot path, Arrow-in/Arrow-out: the whole chain runs as Arrow
     C++ kernels with NO pandas object materialization — the mapInArrow
@@ -142,12 +136,6 @@ def _extract_series(html: pd.Series) -> pd.Series:
 def html_to_text(html: pd.Series) -> pd.Series:
     """Arrow-batched binary->string extraction (the engine hot path)."""
     return _extract_series(html)
-
-
-def with_text(col: str | Column = "html") -> Column:
-    """Column expression: extracted text of an html binary column."""
-    c = F.col(col) if isinstance(col, str) else col
-    return html_to_text(c)
 
 
 def extract_text_sql(expr: str) -> str:

@@ -75,12 +75,6 @@ def _featurize_stacked(imgs: list[np.ndarray]) -> np.ndarray:
     return (vec / 255.0).astype(np.float32)
 
 
-def _feature_vec(img: np.ndarray) -> np.ndarray:
-    """Single-image feature — defined as the batched kernel on a batch of 1
-    so scalar oracle checks and the vectorized path agree bit-for-bit."""
-    return _featurize_stacked([img])[0]
-
-
 def _as_bytes(payloads: pd.Series) -> pd.Series:
     """None -> b'' without per-row python (pandas fillna is columnar)."""
     out = payloads.copy()

@@ -151,7 +151,3 @@ def portable_hash(expr: Column) -> Column:
     """63-bit deterministic hash computable identically in Spark and DuckDB:
     first 15 hex digits of md5 as a bigint."""
     return F.conv(F.substring(F.md5(expr), 1, 15), 16, 10).cast("long")
-
-
-def portable_hash_sql(expr: str) -> str:
-    return f"CAST(concat('0x', substr(md5({expr}), 1, 15)) AS BIGINT)"

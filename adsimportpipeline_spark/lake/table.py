@@ -61,6 +61,12 @@ class CommitConflictError(RuntimeError):
     and reclaimed by :meth:`LakeTable.remove_orphans`."""
 
 
+class _RescaleConflict(CommitConflictError):
+    """An append lost its CAS to a rescale: its files are bucketed under
+    the old geometry, so no re-plan of the same files can commit them and
+    :meth:`LakeTable._retrying` raises it at once."""
+
+
 def _stat_key(v):
     """JSON-encodable, order-preserving encoding of a column-stat value.
     Timestamps/dates become fixed-width ISO strings (lexicographic order =
@@ -494,11 +500,12 @@ class LakeTable:
             json.loads(m["schemas"][str(m["current_schema_id"])])
         )
 
-    def _read_file_groups(self, m: dict, entries: list[dict]) -> DataFrame | None:
-        """Read heterogeneous-schema file groups aligned to current schema."""
-        if not entries:
-            return None
+    def _read_file_groups(self, m: dict, entries: list[dict]) -> DataFrame:
+        """Read heterogeneous-schema file groups aligned to current schema
+        (an empty frame of that schema when there are none)."""
         target = self.schema(m)
+        if not entries:
+            return self.spark.createDataFrame([], target)
         by_sid: dict[int, list[str]] = {}
         for e in entries:
             by_sid.setdefault(e["schema_id"], []).append(e["path"])
@@ -514,18 +521,12 @@ class LakeTable:
     def read(self, version: int | None = None) -> DataFrame:
         m = self.manifest(version)
         entries = [e for es in m["buckets"].values() for e in es]
-        df = self._read_file_groups(m, entries)
-        if df is None:
-            return self.spark.createDataFrame([], self.schema(m))
-        return df
+        return self._read_file_groups(m, entries)
 
     def read_buckets(self, bucket_ids: list[int], m: dict | None = None) -> DataFrame:
         m = m or self.manifest()
         entries = [e for b in bucket_ids for e in m["buckets"].get(str(b), [])]
-        df = self._read_file_groups(m, entries)
-        if df is None:
-            return self.spark.createDataFrame([], self.schema(m))
-        return df
+        return self._read_file_groups(m, entries)
 
     def read_changes(
         self,
@@ -585,15 +586,15 @@ class LakeTable:
             if m_old["buckets"].get(b) != m_new["buckets"].get(b)
         )
 
-        def _state(m: dict, entries: list[dict]) -> DataFrame:
-            df = self._read_file_groups(m, entries)
-            return df if df is not None else self.spark.createDataFrame([], self.schema(m))
-
         old_df = align_to_schema(
-            _state(m_old, [e for b in changed for e in m_old["buckets"].get(b, [])]),
+            self._read_file_groups(
+                m_old, [e for b in changed for e in m_old["buckets"].get(b, [])]
+            ),
             target,
         )
-        new_df = _state(m_new, [e for b in changed for e in m_new["buckets"].get(b, [])])
+        new_df = self._read_file_groups(
+            m_new, [e for b in changed for e in m_new["buckets"].get(b, [])]
+        )
         cols = [f.name for f in target.fields]
         o = old_df.select(F.col(key).alias("_k"), F.struct(*cols).alias("_pre"))
         n = new_df.select(F.col(key).alias("_k"), F.struct(*cols).alias("_post"))
@@ -730,8 +731,6 @@ class LakeTable:
         m = m or self.manifest()
         kept, _total = self.plan_range(col, lo, hi, m)
         df = self._read_file_groups(m, kept)
-        if df is None:
-            return self.spark.createDataFrame([], self.schema(m))
         dt = df.schema[col].dataType  # lit cast: TIMESTAMP vs _NTZ columns
         if lo is not None:
             df = df.filter(F.col(col) >= F.lit(lo).cast(dt))
@@ -921,7 +920,8 @@ class LakeTable:
             b: [self._data_entry(p, m["current_schema_id"], stats_cols) for p in files]
             for b, files in by_bucket.items()
         }
-        for attempt in range(retries + 1):
+
+        def attempt() -> int:
             m = self.manifest()
             # a lost CAS against a RESCALE is not retryable: these files
             # were physically bucketed under pmod(key, nb) — re-attaching
@@ -929,7 +929,7 @@ class LakeTable:
             # make bucket-pruned reads miss their rows.  Raise regardless
             # of remaining retries; the caller must re-bucket and re-write.
             if m["n_buckets"] != nb:
-                raise CommitConflictError(
+                raise _RescaleConflict(
                     f"append planned under n_buckets={nb} but the table "
                     f"was rescaled to {m['n_buckets']}; re-bucket and retry"
                 )
@@ -947,12 +947,9 @@ class LakeTable:
                 m["committed_epochs"][epoch_source] = int(epoch)
             parent = m["version"]
             m["version"] = parent + 1
-            try:
-                return self._commit_manifest(m, parent_version=parent)
-            except CommitConflictError:
-                if attempt == retries:
-                    raise
-        raise AssertionError("unreachable")
+            return self._commit_manifest(m, parent_version=parent)
+
+        return self._retrying(attempt, retries)
 
     def compact(self, bucket_ids: list[int] | None = None, retries: int = 0) -> int:
         """Small-file compaction: rewrite each bucket's file group into a
@@ -966,18 +963,16 @@ class LakeTable:
         the losing attempt's data files are orphans until
         :meth:`remove_orphans`.  The default stays raise-on-conflict so an
         unexpected race is never silent."""
-        for attempt in range(retries + 1):
+
+        def attempt() -> int:
             m = self.manifest()
             ids = bucket_ids if bucket_ids is not None else [int(b) for b in m["buckets"]]
             data = self.read_buckets(ids, m)
-            try:
-                return self.overwrite_buckets(
-                    data, ids, new_schema=self.schema(m), parent_version=m["version"]
-                )
-            except CommitConflictError:
-                if attempt == retries:
-                    raise
-        raise AssertionError("unreachable")
+            return self.overwrite_buckets(
+                data, ids, new_schema=self.schema(m), parent_version=m["version"]
+            )
+
+        return self._retrying(attempt, retries)
 
     def rescale_buckets(self, new_n_buckets: int, retries: int = 0) -> int:
         """Change the table's bucket count — the growth path a 100 TB
@@ -1001,7 +996,8 @@ class LakeTable:
         and restarts per-bucket).  This local implementation rewrites in
         one job; the multiplicative property is what makes the same
         operation incremental on a real cluster."""
-        for attempt in range(retries + 1):
+
+        def attempt() -> int:
             m = self.manifest()
             parent = m["version"]
             data = self.read()
@@ -1016,12 +1012,9 @@ class LakeTable:
             }
             m["n_buckets"] = int(new_n_buckets)
             m["version"] = parent + 1
-            try:
-                return self._commit_manifest(m, parent_version=parent)
-            except CommitConflictError:
-                if attempt == retries:
-                    raise
-        raise AssertionError("unreachable")
+            return self._commit_manifest(m, parent_version=parent)
+
+        return self._retrying(attempt, retries)
 
     def compact_appends(self, retries: int = 0) -> int:
         """Fold the append-only tombstone/lineage branches — one file per
@@ -1037,7 +1030,8 @@ class LakeTable:
         ``retries`` follows :meth:`compact`'s contract: pass 1 from a
         scheduled maintenance job to absorb one lost CAS against a live
         streaming writer; default raises."""
-        for attempt in range(retries + 1):
+
+        def attempt() -> int:
             m = self.manifest()
             parent = m["version"]
             for branch, tag in (("tombstone_files", "tomb"), ("lineage_files", "lin")):
@@ -1051,13 +1045,27 @@ class LakeTable:
                     {"path": p, "schema_id": m["current_schema_id"]}
                     for p in self.write_append(df.repartition(1), f"{tag}c")
                 ]
-            m["version"] = m["version"] + 1
+            m["version"] = parent + 1
+            return self._commit_manifest(m, parent_version=parent)
+
+        return self._retrying(attempt, retries)
+
+    @staticmethod
+    def _retrying(attempt, retries: int) -> int:
+        """THE retry-on-conflict rule of every writer that takes
+        ``retries``: call ``attempt`` (which re-reads the current manifest,
+        re-plans and commits against it) again after each lost CAS, at most
+        ``retries`` times; the last :class:`CommitConflictError` raises.
+        A :class:`_RescaleConflict` raises at once.  A losing attempt's
+        data files are orphans until :meth:`remove_orphans`."""
+        for _ in range(retries):
             try:
-                return self._commit_manifest(m, parent_version=parent)
+                return attempt()
+            except _RescaleConflict:
+                raise
             except CommitConflictError:
-                if attempt == retries:
-                    raise
-        raise AssertionError("unreachable")
+                pass
+        return attempt()
 
     def expire_snapshots(self, keep_last: int = 2) -> list[int]:
         """Drop manifests older than the newest ``keep_last`` and delete
@@ -1066,35 +1074,15 @@ class LakeTable:
         growth of a long-lived table at the cost of time travel beyond
         ``keep_last`` versions."""
         current = self.current_version()
-        mdir = os.path.join(self.root, _MANIFEST_DIR)
-        # exact committed names only: a leftover 'vNNNNNNNN.json.tmp-*' from a
-        # crashed atomic write must neither duplicate a version nor be parsed
-        versions = sorted(
-            {
-                int(f[1:9])
-                for f in os.listdir(mdir)
-                if len(f) == 14 and f.startswith("v") and f.endswith(".json")
-                and f[1:9].isdigit()
-            }
-        )
+        versions = self._committed_versions()
         retained = [v for v in versions if v > current - keep_last]
         expired = [v for v in versions if v <= current - keep_last]
         live: set[str] = set()
         for v in retained:
-            m = self.manifest(v)
-            for es in m["buckets"].values():
-                live.update(e["path"] for e in es)
-            live.update(e["path"] for e in m["tombstone_files"])
-            live.update(e["path"] for e in m["lineage_files"])
+            live |= self._referenced_paths(self.manifest(v))
         # referenced-by-expired-only files are garbage
         for v in expired:
-            m = self.manifest(v)
-            dead: set[str] = set()
-            for es in m["buckets"].values():
-                dead.update(e["path"] for e in es)
-            dead.update(e["path"] for e in m["tombstone_files"])
-            dead.update(e["path"] for e in m["lineage_files"])
-            for p in dead - live:
+            for p in self._referenced_paths(self.manifest(v)) - live:
                 try:
                     os.remove(p)
                 except OSError:
@@ -1120,15 +1108,11 @@ class LakeTable:
         are pruned.  Returns the deleted paths."""
         import time as _time
 
-        mdir = os.path.join(self.root, _MANIFEST_DIR)
-        live: set[str] = set()
-        for f in os.listdir(mdir):
-            if len(f) == 14 and f.startswith("v") and f.endswith(".json") and f[1:9].isdigit():
-                m = self.manifest(int(f[1:9]))
-                for es in m["buckets"].values():
-                    live.update(os.path.realpath(e["path"]) for e in es)
-                live.update(os.path.realpath(e["path"]) for e in m["tombstone_files"])
-                live.update(os.path.realpath(e["path"]) for e in m["lineage_files"])
+        live = {
+            os.path.realpath(p)
+            for v in self._committed_versions()
+            for p in self._referenced_paths(self.manifest(v))
+        }
         cutoff = _time.time() - older_than_sec
         removed: list[str] = []
         data_root = os.path.join(self.root, "data")
@@ -1149,3 +1133,24 @@ class LakeTable:
                 except OSError:
                     pass
         return removed
+
+    def _committed_versions(self) -> list[int]:
+        """Every version with a committed manifest, ascending.  Exact
+        committed names only: a leftover 'vNNNNNNNN.json.tmp-*' from a
+        crashed atomic write must neither duplicate a version nor be
+        parsed."""
+        return sorted(
+            int(f[1:9])
+            for f in os.listdir(os.path.join(self.root, _MANIFEST_DIR))
+            if len(f) == 14 and f.startswith("v") and f.endswith(".json")
+            and f[1:9].isdigit()
+        )
+
+    @staticmethod
+    def _referenced_paths(m: dict) -> set[str]:
+        """Every file manifest ``m`` references: the bucket files, the
+        ``tombstone_files`` and the ``lineage_files``."""
+        paths = {e["path"] for es in m["buckets"].values() for e in es}
+        paths.update(e["path"] for e in m["tombstone_files"])
+        paths.update(e["path"] for e in m["lineage_files"])
+        return paths

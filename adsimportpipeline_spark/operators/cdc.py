@@ -72,8 +72,10 @@ def tombstone_guard(
     Scale note: the tombstone table grows without bound over the table's
     lifetime, so the join strategy is deliberately left to Catalyst/AQE —
     it broadcasts only when the aggregated per-key max is actually small.
-    Callers that can bound the tombstone side (e.g. the apply path prunes
-    tombstones to the batch's touched buckets) should do so before calling.
+    Callers that can bound the tombstone side (e.g. to the tombstones of
+    the buckets a batch touches) should do so before calling.
+    ``apply_batch`` does not call it: its bucket-keyed merge takes each
+    url's tombstones into the same LWW max as the batch and stored rows.
     """
     ts, off = order_cols
     latest = tombstones.groupBy(key).agg(

@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..functions.textstats import content_fingerprint, portable_hash
+from ..functions.textstats import portable_hash
 
 
 def normalize_words(col: str = "text"):
@@ -53,21 +53,6 @@ def fan_out_narrow_scan(df: DataFrame) -> DataFrame:
     if nparts * 4 <= target:
         return df.repartition(target)
     return df
-
-
-def exact_duplicates(df: DataFrame, id_col: str = "doc_id", text_col: str = "text") -> DataFrame:
-    """Groups of byte-equal (normalized) documents: fingerprint -> member ids.
-    Returns one row per duplicated fingerprint with the sorted member list."""
-    fp = content_fingerprint(text_col).alias("fingerprint")
-    return (
-        df.select(fp, F.col(id_col))
-        .groupBy("fingerprint")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sort_array(F.collect_list(id_col)).alias("doc_ids"),
-        )
-        .filter(F.col("n_docs") > 1)
-    )
 
 
 def word_shingles(df: DataFrame, id_col: str = "doc_id", text_col: str = "text", n: int = 3) -> DataFrame:
@@ -452,8 +437,8 @@ def embedding_near_dups(
         )
     # fan out the (often single-split) left side so the O(n^2) comparison
     # loop parallelizes, and compute each side's norm once per row instead
-    # of once per pair (same expression/multiply order as cosine_expr —
-    # bit-identical results)
+    # of once per pair (same expression/multiply order as
+    # dot_expr / (norm_expr * norm_expr) — bit-identical results)
     a = fan_out_narrow_scan(df).select(
         F.col(id_col).alias("id_a"),
         F.col(vec_col).alias("va"),
@@ -540,7 +525,7 @@ def embedding_near_dups_lsh(
     # attach time instead of once per candidate pair side (the norm is a
     # 64-element interpreted fold — per-pair it dominated the verify CPU).
     # Same expression on the same values in the same multiply order, so
-    # cosine stays bit-identical to cosine_expr.
+    # cosine stays bit-identical to dot_expr / (norm_expr * norm_expr).
     vecs = df.select(
         F.col(id_col), F.col(vec_col), norm_expr(vec_col).alias("_n")
     )

@@ -44,7 +44,7 @@ from ..functions.html import html_to_text
 from ..lake.table import CommitConflictError, LakeTable, bucket_expr
 from ..schema import OP_DELETE
 from .dedup import _banded_buckets, minhash_signatures, word_shingles
-from .lww import lww_dedup_semi
+from .lww import lww_dedup
 
 #: index row = one (band bucket, url version); the (warc_ts, log_offset)
 #: pair is the LWW identity the validity join matches against the pages
@@ -78,10 +78,11 @@ def batch_winner_texts(batch_df: DataFrame, key: str = "url") -> DataFrame:
     """(url, warc_ts, log_offset, text) for the batch's LWW-winning upserts.
 
     Standalone helper for callers that run the index beside — not inside —
-    the main apply (the integration test threads apply_batch's own winners
-    through instead; extraction here uses the same vectorized UDF, so the
-    signatures are identical either way)."""
-    winners = lww_dedup_semi(batch_df, key, unique_order_col="log_offset")
+    the main apply: it derives the winners from the raw batch alone, without
+    reading the table (the index tests use it this way).  Extraction uses
+    the same vectorized UDF as the apply, so a winner the apply stores
+    signs identically either way."""
+    winners = lww_dedup(batch_df, key)
     return (
         winners.filter(F.col("op") != OP_DELETE)
         .select(
@@ -311,7 +312,8 @@ def compact_lsh_index(
     collapse).  The index's analog of the main table's copy-on-write — run
     it on the compaction schedule, not per batch.  ``retries`` follows
     :meth:`LakeTable.compact`'s contract against a live streaming writer."""
-    for attempt in range(retries + 1):
+
+    def attempt() -> int:
         m = index.manifest()
         ids = [int(b) for b in m["buckets"]]
         live = (
@@ -323,11 +325,8 @@ def compact_lsh_index(
             )
             .distinct()
         )
-        try:
-            return index.overwrite_buckets(
-                live, ids, new_schema=index.schema(m), parent_version=m["version"]
-            )
-        except CommitConflictError:
-            if attempt == retries:
-                raise
-    raise AssertionError("unreachable")
+        return index.overwrite_buckets(
+            live, ids, new_schema=index.schema(m), parent_version=m["version"]
+        )
+
+    return index._retrying(attempt, retries)

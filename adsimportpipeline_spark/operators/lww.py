@@ -170,42 +170,31 @@ def lww_dedup_salted(
     return lww_dedup(pre, key=key, order_cols=order_cols)
 
 
-def bounded_broadcast(
-    small: DataFrame,
-    bound: int | None,
-    cleanup: list | None = None,
-) -> DataFrame:
+def bounded_broadcast(small: DataFrame) -> DataFrame:
     """THE broadcast rule for the small side of an LWW join: hint a
-    broadcast iff an upper bound on its row count fits the budget
+    broadcast iff its row count fits the budget
     (:func:`_offset_broadcast_cap_rows` of :data:`BROADCAST_MAX_KEYS`),
     else a shuffled hash join.
 
-    ``bound`` is the cheapest bound the caller has — the batch row count the
-    apply path's touched-bucket job returns, or parquet footer arithmetic.
-    When it is unknown or does not fit, the frame is persisted and counted
-    (one narrow scan: the count's materialization IS the relation the join
-    consumes) and the exact count decides; the broadcast exchange then
-    collects from the cache JVM-side.  (Collecting the offsets to the driver
-    as Arrow and re-creating a local DataFrame instead left every core idle
-    for >1 s per batch at 4 cores.)  ``cleanup`` gets the persisted
-    frame for the caller to unpersist after its job; without one the cache
-    is dropped at once (the plan keeps the lineage; worst case re-agg).
-    Deferring the choice to AQE instead would be too late — AQE submits both
-    shuffle stages of a sort-merge join before converting it, so the full
-    payload shuffle gets WRITTEN even when the runtime stats would have
-    chosen broadcast (measured: an avoidable 1.3 GB write + read per
+    The frame is persisted and counted, and the exact count decides.  The
+    cache is dropped right after the count (the plan keeps the lineage;
+    worst case the join re-runs the narrow aggregate).  (Collecting the
+    offsets to the driver as Arrow and re-creating a local DataFrame
+    instead left every core idle for >1 s per batch at 4 cores.)
+    Deferring the choice to AQE instead would be too late — AQE submits
+    both shuffle stages of a sort-merge join before converting it, so the
+    full payload shuffle gets WRITTEN even when the runtime stats would
+    have chosen broadcast (measured: an avoidable 1.3 GB write + read per
     8M-event batch)."""
     cap = _offset_broadcast_cap_rows(small.sparkSession, BROADCAST_MAX_KEYS)
-    if cap > 0 and (bound is None or bound > cap):
-        from pyspark.storagelevel import StorageLevel
+    if cap <= 0:
+        return small.hint("shuffle_hash")
+    from pyspark.storagelevel import StorageLevel
 
-        small = small.persist(StorageLevel.MEMORY_AND_DISK)
-        bound = small.count()
-        if cleanup is not None:
-            cleanup.append(small)
-        else:
-            small.unpersist()
-    if cap > 0 and bound <= cap:
+    small = small.persist(StorageLevel.MEMORY_AND_DISK)
+    n = small.count()
+    small.unpersist()
+    if n <= cap:
         return F.broadcast(small)
     return small.hint("shuffle_hash")
 
@@ -214,9 +203,7 @@ def lww_winner_rows(
     df: DataFrame,
     key: str = "url",
     order_cols: tuple[str, ...] = DEFAULT_ORDER,
-    broadcast_keys: bool | int | None = None,
-    cleanup: list | None = None,
-    unique_order_col: str | None = None,
+    broadcast_keys: bool | None = None,
 ) -> DataFrame:
     """Payload-light LWW core: argmax over the ordering keys only, then fetch
     the winning rows back with a semi-join.  Returns each key's winning rows
@@ -231,55 +218,19 @@ def lww_winner_rows(
     cluster scale it is the difference between shuffling 100 TB and
     shuffling 400 GB.
 
-    ``broadcast_keys``: ``True``/``False`` force the join strategy.  An int
-    is a caller-known upper bound on the key count (the apply path passes
-    its batch row count); ``None`` takes the parquet-footer bound when
-    ``unique_order_col`` is set and the frame is a plain scan.  Either way
-    :func:`bounded_broadcast` decides, measuring only when no bound fits: a
+    ``broadcast_keys``: ``True``/``False`` force the join strategy; ``None``
+    lets :func:`bounded_broadcast` measure the winner keys and decide: a
     bulk replay with 10^9 distinct keys still takes the shuffled path — no
-    driver OOM.  In ``foreachBatch`` the batch is a ``LogicalRDD``, so the
-    footer bound never applies there and the caller's bound is what keeps
-    the measuring job off the per-batch path.
+    driver OOM.
     """
     order_struct = _order_struct(order_cols)
-    if unique_order_col is not None:
-        # ``unique_order_col`` (one of order_cols) uniquely identifies an
-        # event across the whole log — the CDC log_offset.  Then the
-        # winning rows are exactly the rows carrying the winning offsets:
-        # the join key shrinks from (string key + order-struct equality
-        # filter) to ONE 8-byte long — a ~12x smaller broadcast and a
-        # cheaper probe hash, with the post-join filter gone entirely.
-        #
-        # The key itself never leaves this aggregation (only the offsets
-        # do), so the argmax groups by a 128-bit hash of the key (two
-        # independently-seeded xxhash64 columns) instead of the key
-        # string: ~16 B group keys instead of ~60 B urls halve the
-        # partial-agg shuffle and speed both hash-map sides.  A collision
-        # would merge two urls' argmax (losing one winner); with 2^128
-        # hash space that is p ~= n^2/2^129 — about 1.5e-19 at the full
-        # 10^10-event scale, far below any hardware error rate (the same
-        # trade every content-hash dedup in this repo already makes).
-        keys = (
-            df.groupBy(
-                F.xxhash64(F.col(key)).alias("_h1"),
-                F.xxhash64(F.lit(0x5EED), F.col(key)).alias("_h2"),
-            )
-            .agg(F.max(order_struct).alias("_w"))
-            .select(F.col(f"_w.{unique_order_col}").alias(unique_order_col))
-        )
-    else:
-        keys = df.groupBy(key).agg(F.max(order_struct).alias("_w"))
+    keys = df.groupBy(key).agg(F.max(order_struct).alias("_w"))
     if broadcast_keys is True:
         keys = F.broadcast(keys)
     elif broadcast_keys is False:
         keys = keys.hint("shuffle_hash")
     else:
-        bound = broadcast_keys
-        if bound is None and unique_order_col is not None:
-            bound = _metadata_row_upper_bound(df)
-        keys = bounded_broadcast(keys, bound, cleanup)
-    if unique_order_col is not None:
-        return df.join(keys, unique_order_col)
+        keys = bounded_broadcast(keys)
     return df.join(keys, key).filter(order_struct == F.col("_w")).drop("_w")
 
 
@@ -288,8 +239,6 @@ def lww_dedup_semi(
     key: str = "url",
     order_cols: tuple[str, ...] = DEFAULT_ORDER,
     broadcast_keys: bool | None = None,
-    cleanup: list | None = None,
-    unique_order_col: str | None = None,
 ) -> DataFrame:
     """:func:`lww_winner_rows` + collapse of exact duplicate deliveries
     (rows sharing (key, order_cols) are identical payloads by the log's
@@ -300,12 +249,7 @@ def lww_dedup_semi(
     shuffle instead of paying this one.
     """
     matched = lww_winner_rows(
-        df,
-        key=key,
-        order_cols=order_cols,
-        broadcast_keys=broadcast_keys,
-        cleanup=cleanup,
-        unique_order_col=unique_order_col,
+        df, key=key, order_cols=order_cols, broadcast_keys=broadcast_keys
     )
     return lww_dedup(matched, key=key, order_cols=order_cols)
 

@@ -23,10 +23,6 @@ def norm_expr(a: str) -> Column:
     return F.sqrt(F.aggregate(sq, F.lit(0.0), lambda acc, x: acc + x))
 
 
-def cosine_expr(a: str, b: str) -> Column:
-    return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
-
-
 def brute_force_topk(
     vectors: DataFrame,
     queries: DataFrame,
@@ -124,23 +120,6 @@ def hyperplane_sql(vec_expr: str, plane: int, dim: int) -> str:
         f"{vec_expr}[{d + 1}] * ({plane_weight(plane, d)!r})" for d in range(dim)
     )
     return f"CASE WHEN ({terms}) >= 0 THEN 1 ELSE 0 END"
-
-
-def lsh_bucket(vec_col: str, n_planes: int, dim: int) -> Column:
-    """Random-hyperplane LSH bucket id (concatenated sign bits)."""
-    bucket = F.lit(0)
-    for p in range(n_planes):
-        bucket = bucket + hyperplane_expr(vec_col, p, dim) * F.lit(2**p)
-    return bucket.cast("int")
-
-
-def lsh_bucket_sql(vec_expr: str, n_planes: int, dim: int) -> str:
-    """SQL twin of :func:`lsh_bucket`."""
-    return (
-        "CAST("
-        + " + ".join(f"({hyperplane_sql(vec_expr, p, dim)}) * {2 ** p}" for p in range(n_planes))
-        + " AS INTEGER)"
-    )
 
 
 def with_centroid_scores(
@@ -361,7 +340,8 @@ def ivf_ann_topk(
         )
     )
     # norms once per corpus row / probe row, not per candidate pair (same
-    # expression and multiply order as cosine_expr — bit-identical scores)
+    # expression and multiply order as dot_expr / (norm_expr * norm_expr)
+    # — bit-identical scores)
     cand = vb.withColumn("_vn", norm_expr("_v")).join(F.broadcast(q0), "_cell")
     scored = cand.select(
         query_id_col,
@@ -454,8 +434,8 @@ def lsh_ann_topk(
         .dropDuplicates([query_id_col, id_col])
     )
     # norms computed once per vector at attach time (not per candidate
-    # pair); same expression/order as cosine_expr, so scores stay
-    # bit-identical
+    # pair); same expression/order as dot_expr / (norm_expr * norm_expr),
+    # so scores stay bit-identical
     cand = cand.join(
         vectors.select(
             F.col(id_col),

@@ -4,6 +4,7 @@ from __future__ import annotations
 
 from datetime import datetime
 
+import pytest
 from pyspark.sql import functions as F
 
 from adsimportpipeline_spark.lake.table import LakeTable, bucket_expr
@@ -323,6 +324,7 @@ def test_append_racing_rescale_raises_not_misbuckets(spark, tmp_path):
     t.manifest = racy_manifest
     with _pytest.raises(CommitConflictError):
         t.append_buckets(_rows(spark, ["appended"]), retries=5)
+    assert armed["calls"] == 2  # raised on its first attempt: no re-plan
     t.manifest = orig_manifest
 
     # the rescale's snapshot is intact; no old-geometry file was attached
@@ -337,43 +339,57 @@ def test_append_racing_rescale_raises_not_misbuckets(spark, tmp_path):
     assert {r["url"] for r in t.read().collect()} == {"seed", "appended"}
 
 
-def test_compact_retries_absorbs_one_conflict(spark, tmp_path):
-    """Maintenance-path retry contract: compact() racing another committer
-    raises by default; compact(retries=1) re-plans against the fresh
-    snapshot once and lands without reverting the intruder's delta."""
-    import pytest as _pytest
-
+@pytest.mark.parametrize("method", ["compact", "rescale_buckets", "compact_appends"])
+def test_compact_retries_absorbs_one_conflict(spark, tmp_path, method):
+    """Maintenance-path retry contract, for every writer that takes
+    ``retries``: racing another committer it raises by default; with
+    ``retries=1`` it re-plans against the fresh snapshot once and lands on
+    top of it without reverting the intruder's rows or tombstones."""
     from adsimportpipeline_spark.lake.table import CommitConflictError
+    from adsimportpipeline_spark.schema import TOMBSTONE_SCHEMA
 
+    args = (8,) if method == "rescale_buckets" else ()
     root = str(tmp_path / "cr")
     t = LakeTable.create(spark, root, PAGES_SCHEMA, n_buckets=4)
-    t.overwrite_buckets(_rows(spark, ["seed"]), list(range(4)))
+    for b in range(2):  # two tombstone files: compact_appends has work to do
+        tombs = t.write_append(_tomb_rows(spark, 1, b).coalesce(1), "tomb")
+        t.overwrite_buckets(_rows(spark, ["seed"]), list(range(4)),
+                            appends=lambda: {"tombstone_files": tombs})
     other = LakeTable.load(spark, root)
 
-    # arm an intruder that commits between compact's plan and its publish
-    orig_read = t.read_buckets
-    armed = {"shots": 1}
+    # ONE intruder hook for every writer: a commit by another writer lands
+    # between the tested commit's plan and its publish
+    orig_commit = t._commit_manifest
+    armed = {"shots": 0, "fired": 0}
 
-    def racy_read(bucket_ids, m=None):
-        df = orig_read(bucket_ids, m)
+    def racy_commit(m, parent_version=None, create_only=False):
         if armed["shots"] > 0:
             armed["shots"] -= 1
+            armed["fired"] += 1
+            k = 10 + armed["fired"]  # each intruder writes its own rows
+            tombs = other.write_append(_tomb_rows(spark, 1, k).coalesce(1), "tomb")
             other.overwrite_buckets(
-                _rows(spark, ["intruder"]), list(range(4)),
-                parent_version=other.current_version(),
+                _rows(spark, [f"intruder{k}"]), list(range(4)),
+                appends=lambda: {"tombstone_files": tombs},
             )
-        return df
+        return orig_commit(m, parent_version=parent_version, create_only=create_only)
 
-    t.read_buckets = racy_read
-    with _pytest.raises(CommitConflictError):
-        t.compact()
+    t._commit_manifest = racy_commit
+    v_before = t.current_version()
+    armed["shots"] = 1
+    with pytest.raises(CommitConflictError):
+        getattr(t, method)(*args, retries=0)
+    assert t.current_version() == v_before + 1  # only the intruder landed
 
     armed["shots"] = 1
-    v_before = t.current_version()
-    t.compact(retries=1)
-    assert t.current_version() == v_before + 2  # intruder + retried compact
-    # the retried compact rewrote the CURRENT snapshot (intruder's data)
-    assert {r["url"] for r in t.read().collect()} == {"intruder"}
+    getattr(t, method)(*args, retries=1)
+    assert armed["shots"] == 0
+    assert t.current_version() == v_before + 3  # two intruders + the retry
+    # the retry re-planned on the CURRENT snapshot: the second intruder's
+    # rows and both intruders' tombstones survive
+    assert {r["url"] for r in t.read().collect()} == {"intruder12"}
+    tomb_urls = {r["url"] for r in t.read_tombstones(TOMBSTONE_SCHEMA).collect()}
+    assert tomb_urls == {"u0-0", "u1-0", "u11-0", "u12-0"}
 
 
 def test_crash_leftover_manifest_does_not_conflict(spark, tmp_path):

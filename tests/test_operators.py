@@ -296,37 +296,3 @@ def test_metadata_row_upper_bound_and_cap(spark, tmp_path):
     thr = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
     # the tighter of the byte budget and the caller's explicit row cap wins
     assert _offset_broadcast_cap_rows(spark, 4_000_000) == min(thr // 8, 4_000_000)
-
-
-def test_lww_winner_rows_hash_grouping_matches_string_grouping(spark):
-    """The 128-bit-hash argmax must produce exactly the winner set the
-    url-string argmax produces (collisions are ~2^-128; none in any finite
-    test), across both the metadata-broadcast and forced-shuffle paths."""
-    from adsimportpipeline_spark.operators.lww import lww_winner_rows
-
-    rows = [
-        (f"u{i % 37}", i % 11, i) for i in range(500)
-    ]  # 37 urls, ties on warc_ts broken by offset
-    df = spark.createDataFrame(rows, "url string, warc_ts int, log_offset long")
-    expected = {
-        (r["url"], r["log_offset"])
-        for r in lww_winner_rows(df, "url", ("warc_ts", "log_offset")).collect()
-    }
-    got = {
-        (r["url"], r["log_offset"])
-        for r in lww_winner_rows(
-            df, "url", ("warc_ts", "log_offset"), unique_order_col="log_offset"
-        ).collect()
-    }
-    assert got == expected
-    forced = {
-        (r["url"], r["log_offset"])
-        for r in lww_winner_rows(
-            df,
-            "url",
-            ("warc_ts", "log_offset"),
-            unique_order_col="log_offset",
-            broadcast_keys=False,
-        ).collect()
-    }
-    assert forced == expected

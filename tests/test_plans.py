@@ -88,31 +88,6 @@ def test_broadcast_join_in_lookup(spark, sf_dir):
     assert "BroadcastHashJoin" in _plan(j)
 
 
-def test_winner_rows_metadata_gate_plans_broadcast(spark, sf_dir):
-    """The bulk path's winner fetch: when parquet footers prove the source
-    row count fits the offset-broadcast budget, the plan must be a
-    BroadcastHashJoin on log_offset with NO measuring job and NO payload
-    shuffle (a regression to a sort-merge/shuffled join here re-shuffles
-    every winner payload at 10^10 scale)."""
-    from adsimportpipeline_spark.operators.lww import lww_winner_rows
-
-    ev = _ev(spark, sf_dir)  # a plain parquet scan -> footer bound available
-    plan = _plan(lww_winner_rows(ev, unique_order_col="log_offset"))
-    assert "BroadcastHashJoin" in plan and "log_offset" in plan
-    assert "SortMergeJoin" not in plan
-    # the payload must never be exchanged: the only hash exchange allowed in
-    # the whole plan is the narrow winner aggregation on the 128-bit key
-    # hash (_h1/_h2).  (Splitting the explain text at the join marker would
-    # inspect the join's ANCESTORS, not its probe child — children print
-    # below the node — so assert over every exchange in the plan instead.)
-    for chunk in plan.split("Exchange hashpartitioning")[1:]:
-        part_cols = chunk[:200].split(")")[0]
-        for payload_col in ("url", "event_type", "warc_ts"):
-            assert payload_col not in part_cols, (
-                f"payload column {payload_col} crossed a hash exchange: {part_cols}"
-            )
-
-
 def test_minhash_pipeline_reuses_shingle_exchange(spark, sf_dir):
     """minhash_dedup_pairs deliberately does NOT persist the shingle frame
     (a long-lived session must never leak pinned storage); instead the
