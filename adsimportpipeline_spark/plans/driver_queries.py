@@ -1042,9 +1042,9 @@ def q_incremental_lsh_pairs(spark, sf_dir):
     the documents corpus as a 4-wave change stream (3 insert waves split by
     a hash of doc_id, then a re-delivery wave that supersedes wave 0 with
     newer offsets), maintain the band index incrementally
-    (operators/incremental_dedup.py — bucket-pruned candidate reads,
-    fast-append commits, validity by (url, warc_ts, log_offset) against
-    the final state), then verify the index's valid candidates with the
+    (operators/incremental_dedup.py — fast-append commits of each wave's
+    band rows, validity by (url, warc_ts, log_offset) against the final
+    state), then verify the index's valid candidates with the
     same jaccard pass as batch mode.  The oracle is _MINHASH_PAIRS_SQL
     VERBATIM — four rounds of incremental maintenance with supersession
     must land on exactly the answer a full batch recompute gives."""
@@ -2115,8 +2115,6 @@ def q_time_slice_read(spark, sf_dir):
     window predicate, so the row verifies that file skipping by manifest
     bounds never changes results (bounds prune I/O, the exact predicate
     decides membership)."""
-    from datetime import datetime, timedelta
-
     from ..apply import apply_batch, pages_schema_for
     from ..lake.table import LakeTable
 

@@ -20,24 +20,23 @@ from ..sources.changelog import stream_change_log
 
 def _apply_and_maintain_index(table, index, batch_df, batch_id):
     """apply_batch + incremental LSH index maintenance.  The index is fed
-    the rows the batch left in the table, read back from its committed
-    buckets (:func:`applied_winner_texts`): text is extracted inside the
-    data write, so no frame of the apply carries it.  The same read-back
-    covers the epoch no-op re-delivery (a crash between the table and index
-    commits).  The applied rows were once persisted by the apply and handed
-    over instead: 14 Spark jobs per warm 400-event batch against 10, for a
-    per-batch p50 within noise (LSH-index replay of a 12 k-event / 1.2
-    k-url log in 10 files, one file per trigger, 8 buckets, ``local[4]`` on
-    4 vCPUs, 7 alternating pairs: median 4.46 s handed over, 4.41 s read
-    back)."""
-    from ..operators.incremental_dedup import (
-        applied_winner_texts,
-        update_lsh_index,
-    )
+    the batch's own LWW winners (:func:`batch_winner_texts`), never the
+    table: winners the apply rejected become band rows the validity rule
+    drops at read, and a re-delivery after a crash between the table and
+    index commits derives the same rows from the same batch.
+
+    The index was once fed by reading the batch's touched pages buckets
+    back after the commit; that read grew with the table.  LSH-index
+    replay of a 12 k-event / 1.2 k-url log in 10 files, one file per
+    trigger, 8 buckets, ``local[4]`` on 4 vCPUs, two runs each, batches
+    1-9: read back, walls climbed 1.5 -> 2.1 s (p50 1.69-1.73 s, 18 Spark
+    jobs per batch); fed from the batch, flat at 0.70-0.99 s (p50
+    0.78-0.83 s, 11 jobs).  The plain apply is 0.29-0.31 s and 4 jobs."""
+    from ..operators.incremental_dedup import batch_winner_texts, update_lsh_index
 
     stats = apply_batch(table, batch_df, batch_id)
     if index is not None:
-        update_lsh_index(index, applied_winner_texts(table, batch_df), batch_id)
+        update_lsh_index(index, batch_winner_texts(batch_df), batch_id)
     return stats
 
 
@@ -59,13 +58,15 @@ def run_replay(
 
     ``lsh_index_root``: when given, the MinHash-LSH band index
     (:mod:`..operators.incremental_dedup`) is maintained in the same
-    micro-batch loop — per-batch work stays O(batch) — so near-dup
+    micro-batch loop from the batch alone — its per-batch I/O is the batch
+    in and its band rows out, never a read of the table — so near-dup
     candidates are queryable at any point via
     :func:`~..operators.incremental_dedup.lsh_index_pairs` without a
     full-corpus recompute.  Exactly-once composes: the main table commits
     its epoch FIRST; a crash between the two commits replays the batch,
     the table apply no-ops on its epoch, and the index (whose epoch never
-    landed) catches up — both sides idempotent, proven by
+    landed) derives the same band rows from the re-delivered batch and
+    catches up — both sides idempotent, proven by
     tests/test_incremental_dedup.py."""
     table = LakeTable.load(spark, table_root)
     stream = stream_change_log(spark, log_path, max_files_per_trigger)

@@ -1,11 +1,12 @@
 """Incremental LSH index vs batch-mode recompute — the never-diverge invariant.
 
 Replays a hand-built change log (inserts, text-changing updates, deletes,
-duplicate deliveries) in micro-batches through the REAL apply path while
-maintaining the band index incrementally, then asserts the index's
-valid-pair set equals batch-mode lsh_candidate_pairs over the final table —
-row for row.  Also covers the fast-append commit, exactly-once re-delivery,
-and index compaction.
+duplicate deliveries, stale events) in micro-batches through the REAL apply
+path while maintaining the band index from each batch, and asserts after
+every batch that the index's valid-pair set equals batch-mode
+lsh_candidate_pairs over the table — row for row.  Also covers the
+fast-append commit, exactly-once re-delivery, a crash between the table and
+index commits, and index compaction.
 """
 
 from __future__ import annotations
@@ -13,7 +14,6 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 import pytest
-from pyspark.sql import functions as F
 
 from adsimportpipeline_spark.apply import apply_batch
 from adsimportpipeline_spark.lake.table import LakeTable
@@ -72,6 +72,14 @@ BATCHES = [
         _ev("u5", 21, 21, "delete", None),
         _ev("u2", 22, 22, "update", TPL_B),
     ],
+    # b3: stale events the table rejects but the batch still indexes —
+    #     u5's original insert re-delivered after its delete (the tombstone
+    #     blocks it), and a u1 event older than u1's stored row carrying
+    #     u6's text.  Both band rows are dead on arrival.
+    [
+        _ev("u5", 5, 5, "insert", TPL_C),
+        _ev("u1", 0, 0, "update", TPL_C),
+    ],
 ]
 
 
@@ -80,20 +88,20 @@ def replayed(spark, tmp_path_factory):
     root = tmp_path_factory.mktemp("incdedup")
     table = LakeTable.create(spark, str(root / "pages"), PAGES_SCHEMA, n_buckets=8)
     index = create_lsh_index(spark, str(root / "lsh"), n_buckets=8)
-    emitted: dict[int, set] = {}
+    # per batch: (index pairs, batch-mode pairs) over the table after it
+    after: list[tuple[set, set]] = []
     for i, rows in enumerate(BATCHES):
         batch = spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA)
         apply_batch(table, batch, batch_id=i)
-        current = table.read().select("url", "warc_ts", "log_offset")
-        owned: list = []  # consume pairs while the band cache is hot
-        pairs = update_lsh_index(
-            index, batch_winner_texts(batch), i, pages_current=current,
-            cleanup=owned,
-        )
-        emitted[i] = {tuple(r) for r in pairs.collect()}
-        for df in owned:
-            df.unpersist(blocking=False)
-    return table, index, emitted
+        update_lsh_index(index, batch_winner_texts(batch), i)
+        pages = table.read()
+        after.append((_index_pairs(index, pages), _batch_mode_pairs(pages)))
+    return table, index, after
+
+
+def _index_pairs(index, pages_df):
+    current = pages_df.select("url", "warc_ts", "log_offset")
+    return {tuple(r) for r in lsh_index_pairs(index, current).collect()}
 
 
 def _batch_mode_pairs(pages_df):
@@ -101,28 +109,37 @@ def _batch_mode_pairs(pages_df):
     return {tuple(r) for r in lsh_candidate_pairs(sigs, id_col="url").collect()}
 
 
-def test_guaranteed_pairs_emitted_per_batch(replayed):
-    _, _, emitted = replayed
+def test_index_equals_batch_mode_after_every_batch(replayed):
+    _, _, after = replayed
+    for i, (incremental, batch_mode) in enumerate(after):
+        assert incremental == batch_mode, f"batch {i}"
+    pairs = [incremental for incremental, _ in after]
     # identical texts => identical signatures => guaranteed pairs
-    assert ("u1", "u2") in emitted[0]
-    assert ("u5", "u6") in emitted[0]
+    assert ("u1", "u2") in pairs[0]
+    assert ("u5", "u6") in pairs[0]
     # cross-batch: u7 (b1) vs the A-cluster stored in b0
-    assert ("u1", "u7") in emitted[1] and ("u2", "u7") in emitted[1]
+    assert ("u1", "u7") in pairs[1] and ("u2", "u7") in pairs[1]
     # b2 applied a delete and a de-clustering update: u2's new B-text may
     # band with nothing that still exists (u3 left B in b1) — whatever the
-    # hashes say, no emitted pair may involve the deleted u5
-    assert not any("u5" in p for p in emitted[2])
+    # hashes say, no pair may involve the deleted u5
+    assert not any("u5" in p for p in pairs[2])
+
+
+def test_stale_batch_winners_never_pair(replayed):
+    """b3's winners share u6's text, so their band rows collide with u6's;
+    the table rejected both events, so neither pair may ever appear."""
+    _, index, after = replayed
+    assert index.last_epoch("lsh_index") == len(BATCHES) - 1
+    indexed = {tuple(r) for r in index.read().select("url", "log_offset").collect()}
+    assert ("u1", 0) in indexed  # the stale winner was indexed, dead on arrival
+    assert not any(("u1", "u6") in incremental for incremental, _ in after)
+    assert ("u5", "u6") not in after[2][0] | after[3][0]
 
 
 def test_final_index_pairs_equal_batch_mode(replayed):
     table, index, _ = replayed
     final = table.read()
-    incremental = {
-        tuple(r)
-        for r in lsh_index_pairs(
-            index, final.select("url", "warc_ts", "log_offset")
-        ).collect()
-    }
+    incremental = _index_pairs(index, final)
     assert incremental == _batch_mode_pairs(final)
     # the dead relations are really dead: u5 tombstoned, u2's A-membership
     # superseded — identical-text guarantees make these assertions exact
@@ -131,35 +148,48 @@ def test_final_index_pairs_equal_batch_mode(replayed):
     assert ("u1", "u7") in incremental
 
 
-def test_emitted_superset_of_final(replayed):
-    table, index, emitted = replayed
-    final_pairs = {
-        tuple(r)
-        for r in lsh_index_pairs(
-            index, table.read().select("url", "warc_ts", "log_offset")
-        ).collect()
-    }
-    assert set().union(*emitted.values()) >= final_pairs
-
-
 def test_redelivery_is_noop(replayed, spark):
     _, index, _ = replayed
     v = index.current_version()
     batch = spark.createDataFrame(BATCHES[1], CHANGE_EVENT_SCHEMA)
-    assert update_lsh_index(index, batch_winner_texts(batch), 1) is None
+    update_lsh_index(index, batch_winner_texts(batch), 1)
     assert index.current_version() == v
+
+
+def test_crash_between_table_and_index_commits(spark, tmp_path):
+    """Batch 1 commits to the table but not to the index (a crash between
+    the two commits).  Its re-delivery through the runner's batch function
+    no-ops on the table and brings the index up to batch mode."""
+    from adsimportpipeline_spark.streaming.runner import _apply_and_maintain_index
+
+    table = LakeTable.create(spark, str(tmp_path / "pages"), PAGES_SCHEMA, n_buckets=8)
+    index = create_lsh_index(spark, str(tmp_path / "lsh"), n_buckets=8)
+    b0, b1 = (spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA) for rows in BATCHES[:2])
+    _apply_and_maintain_index(table, index, b0, 0)
+    apply_batch(table, b1, batch_id=1)
+    tv = table.current_version()
+    assert ("u1", "u7") not in _index_pairs(index, table.read())  # index behind
+
+    _apply_and_maintain_index(table, index, b1, 1)
+    assert table.current_version() == tv
+    assert index.last_epoch("lsh_index") == 1
+    pages = table.read()
+    incremental = _index_pairs(index, pages)
+    assert incremental == _batch_mode_pairs(pages)
+    assert ("u1", "u7") in incremental
 
 
 def test_compaction_drops_stale_keeps_answer(replayed):
     table, index, _ = replayed
-    current = table.read().select("url", "warc_ts", "log_offset")
-    before = {tuple(r) for r in lsh_index_pairs(index, current).collect()}
+    pages = table.read()
+    current = pages.select("url", "warc_ts", "log_offset")
+    before = _index_pairs(index, pages)
     n_before = index.read().count()
     compact_lsh_index(index, current)
-    after = {tuple(r) for r in lsh_index_pairs(index, current).collect()}
-    assert after == before
+    assert _index_pairs(index, pages) == before
     n_after = index.read().count()
-    assert n_after < n_before  # u3's B rows, u2's A rows, u5's C rows gone
+    # u3's B rows, u2's A rows, u5's C rows and b3's dead-on-arrival rows gone
+    assert n_after < n_before
     # compacted index holds exactly the valid distinct rows
     valid = (
         index.read()
@@ -219,11 +249,9 @@ def test_update_survives_restart(replayed, spark, tmp_path):
     the committed epochs and the same pair answer."""
     table, index, _ = replayed
     reopened = LakeTable.load(spark, index.root)
-    assert reopened.last_epoch("lsh_index") == 2
-    current = table.read().select("url", "warc_ts", "log_offset")
-    a = {tuple(r) for r in lsh_index_pairs(reopened, current).collect()}
-    b = {tuple(r) for r in lsh_index_pairs(index, current).collect()}
-    assert a == b
+    assert reopened.last_epoch("lsh_index") == len(BATCHES) - 1
+    pages = table.read()
+    assert _index_pairs(reopened, pages) == _index_pairs(index, pages)
 
 
 def test_streaming_replay_maintains_index(spark, tmp_path):
@@ -251,12 +279,7 @@ def test_streaming_replay_maintains_index(spark, tmp_path):
     assert index.last_epoch("lsh_index") >= 1  # several micro-batches ran
 
     final = table.read()
-    incremental = {
-        tuple(r)
-        for r in lsh_index_pairs(
-            index, final.select("url", "warc_ts", "log_offset")
-        ).collect()
-    }
+    incremental = _index_pairs(index, final)
     assert incremental == _batch_mode_pairs(final)
     assert incremental  # the generator's duplicate factor guarantees some
 

@@ -1,5 +1,6 @@
-"""Dead-code check: every top-level function of the package must be
-referenced somewhere outside its own ``def``.
+"""Dead-code checks: every top-level function of the package must be
+referenced somewhere outside its own ``def``, and every name a package
+module imports must be used in that module.
 
 Reads the source of every ``.py`` file under the repo root (the package,
 ``tests/``, ``scripts/``, ``cdcbench/`` and the top-level scripts) with
@@ -63,3 +64,31 @@ def test_every_package_function_has_a_caller():
         if not refs[name] - {(path, name)}
     )
     assert not uncalled, "functions nothing references:\n" + "\n".join(uncalled)
+
+
+def test_every_package_import_is_used():
+    """An imported name counts as used if any ``Name`` node of its module
+    reads it.  ``from __future__`` imports and import statements marked
+    ``# noqa: F401`` on their first line (re-exports) are exempt."""
+    unused = []
+    for path in _py_files():
+        rel = os.path.relpath(path, ROOT)
+        if not rel.startswith(PACKAGE + os.sep):
+            continue
+        with open(path, encoding="utf-8") as f:
+            src = f.read()
+        tree = ast.parse(src, filename=path)
+        lines = src.splitlines()
+        used = {n.id for n in ast.walk(tree) if isinstance(n, ast.Name)}
+        for n in ast.walk(tree):
+            if not isinstance(n, (ast.Import, ast.ImportFrom)):
+                continue
+            if isinstance(n, ast.ImportFrom) and n.module == "__future__":
+                continue
+            if "# noqa: F401" in lines[n.lineno - 1]:
+                continue
+            for a in n.names:
+                bound = a.asname or a.name.split(".")[0]
+                if bound not in used:
+                    unused.append(f"{rel}:{n.lineno}: {bound}")
+    assert not unused, "imports nothing uses:\n" + "\n".join(unused)
