@@ -4,16 +4,16 @@ copy-on-write commit.
 
 This is the Spark rebuild of the reference's task chain
 ``task_find_new_records -> task_read_records -> task_merge_metadata ->
-update_storage`` (tasks.py:34-119, app.py:24-74) collapsed into two Spark
-queries per micro-batch, the same for a fresh table and a populated one:
+update_storage`` (tasks.py:34-119, app.py:24-74) collapsed into one Spark
+query per micro-batch into a table that stores nothing (no data files, no
+tombstone files: every bulk or initial load) and two into a populated one:
 
-1. **One discovery query** (``groupBy(bucket)``, collected through
-   ``toArrow()``, which keeps the UTC timestamps): per touched bucket the
-   event count, ``min``/``max(log_offset)`` and the bucket's distinct delete
-   events (``collect_set``).  Only the table buckets holding the batch's
-   urls are read and rewritten (the semantic twin of the reference's
-   changed-record short-circuit, tasks.py:52-64); the deletes and counts
-   become the tombstone audit and the lineage, written by the driver.
+1. **One discovery query**, only when the table has stored rows or
+   tombstones to prune: the distinct buckets the batch touches, collected
+   through ``toArrow()``.  Only those table buckets are read and rewritten
+   (the semantic twin of the reference's changed-record short-circuit,
+   tasks.py:52-64).  A table that stores nothing has nothing to prune and
+   skips it: its touched buckets are the ones the write reports.
 2. **One merge** of batch (``_src`` 0, no Python on the map side) ∪ stored
    rows (``op='upsert'``) ∪ tombstones (``op='delete'``, null payload) of
    the touched buckets (``_src`` 1): one AQE-coalesced hash exchange on
@@ -29,20 +29,24 @@ queries per micro-batch, the same for a fresh table and a populated one:
 3. **One write pass** over the winners, in the merge's reduce tasks: ONE
    ``mapInArrow`` (:meth:`.LakeTable._write_buckets`) extracts text for
    batch winners only (``_src`` 0; stored rows keep their stored text) and
-   streams each bucket's rows to its own parquet file with pyarrow.  It
-   yields each file's (bucket, path, rows), which the driver collects, so
-   each row crosses from the engine to Python once.
-4. **Atomic commit**: after the write the driver writes, with pyarrow, the
-   batch's delete events to the tombstone audit and one lineage row per
-   touched bucket carrying the merge latency measured there; one manifest
-   flip attaches the data, tombstone and lineage files and records the
-   commit epoch (exactly-once under foreachBatch replays).  The audit is
-   append-only: a delete re-delivered in a later batch is stored again, and
+   streams each bucket's rows to its own parquet file with pyarrow.  The
+   merge's aggregate also counts each url's batch side (events,
+   ``min``/``max(log_offset)``, ``collect_set`` of its delete events); the
+   writer drops the delete winners from the data files, sums the counts
+   per bucket and writes the task's delete events as one tombstone-audit
+   file.  It yields per bucket (bucket, path, rows, events, lo, hi) and
+   the audit file's path, which the driver collects, so each row crosses
+   from the engine to Python once and no delete event reaches the driver.
+4. **Atomic commit**: after the write the driver writes, with pyarrow, one
+   lineage row per touched bucket from the writer's report, carrying the
+   merge latency measured there; one manifest flip attaches the data,
+   tombstone and lineage files and records the commit epoch (exactly-once
+   under foreachBatch replays).  The audit is append-only: a delete
+   re-delivered in a later batch is stored again, and
    :meth:`.LakeTable.read_tombstones` and ``compact_appends`` drop the
    duplicate (the merge reads the raw files: duplicates collapse in its
-   ``max_by``).  A batch with too many deletes to collect
-   (``MAX_COLLECTED_DELETES``) appends them with one narrow Spark write
-   instead.
+   ``max_by``).  The write's jobs are named ``apply.write`` and the
+   discovery's ``apply.discover`` (``SparkContext.setJobDescription``).
 
 Negative results, kept so nobody re-adds them: persisting the applied
 rows fixed the Python stage at ``spark.sql.shuffle.partitions`` tasks
@@ -56,24 +60,34 @@ a left-anti join cost six AQE jobs for the data write and 15 per batch; the
 merge writes in two (cdcbench ``incr_upsert``, 4 vCPUs).  The fresh-table
 apply once took its own path (key-only LWW aggregate, winner join, Arrow
 extract with a per-partition duplicate collapse, Spark parquet write): 6
-jobs against 4 now, and cdcbench ``bulk_load`` ran 93.7 k ev/s against
-132 k (medians of 10 alternating pairs, 4 vCPUs).
+jobs against the merge's 4 then (2 now), and cdcbench ``bulk_load`` ran
+93.7 k ev/s against 132 k (medians of 10 alternating pairs, 4 vCPUs).
 ``repartitionById`` (:func:`.lake.table.bucket_partitioned`) under the
-merge's aggregate costs two extra exchanges: it does not satisfy the
-aggregate's ``ClusteredDistribution(_bucket, url)``, so Spark adds
-``hashpartitioning(_bucket, url)`` and the write a third exchange; the hash
-``repartition(_bucket)`` does satisfy it.  A fixed-count
-``repartition(min(touched, cores), "_bucket")`` for a more parallel write
-was slower than the AQE-coalesced one: ``bulk_load`` 126–127 k against
-133 k ev/s, ``incr_upsert`` 1914–1930 against 2031 ev/s, and 90–190 MB
-more RSS.  A writer chained as a second ``mapInArrow`` after the extract
+merge costs no extra exchange when the partition id is itself a grouping
+key: ``groupBy("_pid", "_bucket", url)`` plans ONE
+``shufflepartitionidpassthrough`` exchange.  Its balanced placement was
+still slower on 4 vCPUs: 0.81–0.88 s per bulk apply against 0.75–0.76 s
+with the hash exchange.  Its four reduce tasks held 11–16 k rows each and
+took 190–230 ms; the hash exchange's three skewed tasks (``pmod(hash(b),
+8)`` puts buckets 1, 3 and 7 together) hold 11.6/16.9/21.5 k rows and
+take 137–215 ms.  The reduce stage is CPU-bound: each task runs a JVM
+thread plus a Python worker.  A fixed-count ``repartition(min(touched,
+cores), "_bucket")`` for a more parallel write was slower than the
+AQE-coalesced one: ``bulk_load`` 126–127 k against 133 k ev/s,
+``incr_upsert`` 1914–1930 against 2031 ev/s, and 90–190 MB more RSS; that
+was measured with ``pmod(hash(b), 4)``, which puts buckets 0, 1, 3 and 7
+in one partition, so it says nothing about an even placement.
+A writer chained as a second ``mapInArrow`` after the extract
 raised peak PSS by ~300 MB: each task got a second Python worker.
 Spark's file writer took 110–145 ms for an 8-file, 174 KB bucket write
 (144 ms under ``partitionOverwriteMode=dynamic``, 112 ms static), pyarrow
 8 ms.  The tombstone audit once ran as a Spark write of its own, with a
 left-anti join against every stored tombstone to keep the audit a distinct
 set, and lineage as another; with the collect that made four queries and
-10 jobs per ``incr_upsert`` batch.  On 4 vCPUs a Spark query costs ~50 ms
+10 jobs per ``incr_upsert`` batch.  Then the discovery collect carried
+each bucket's counts and distinct deletes (capped, with a Spark-append
+fallback) for the driver to write: two queries and 4 jobs per apply, a
+fresh table's included.  On 4 vCPUs a Spark query costs ~50 ms
 as a collect and ~100 ms as a parquet write.  So an
 ``Observation``-carrying tombstone write in place of the collect (lineage
 from its metrics) gave only -10 to -13 % batch wall: the write query costs
@@ -92,17 +106,17 @@ set-up is a few tens of ms.
 from __future__ import annotations
 
 import time
+from contextlib import contextmanager
 from datetime import datetime, timezone
 
 import pyarrow as pa
-import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from .evolve import align_to_schema, reconcile_schema
-from .lake.table import CommitConflictError, LakeTable, bucket_expr
+from .lake.table import _MERGE_COLS, CommitConflictError, LakeTable, bucket_expr
 from .operators.cdc import tombstone_guard  # noqa: F401  (re-exported: tracers wrap it by name)
 from .operators.lww import (  # noqa: F401  (re-exported: tracers wrap them by name)
     lww_dedup_semi,
@@ -116,17 +130,16 @@ from .schema import LINEAGE_SCHEMA, OP_DELETE, TOMBSTONE_SCHEMA
 #: manifest with the table's lifetime; the fold keeps both O(1).
 COMPACT_APPENDS_EVERY = 32
 
-#: Bound on the delete events the touched-bucket collect brings to the
-#: driver (a url and two 8-byte fields each): each bucket returns its
-#: distinct deletes only while it has at most ``MAX_COLLECTED_DELETES //
-#: n_buckets`` delete events.  A batch with any bucket over that share
-#: appends its audit with one narrow Spark write instead
-#: (:func:`_tombstone_rows`).
-MAX_COLLECTED_DELETES = 100_000
-
-#: The merge's own columns that ride into the write pass: the source side
-#: (0 = batch, whose winners get their text extracted there) and the bucket.
-_MERGE_COLS = [T.StructField("_src", T.IntegerType()), T.StructField("_bucket", T.IntegerType())]
+#: The batch side of each url, aggregated next to its winner and read by
+#: the writer (``lake.table._MERGE_COLS``): the url's batch events, their
+#: ``log_offset`` range, and its distinct batch delete events.  Summed per
+#: bucket they are the lineage; the deletes are the tombstone audit.
+_MERGE_AGGS = [
+    "count_if(_src = 0) AS _n",
+    "min(IF(_src = 0, log_offset, NULL)) AS _lo",
+    "max(IF(_src = 0, log_offset, NULL)) AS _hi",
+    f"collect_set(IF(_src = 0 AND op = '{OP_DELETE}', struct(warc_ts, log_offset), NULL)) AS _dels",
+]
 
 
 def pages_schema_for(batch_schema: T.StructType) -> T.StructType:
@@ -142,64 +155,52 @@ def pages_schema_for(batch_schema: T.StructType) -> T.StructType:
     return T.StructType(out)
 
 
-def _touched_summary(batch_df: DataFrame, key: str, n_buckets: int) -> pa.Table:
-    """THE discovery query: a pyarrow Table with one row per touched bucket
-    ``b``: event count ``n``, ``lo``/``hi`` log offsets and ``dels``, the
-    bucket's distinct delete events as (url, deleted_ts, log_offset)
-    structs, null when the bucket holds more than its share of
-    ``MAX_COLLECTED_DELETES``.  ``toArrow()``, not ``collect()``: the
-    timestamps stay UTC instead of turning into local-time datetimes."""
-    cap = MAX_COLLECTED_DELETES // n_buckets
-    is_del = f"op = '{OP_DELETE}'"
-    dels = (f"collect_set(CASE WHEN {is_del} THEN named_struct('url', `{key}`, "
-            "'deleted_ts', warc_ts, 'log_offset', log_offset) END)")
-    aggs = ["count(1) AS n", "min(log_offset) AS lo", "max(log_offset) AS hi",
-            f"CASE WHEN count_if({is_del}) <= {cap} THEN {dels} END AS dels"]
-    return (batch_df.groupBy(bucket_expr(key, n_buckets).alias("b"))
-            .agg(*[F.expr(a) for a in aggs]).toArrow())
+@contextmanager
+def _jobs_named(table: LakeTable, name: str):
+    """Name the Spark jobs started in the block by their layer (the UI's and
+    event log's job description); the caller's name is restored after."""
+    sc = table.spark.sparkContext
+    outer = sc.getLocalProperty("spark.job.description")
+    sc.setJobDescription(name)
+    try:
+        yield
+    finally:
+        sc.setJobDescription(outer)
 
 
-def _tombstone_rows(batch_df: DataFrame, key: str) -> DataFrame:
-    """The batch's delete events as TOMBSTONE_SCHEMA rows, for the Spark
-    write of a batch whose deletes were not collected.  Narrow: no distinct
-    and no anti-join against stored tombstones; the audit's readers drop
-    duplicates."""
-    return batch_df.filter(F.col("op") == OP_DELETE).selectExpr(
-        f"`{key}` AS url", "warc_ts AS deleted_ts", "'deleted' AS key", "log_offset")
+def _touched_buckets(batch_df: DataFrame, key: str, n_buckets: int) -> list[int]:
+    """THE discovery query, for a table with stored rows or tombstones to
+    prune: the buckets the batch touches, from one narrow scan of it."""
+    b = batch_df.select(bucket_expr(key, n_buckets).alias("b")).distinct().toArrow()
+    return b.column("b").to_pylist()
 
 
-def _arrow_tombstones(summary) -> pa.Table:
-    """The collected deletes as a TOMBSTONE_SCHEMA table."""
-    rows = pc.list_flatten(summary.column("dels")).combine_chunks()
+def _arrow_lineage(report: pa.Table, batch_id: int, latency_ms: float) -> pa.Table:
+    """One LINEAGE_SCHEMA row per touched bucket of the writer's report: its
+    offset range and the events it received."""
+    k = report.num_rows
     return pa.Table.from_arrays(
-        [rows.field("url"), rows.field("deleted_ts"),
-         pa.array(["deleted"] * len(rows), pa.string()), rows.field("log_offset")],
-        schema=to_arrow_schema(TOMBSTONE_SCHEMA),
-    )
-
-
-def _arrow_lineage(summary, batch_id: int, latency_ms: float) -> pa.Table:
-    """One LINEAGE_SCHEMA row per touched bucket: its offset range and the
-    events it received."""
-    k = summary.num_rows
-    return pa.Table.from_arrays(
-        [pa.array([batch_id] * k, pa.int64()), summary.column("b"),
-         summary.column("lo"), summary.column("hi"), summary.column("n"),
+        [pa.array([batch_id] * k, pa.int64()), report.column("bucket"),
+         report.column("lo"), report.column("hi"), report.column("events"),
          pa.array([latency_ms] * k, pa.float64()), pa.array([batch_id] * k, pa.int64())],
         schema=to_arrow_schema(LINEAGE_SCHEMA),
     )
 
 
 def _merged_winners(
-    table: LakeTable, m: dict, batch_df: DataFrame, touched: list[int], target: T.StructType
+    table: LakeTable, m: dict, batch_df: DataFrame, touched: list[int] | None,
+    target: T.StructType,
 ) -> DataFrame:
-    """THE bucket-keyed merge: the upsert winners of batch ∪ stored rows ∪
-    tombstones of the ``touched`` buckets, projected onto ``target`` plus
-    ``_src`` and ``_bucket``, each bucket whole in one partition.  Inputs
-    union by name, missing columns null (the batch has no ``text``)."""
+    """THE bucket-keyed merge: one row per ``(_bucket, url)`` of batch ∪
+    stored rows ∪ tombstones of the ``touched`` buckets (None: the table
+    stores nothing, and the batch is the only input), its winner projected
+    onto ``target`` plus the ``_MERGE_COLS`` the writer reads, each bucket
+    whole in one partition.  Inputs union by name, missing columns null
+    (the batch has no ``text``).  Delete winners stay in: the writer drops
+    them from the data files."""
     key, nb = m["key"], m["n_buckets"]
     cands = batch_df.filter(F.col(key).isNotNull()).withColumn("_src", F.lit(0))
-    if any(m["buckets"].get(str(b)) for b in touched):
+    if touched is not None and any(m["buckets"].get(str(b)) for b in touched):
         current = table.read_buckets(touched, m)
         cands = cands.unionByName(
             current.withColumns({"op": F.lit("upsert"), "_src": F.lit(1)}),
@@ -219,10 +220,11 @@ def _merged_winners(
     # one partition with no second exchange, and AQE coalesces partitions
     cands = cands.withColumn("_bucket", bucket_expr(key, nb)).repartition("_bucket")
     payload = ", ".join(f"`{c}`" for c in cands.columns if c not in (key, "_bucket"))
-    winner = F.expr(f"max_by(struct({payload}), struct(warc_ts, log_offset, _src))")
-    merged = cands.groupBy("_bucket", key).agg(winner.alias("w")).select("_bucket", key, "w.*")
-    merged = merged.filter(F.col("op") != OP_DELETE)
-    return align_to_schema(merged, T.StructType([*target.fields, *_MERGE_COLS]))
+    aggs = [f"max_by(struct({payload}), struct(warc_ts, log_offset, _src)) AS w", *_MERGE_AGGS]
+    merged = cands.groupBy("_bucket", key).agg(*[F.expr(a) for a in aggs]).selectExpr(
+        "_bucket", f"`{key}`", "w.*", f"w.op = '{OP_DELETE}' AS _del", "_n", "_lo", "_hi", "_dels")
+    own = merged.schema
+    return align_to_schema(merged, T.StructType([*target.fields, *(own[c] for c in _MERGE_COLS)]))
 
 
 def apply_batch(
@@ -235,9 +237,10 @@ def apply_batch(
     """Apply one micro-batch of change events. Returns stats. Idempotent:
     re-delivery of an already-committed batch_id is a no-op.
 
-    ``prune_buckets`` has no effect: the touched-bucket discovery always
-    runs, because the tombstone audit and lineage come from it.  The
-    parameter stays for callers that still pass it."""
+    ``prune_buckets`` has no effect: a table with stored rows or tombstones
+    always prunes its reads to the touched buckets, and a table with
+    neither has nothing to prune.  The parameter stays for callers that
+    still pass it."""
     if batch_id <= table.last_epoch(epoch_source):
         return {"batch_id": batch_id, "skipped": True}
 
@@ -254,49 +257,46 @@ def apply_batch(
     # batch_df is deliberately NOT cached: its two passes (the discovery
     # query and the merge) prune to different columns, so columnar re-reads
     # from the source beat materializing full rows on heap.
-    # 1. discovery: which table buckets does this batch touch, and its
-    #    tombstone audit and lineage, from one narrow scan of the batch
-    summary = _touched_summary(batch_df, key, nb)
-    touched = summary.column("b").to_pylist()
+    # 1. discovery, only when there are stored reads to prune: which table
+    #    buckets does this batch touch
+    touched = None
+    if m["tombstone_files"] or any(m["buckets"].values()):
+        with _jobs_named(table, "apply.discover"):
+            touched = _touched_buckets(batch_df, key, nb)
     evolved = reconcile_schema(table.schema(m), pages_schema_for(batch_df.schema))
     _mark("dedup_and_touched")
-    # 2-3. the merge; the write pass runs in its reduce tasks
-    new_data = _merged_winners(table, m, batch_df, touched, evolved)
-
-    # 4. the append-only branches, written once the data write is done (so
-    #    the lineage carries the true merge latency) and attached in the
-    #    same manifest flip.  Every delete event of the batch goes to the
-    #    audit (reference app.py:15-21 appends every delete to change_log);
-    #    it stays a distinct set to its readers.
+    # 4. lineage, which the write below calls for once its data files are
+    #    written (so it carries the true merge latency): one row per bucket
+    #    of the writer's report, attached in the same manifest flip as the
+    #    data and audit files
     latency_ms = 0.0
+    n_touched = 0
 
-    def _appends() -> dict[str, list[str]]:
-        nonlocal latency_ms
+    def _appends(report: pa.Table) -> dict[str, list[str]]:
+        nonlocal latency_ms, n_touched
         latency_ms = (time.time() - t0) * 1000.0
-        out = {"lineage_files": [], "tombstone_files": []}
-        if summary.num_rows:
-            out["lineage_files"] = table.write_append(
-                _arrow_lineage(summary, batch_id, latency_ms), "lin")
-        if summary.column("dels").null_count:
-            out["tombstone_files"] = table.write_append(_tombstone_rows(batch_df, key), "tomb")
-        else:
-            tombs = _arrow_tombstones(summary)
-            if tombs.num_rows:
-                out["tombstone_files"] = table.write_append(tombs, "tomb")
-        return out
+        n_touched = report.num_rows
+        if not n_touched:
+            return {}
+        return {"lineage_files": table.write_append(
+            _arrow_lineage(report, batch_id, latency_ms), "lin")}
 
-    _mark("plan_build")
-    version = table.overwrite_buckets(
-        new_data,
-        touched,
-        epoch_source=epoch_source,
-        epoch=batch_id,
-        new_schema=evolved,
-        appends=_appends,
-        # revalidation parent = the snapshot THIS batch's plan read at its
-        # top (bucket pruning, stored rows, epochs all came from it)
-        parent_version=m["version"],
-    )
+    with _jobs_named(table, "apply.write"):
+        # 2-3. the merge; the write pass runs in its reduce tasks and writes
+        #      the data files and the tombstone audit
+        new_data = _merged_winners(table, m, batch_df, touched, evolved)
+        _mark("plan_build")
+        version = table.overwrite_buckets(
+            new_data,
+            touched,
+            epoch_source=epoch_source,
+            epoch=batch_id,
+            new_schema=evolved,
+            appends=_appends,
+            # revalidation parent = the snapshot THIS batch's plan read at
+            # its top (bucket pruning, stored rows, epochs all came from it)
+            parent_version=m["version"],
+        )
     _mark("commit_write")
     # periodic fold (COMPACT_APPENDS_EVERY) in its own atomic commit: a
     # crash between the two commits loses only the fold, never data.  The
@@ -315,7 +315,7 @@ def apply_batch(
         "batch_id": batch_id,
         "skipped": False,
         "version": version,
-        "touched_buckets": len(touched),
+        "touched_buckets": n_touched,
         "latency_ms": latency_ms,
         "phases": phases,
         "committed_at": datetime.now(timezone.utc).isoformat(),

@@ -43,11 +43,15 @@ import re
 import uuid
 
 import numpy as np
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..evolve import align_to_schema
+from ..schema import TOMBSTONE_SCHEMA
 
 _MANIFEST_DIR = "_manifests"
 _CURRENT = "_CURRENT"
@@ -199,12 +203,28 @@ def bucket_partitioned(df: DataFrame, buckets) -> DataFrame:
     return df.repartitionById(n_parts, pid)
 
 
-#: What a data write hands back to the driver: one row per file written.
-_WRITTEN_FILES = T.StructType([
-    T.StructField("bucket", T.IntegerType(), False),
-    T.StructField("path", T.StringType(), False),
+#: What a data write hands back to the driver: one row per bucket a task
+#: saw (``path`` null when every row of it was a delete winner) and one row
+#: per tombstone-audit file (``bucket`` null, ``rows`` its delete events).
+#: ``events``/``lo``/``hi`` are the merge's bookkeeping summed per bucket:
+#: the batch events the bucket received and their ``log_offset`` range
+#: (null when the frame carries no bookkeeping).
+_WRITTEN = T.StructType([
+    T.StructField("bucket", T.IntegerType()),
+    T.StructField("path", T.StringType()),
     T.StructField("rows", T.LongType(), False),
+    T.StructField("events", T.LongType()),
+    T.StructField("lo", T.LongType()),
+    T.StructField("hi", T.LongType()),
 ])
+
+#: The columns ``apply_batch``'s merge hands the writer beside the row's
+#: own, none of them written: the bucket, the winner's side (``_src`` 0 =
+#: the batch, whose text is extracted here) and, per url, whether the
+#: winner is a delete (``_del``), the batch's event count (``_n``) and
+#: ``log_offset`` range (``_lo``, ``_hi``), and its distinct delete events
+#: as (warc_ts, log_offset) structs (``_dels``).
+_MERGE_COLS = ("_bucket", "_src", "_del", "_n", "_lo", "_hi", "_dels")
 
 #: Row bytes one write task buffers before it writes every buffered bucket
 #: as a row group: the task's Python memory stays bounded whatever its
@@ -212,15 +232,22 @@ _WRITTEN_FILES = T.StructType([
 _WRITE_BUFFER_BYTES = 64 << 20
 
 
-def _bucket_writer(d: str, cols: list[str]):
+def _bucket_writer(d: str, cols: list[str], key: str, tomb_dir: str, tomb_schema):
     """The ``mapInArrow`` body of :meth:`LakeTable._write_buckets`: stream
     each bucket of a partition's rows to its own zstd parquet file under
-    ``d`` (columns ``cols``; ``_bucket`` and ``_src`` are not written) and
-    yield one ``_WRITTEN_FILES`` row per file.
+    ``d`` (columns ``cols``; the ``_MERGE_COLS`` are not written) and yield
+    one ``_WRITTEN`` row per bucket.
 
     Rows with ``_src`` = 0 get ``text`` extracted from ``html`` in the same
     pass (``apply_batch``'s batch winners); other rows keep the ``text``
-    they carry.  A task keeps one file open per bucket it holds until its
+    they carry.  A frame with the merge's bookkeeping (``_n``) is one row
+    per (bucket, url): the writer drops the delete winners (``_del``) from
+    the data files, sums each bucket's events and offset range, and writes
+    the task's delete events (``_dels``, keyed by the row's ``key``) as ONE
+    tombstone-audit file of ``tomb_schema`` (a pyarrow schema) under
+    ``tomb_dir``.  Buckets are disjoint across tasks and each url is one
+    row, so the audit files of one write hold the batch's distinct delete
+    events.  A task keeps one file open per bucket it holds until its
     input ends.  File names are uuids, so a retried task's files never
     collide with its failed attempt's: only the paths the driver collects
     are committed, and :meth:`LakeTable.remove_orphans` reclaims the rest.
@@ -239,6 +266,8 @@ def _bucket_writer(d: str, cols: list[str]):
         files: dict = {}  # bucket -> [ParquetWriter, path, rows]
         held: dict = {}   # bucket -> record batches not yet written
         held_bytes = 0
+        tallies = []      # per-batch (bucket, events, lo, hi) partial sums
+        deletes = []      # per-batch tombstone-audit rows
 
         def _flush():
             for b, parts in held.items():
@@ -253,6 +282,20 @@ def _bucket_writer(d: str, cols: list[str]):
         for batch in it:
             if batch.num_rows == 0:
                 continue
+            if "_n" in batch.schema.names:
+                tallies.append(pa.table({c: batch.column(c) for c in ("_bucket", "_n", "_lo", "_hi")})
+                               .group_by("_bucket").aggregate([("_n", "sum"), ("_lo", "min"), ("_hi", "max")]))
+                dels = batch.column("_dels")
+                events = pc.list_flatten(dels)
+                if len(events):
+                    deletes.append(pa.Table.from_arrays(
+                        [batch.column(key).take(pc.list_parent_indices(dels)),
+                         events.field("warc_ts"), pa.array(["deleted"] * len(events)),
+                         events.field("log_offset")],
+                        names=tomb_schema.names).cast(tomb_schema))
+                batch = batch.filter(pc.invert(batch.column("_del")))
+                if batch.num_rows == 0:
+                    continue
             arrays = {c: batch.column(c) for c in cols}
             if "_src" in batch.schema.names:
                 fresh = pc.equal(batch.column("_src"), 0)
@@ -274,12 +317,27 @@ def _bucket_writer(d: str, cols: list[str]):
         _flush()
         for w, _path, _n in files.values():
             w.close()
-        if files:
+        stats: dict = {}  # bucket -> (events, lo, hi)
+        if tallies:
+            t = (pa.concat_tables(tallies).group_by("_bucket")
+                 .aggregate([("_n_sum", "sum"), ("_lo_min", "min"), ("_hi_max", "max")]))
+            stats = {b: s for b, *s in zip(*(t.column(c).to_pylist() for c in (
+                "_bucket", "_n_sum_sum", "_lo_min_min", "_hi_max_max")))}
+        out = []
+        for b in sorted({*files, *stats}):
+            _w, path, n_rows = files.get(b, (None, None, 0))
+            out.append((b, path, n_rows, *stats.get(b, (None, None, None))))
+        if deletes:
+            os.makedirs(tomb_dir, exist_ok=True)
+            path = os.path.join(tomb_dir, f"part-{uuid.uuid4().hex}.parquet")
+            audit = pa.concat_tables(deletes)
+            pq.write_table(audit, path)
+            out.append((None, path, audit.num_rows, None, None, None))
+        if out:
             yield pa.RecordBatch.from_arrays(
-                [pa.array(list(files), pa.int32()),
-                 pa.array([f[1] for f in files.values()], pa.string()),
-                 pa.array([f[2] for f in files.values()], pa.int64())],
-                names=["bucket", "path", "rows"],
+                [pa.array(c, t) for c, t in zip(zip(*out), (
+                    pa.int32(), pa.string(), pa.int64(), pa.int64(), pa.int64(), pa.int64()))],
+                names=_WRITTEN.names,
             )
 
     return _write
@@ -788,11 +846,11 @@ class LakeTable:
 
     def _write_buckets(
         self, df: DataFrame, m: dict, n_buckets: int, buckets, tag: str
-    ) -> dict[int, list[str]]:
+    ) -> tuple[dict[int, list[str]], pa.Table]:
         """THE bucketed file layout: write ``df`` (rows of ``buckets`` of
         ``bucket_expr(key, n_buckets)`` only, ``key`` from manifest ``m``)
         under a fresh data dir, one file per bucket, and return ``{bucket:
-        files}``.
+        files}`` with the writer's report (``_WRITTEN`` rows).
 
         One ``mapInArrow`` (:func:`_bucket_writer`) writes the files with
         pyarrow and returns their paths, which the caller commits: no Spark
@@ -801,22 +859,27 @@ class LakeTable:
         in one partition (``apply_batch``'s merge ends in a hash exchange on
         it); any other frame is tagged and placed here
         (:func:`bucket_partitioned`).  A ``_src`` column marks the rows
-        whose ``text`` the writer derives from ``html`` (``_src`` = 0).  The
-        table's ``sort_cols`` sort within partitions only — no extra
-        shuffle; it tightens row-group stats so pushed predicates skip
-        within files."""
-        d = os.path.join(self.root, "data", f"{tag}-{uuid.uuid4().hex[:12]}")
+        whose ``text`` the writer derives from ``html`` (``_src`` = 0); the
+        merge's bookkeeping columns (``_MERGE_COLS``) make it drop delete
+        winners and write the tombstone audit.  The table's ``sort_cols``
+        sort within partitions only — no extra shuffle; it tightens
+        row-group stats so pushed predicates skip within files."""
+        run = uuid.uuid4().hex[:12]
+        d = os.path.join(self.root, "data", f"{tag}-{run}")
         if "_bucket" not in df.columns:
             df = bucket_partitioned(df.withColumn("_bucket", bucket_expr(m["key"], n_buckets)), buckets)
         if m.get("sort_cols"):
             df = df.sortWithinPartitions("_bucket", *m["sort_cols"])
-        cols = [c for c in df.columns if c not in ("_bucket", "_src")]
-        written = df.mapInArrow(_bucket_writer(d, cols), _WRITTEN_FILES).toArrow()
+        cols = [c for c in df.columns if c not in _MERGE_COLS]
+        writer = _bucket_writer(d, cols, m["key"], os.path.join(self.root, "data", f"tomb-{run}"),
+                                to_arrow_schema(TOMBSTONE_SCHEMA))
+        written = df.mapInArrow(writer, _WRITTEN).toArrow()
         by_bucket: dict[int, list[str]] = {}
-        for b, path in sorted(zip(written.column("bucket").to_pylist(),
-                                  written.column("path").to_pylist())):
+        for b, path in sorted((b, p) for b, p in zip(written.column("bucket").to_pylist(),
+                                                     written.column("path").to_pylist())
+                              if b is not None and p is not None):
             by_bucket.setdefault(b, []).append(path)
-        return by_bucket
+        return by_bucket, written
 
     def _data_entry(self, path: str, sid: int, stats_cols: list[str]) -> dict:
         e = {"path": path, "schema_id": sid}
@@ -829,7 +892,7 @@ class LakeTable:
     def overwrite_buckets(
         self,
         new_data: DataFrame,
-        touched_buckets: list[int],
+        touched_buckets: list[int] | None,
         epoch_source: str | None = None,
         epoch: int | None = None,
         new_schema: T.StructType | None = None,
@@ -842,14 +905,22 @@ class LakeTable:
         files, record the commit epoch — all in one atomic manifest flip.
         ``new_data`` is written by :meth:`_write_buckets`: a frame that
         carries ``_bucket`` is written as it is placed, with no exchange of
-        its own.
+        its own.  ``touched_buckets=None`` (for such a frame) replaces the
+        buckets the write reports: the touched buckets, as far as a caller
+        that has nothing stored to prune needs to know them.
 
+        A frame with the merge's bookkeeping columns (``apply_batch``) gets
+        its delete winners dropped and its delete events written by the
+        writer tasks, one tombstone-audit file per task that saw deletes;
+        the flip attaches those files to the tombstone branch.
         ``appends``, when given, is called once the data files are written
-        and before the flip; it returns ``{"tombstone_files": [...],
-        "lineage_files": [...]}``, files it has already written (e.g. by
-        :meth:`write_append`), which the flip attaches to those branches.
-        Called after the write, it can record what the write cost.  The
-        data write is the only Spark query here.
+        and before the flip, with the writer's per-bucket report (a pyarrow
+        Table of ``_WRITTEN`` rows: bucket, path, rows, events, lo, hi); it
+        returns ``{"tombstone_files": [...], "lineage_files": [...]}``,
+        files it has already written (e.g. by :meth:`write_append`), which
+        the flip attaches to those branches.  Called after the write, it
+        can record what the write cost.  The data write is the only Spark
+        query here.
 
         ``parent_version`` names the snapshot this commit's plan was built
         against (a caller that read the manifest earlier passes it down);
@@ -868,11 +939,17 @@ class LakeTable:
             m["current_schema_id"] = sid
         sid = m["current_schema_id"]
 
-        by_bucket = self._write_buckets(new_data, m, m["n_buckets"], touched_buckets, "c")
+        by_bucket, written = self._write_buckets(new_data, m, m["n_buckets"], touched_buckets, "c")
+        audit = pc.is_null(written.column("bucket"))
+        report = written.filter(pc.invert(audit))
+        if touched_buckets is None:
+            touched_buckets = report.column("bucket").to_pylist()
         for b in touched_buckets:
             files = by_bucket.get(b, [])
             m["buckets"][str(b)] = [self._data_entry(p, sid, stats_cols) for p in files]
-        for branch, paths in (appends() if appends is not None else {}).items():
+        audit_files = written.filter(audit).column("path").to_pylist()
+        m["tombstone_files"] += [{"path": p, "schema_id": sid} for p in audit_files]
+        for branch, paths in (appends(report) if appends is not None else {}).items():
             m[branch] += [{"path": p, "schema_id": sid} for p in paths]
 
         if epoch_source is not None and epoch is not None:
@@ -912,7 +989,7 @@ class LakeTable:
         ):
             return m["version"]
         nb = m["n_buckets"]
-        by_bucket = self._write_buckets(new_data, m, nb, range(nb), "a")
+        by_bucket, _ = self._write_buckets(new_data, m, nb, range(nb), "a")
         # stats are a property of the (immutable) files: compute once,
         # reuse across CAS retries
         stats_cols = m.get("stats_cols") or []
@@ -1002,7 +1079,7 @@ class LakeTable:
             parent = m["version"]
             data = self.read()
             sid = m["current_schema_id"]
-            by_bucket = self._write_buckets(
+            by_bucket, _ = self._write_buckets(
                 data, m, new_n_buckets, range(new_n_buckets), "r"
             )
             stats_cols = m.get("stats_cols") or []

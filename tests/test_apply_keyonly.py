@@ -9,9 +9,9 @@ from __future__ import annotations
 
 from datetime import datetime, timedelta
 
+import pytest
 from pyspark.sql import functions as F
 
-from adsimportpipeline_spark import apply as apply_mod
 from adsimportpipeline_spark.apply import apply_batch
 from adsimportpipeline_spark.datagen import GenSpec, generate_change_log, replay_oracle
 from adsimportpipeline_spark.lake.table import LakeTable
@@ -131,39 +131,78 @@ def test_stored_text_survives_a_bucket_rewrite(spark, tmp_path):
     assert got["new"] == extract_text_str(_ev("new", 20, 1)["html"])
 
 
-def test_uncollected_deletes_take_the_spark_append(spark, tmp_path, monkeypatch):
-    """Both sides of ``MAX_COLLECTED_DELETES``: the touched-bucket collect
-    brings each batch's deletes to the driver, and with the bound at 0 every
-    batch with a delete appends them by a Spark write instead.  Both give
-    the same table and tombstones, equal to ``replay_oracle``, over batches
-    with duplicate deliveries and a delete re-delivered in a later batch."""
-    spec = GenSpec(n_events=1500, n_urls=100, seed=5)
-    events = [r.asDict() for r in generate_change_log(spark, spec).collect()]
-    batches = [[e for e in events if lo <= e["log_offset"] < lo + 500]
-               for lo in (0, 500, 1000)]
-    redelivered = next(e for e in batches[0] if e["op"] == "delete")
-    batches[2].append(redelivered)
-    assert all(any(e["op"] == "delete" for e in b) for b in batches)
+def _spread_deletes(spark, n_buckets: int) -> list[dict]:
+    """A batch with a delete in every bucket, one bucket (0) holding most of
+    the deletes, upserts next to them, and one delete delivered twice."""
+    from adsimportpipeline_spark.lake.table import bucket_expr
 
-    spark_appends = []
-    orig = apply_mod._tombstone_rows
+    urls = [f"url-z{i:03d}" for i in range(200)]  # no substring of a uuid path
+    bucket_of = {r.url: r.b for r in spark.createDataFrame([(u,) for u in urls], "url string")
+                 .select("url", bucket_expr("url", n_buckets).alias("b")).collect()}
+    heavy = [u for u in urls if bucket_of[u] == 0]
+    light = [next(u for u in urls if bucket_of[u] == b) for b in range(1, n_buckets)]
+    rows = [_ev(u, 10, i) for i, u in enumerate(urls)]
+    rows += [_ev(u, 20, 1000 + i, op="delete") for i, u in enumerate(heavy + light)]
+    rows.append(rows[-1])  # the same delete event again
+    return rows
 
-    def _spy(*args):
-        spark_appends.append(1)
-        return orig(*args)
 
-    monkeypatch.setattr(apply_mod, "_tombstone_rows", _spy)
-    got = {}
-    for side, bound in (("driver", apply_mod.MAX_COLLECTED_DELETES), ("spark", 0)):
-        monkeypatch.setattr(apply_mod, "MAX_COLLECTED_DELETES", bound)
-        spark_appends.clear()
-        table = LakeTable.create(spark, str(tmp_path / side), PAGES_SCHEMA, n_buckets=8)
-        for i, rows in enumerate(batches):
-            apply_batch(table, spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA), i)
-        assert len(spark_appends) == (0 if side == "driver" else len(batches))
-        _assert_matches_oracle(table, [e for b in batches for e in b])
-        got[side] = (_rows(table), sorted(table.read_tombstones(TOMBSTONE_SCHEMA).collect()))
-    assert got["spark"] == got["driver"]
+def _events_by_bucket(spark, rows: list[dict], n_buckets: int) -> list[tuple]:
+    """Plain Spark count/min/max of ``rows`` per table bucket."""
+    from adsimportpipeline_spark.lake.table import bucket_expr
+
+    agg = (spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA)
+           .groupBy(bucket_expr("url", n_buckets).alias("b"))
+           .agg(F.min("log_offset"), F.max("log_offset"), F.count(F.lit(1))))
+    return sorted(tuple(r) for r in agg.collect())
+
+
+@pytest.mark.parametrize("preload", [False, True], ids=["fresh", "populated"])
+def test_writer_emits_tombstone_audit_and_lineage(spark, tmp_path, monkeypatch, preload):
+    """The bucket writer writes the tombstone audit and reports the lineage,
+    on a fresh table and on a populated one: the audit holds the distinct
+    delete events delivered, each batch's lineage (latency aside) equals a
+    plain per-bucket count/min/max of its events, and no delete event
+    reaches the driver."""
+    from adsimportpipeline_spark.schema import LINEAGE_SCHEMA
+
+    nb = 8
+    table = LakeTable.create(spark, str(tmp_path / "t"), PAGES_SCHEMA, n_buckets=nb)
+    batches = [_spread_deletes(spark, nb)]
+    if preload:
+        stored = [_ev(f"url-z{i:03d}", 5, 5000 + i) for i in range(0, 200, 3)]
+        stored += [_ev(f"url-z{i:03d}", 6, 6000 + i, op="delete") for i in range(1, 200, 7)]
+        batches.insert(0, stored)
+
+    seen: list[str] = []  # every value the driver collects during the applies
+    frame = type(spark.range(1))  # the session's DataFrame class
+    for name in ("toArrow", "collect", "toPandas"):
+        orig = getattr(frame, name)
+
+        def _spy(self, *a, _orig=orig, **k):
+            out = _orig(self, *a, **k)
+            seen.append(repr(out.to_pylist() if hasattr(out, "to_pylist") else out))
+            return out
+
+        monkeypatch.setattr(frame, name, _spy)
+    for i, rows in enumerate(batches):
+        apply_batch(table, spark.createDataFrame(rows, CHANGE_EVENT_SCHEMA), i)
+    monkeypatch.undo()
+
+    delivered = [e for b in batches for e in b]
+    _assert_matches_oracle(table, delivered)
+    deletes = {(e["url"], e["warc_ts"], e["log_offset"]) for e in delivered if e["op"] == "delete"}
+    got = table.read_tombstones(TOMBSTONE_SCHEMA).collect()
+    assert sorted((r.url, r.deleted_ts, r.log_offset) for r in got) == sorted(deletes)
+    assert {r.key for r in got} == {"deleted"}
+    lineage = table.read_lineage(LINEAGE_SCHEMA).collect()
+    for i, rows in enumerate(batches):
+        mine = sorted((r.partition_id, r.offset_start, r.offset_end, r.rows_applied)
+                      for r in lineage if r.batch_id == i and r.commit_epoch == i)
+        assert mine == _events_by_bucket(spark, rows, nb)
+    assert len(lineage) == sum(len(_events_by_bucket(spark, b, nb)) for b in batches)
+    assert seen, "the spy must see the apply's collects"
+    assert not [u for u, _, _ in deletes if any(u in s for s in seen)]
 
 
 #: Spark jobs one warm apply_batch of a small batch into a populated table
@@ -175,11 +214,13 @@ def test_uncollected_deletes_take_the_spark_append(spark, tmp_path, monkeypatch)
 #: applied rows.
 MAX_APPLY_JOBS = 4
 
-#: The same for a bulk apply into a fresh table, which runs the same merge:
-#: the collect and the data write, 2 jobs each.  It launched 6 on a path of
-#: its own (key-only LWW aggregate, winner join, extract, Spark parquet
-#: write), and 11 with the Spark-written audit and lineage.
-MAX_BULK_APPLY_JOBS = 4
+#: The same for a bulk apply into a fresh table, which runs the same merge
+#: with nothing stored to prune: the data write alone, whose writer also
+#: emits the tombstone audit and lineage.  It launched 4 with the
+#: touched-bucket collect in front, 6 on a path of its own (key-only LWW
+#: aggregate, winner join, extract, Spark parquet write), and 11 with the
+#: Spark-written audit and lineage.
+MAX_BULK_APPLY_JOBS = 2
 
 
 def _jobs_of(spark, fn) -> int:
@@ -214,3 +255,44 @@ def test_warm_apply_job_count(spark, tmp_path):
     # the first of each is warm-up (python workers, codegen)
     assert max(bulk[1:]) <= MAX_BULK_APPLY_JOBS, bulk
     assert max(counts[1:]) <= MAX_APPLY_JOBS, counts
+
+
+def _job_descriptions(spark, fn) -> tuple[list, int]:
+    """The description of each Spark job ``fn()`` launches, from the status
+    tracker's store, and the number of SQL executions it ran."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+    store = sc._jsc.sc().statusStore()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList
+    bus.waitUntilEmpty()
+    before, n_execs = set(sc.statusTracker().getJobIdsForGroup(None)), execs().size()
+    fn()
+    bus.waitUntilEmpty()
+    jobs = sorted(set(sc.statusTracker().getJobIdsForGroup(None)) - before)
+    described = [store.job(j).description() for j in jobs]
+    return [d.get() if d.isDefined() else None for d in described], execs().size() - n_execs
+
+
+def test_apply_jobs_are_named_by_layer(spark, tmp_path):
+    """Every job of an apply carries its layer's name: a fresh-table apply is
+    ONE SQL execution of 2 ``apply.write`` jobs; a populated-table apply adds
+    the ``apply.discover`` query.  The caller's job description is restored
+    after each."""
+    log = str(tmp_path / "log")
+    generate_change_log(spark, GenSpec(n_events=1500, n_urls=200, seed=4)).write.parquet(log)
+    ev = spark.read.parquet(log)
+    sc = spark.sparkContext
+    for i in range(2):  # the first is warm-up (python workers, codegen)
+        table = LakeTable.create(spark, str(tmp_path / f"t{i}"), PAGES_SCHEMA, n_buckets=8)
+        sc.setJobDescription("caller")
+        fresh, n_execs = _job_descriptions(
+            spark, lambda: apply_batch(table, ev.filter("log_offset < 1000"), 0))
+        assert sc.getLocalProperty("spark.job.description") == "caller"
+    assert fresh == ["apply.write"] * 2 and n_execs == 1, (fresh, n_execs)
+
+    sc.setJobDescription(None)
+    populated, _ = _job_descriptions(
+        spark, lambda: apply_batch(table, ev.filter("log_offset >= 1000"), 1))
+    assert sc.getLocalProperty("spark.job.description") is None
+    assert set(populated) == {"apply.discover", "apply.write"}, populated
+    assert len(populated) <= MAX_APPLY_JOBS, populated

@@ -78,7 +78,7 @@ def test_append_compaction_and_snapshot_expiry(spark, tmp_path):
         t.overwrite_buckets(
             _rows(spark, [f"u{b}"]), [0, 1],
             epoch_source="cdc", epoch=b,
-            appends=lambda: {"tombstone_files": tombs},
+            appends=lambda _report: {"tombstone_files": tombs},
         )
     m = t.manifest()
     assert len(m["tombstone_files"]) == 12  # one append file per micro-batch
@@ -354,7 +354,7 @@ def test_compact_retries_absorbs_one_conflict(spark, tmp_path, method):
     for b in range(2):  # two tombstone files: compact_appends has work to do
         tombs = t.write_append(_tomb_rows(spark, 1, b).coalesce(1), "tomb")
         t.overwrite_buckets(_rows(spark, ["seed"]), list(range(4)),
-                            appends=lambda: {"tombstone_files": tombs})
+                            appends=lambda _report: {"tombstone_files": tombs})
     other = LakeTable.load(spark, root)
 
     # ONE intruder hook for every writer: a commit by another writer lands
@@ -370,7 +370,7 @@ def test_compact_retries_absorbs_one_conflict(spark, tmp_path, method):
             tombs = other.write_append(_tomb_rows(spark, 1, k).coalesce(1), "tomb")
             other.overwrite_buckets(
                 _rows(spark, [f"intruder{k}"]), list(range(4)),
-                appends=lambda: {"tombstone_files": tombs},
+                appends=lambda _report: {"tombstone_files": tombs},
             )
         return orig_commit(m, parent_version=parent_version, create_only=create_only)
 
