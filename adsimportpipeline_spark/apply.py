@@ -47,6 +47,9 @@ tombstone files: every bulk or initial load) and two into a populated one:
    duplicate (the merge reads the raw files: duplicates collapse in its
    ``max_by``).  The write's jobs are named ``apply.write`` and the
    discovery's ``apply.discover`` (``SparkContext.setJobDescription``).
+   After the flip the lake's one fold rule (:meth:`.LakeTable.fold_due`)
+   folds the tombstone and lineage branches, in a commit of its own, once
+   either has passed ``COMPACT_APPENDS_EVERY`` files.
 
 Negative results, kept so nobody re-adds them: persisting the applied
 rows fixed the Python stage at ``spark.sql.shuffle.partitions`` tasks
@@ -62,9 +65,10 @@ apply once took its own path (key-only LWW aggregate, winner join, Arrow
 extract with a per-partition duplicate collapse, Spark parquet write): 6
 jobs against the merge's 4 then (2 now), and cdcbench ``bulk_load`` ran
 93.7 k ev/s against 132 k (medians of 10 alternating pairs, 4 vCPUs).
-``repartitionById`` (:func:`.lake.table.bucket_partitioned`) under the
-merge costs no extra exchange when the partition id is itself a grouping
-key: ``groupBy("_pid", "_bucket", url)`` plans ONE
+A ``repartitionById`` placement (buckets dealt round-robin over
+``min(buckets, cores)`` partitions, each row's partition id read from an
+array literal) under the merge costs no extra exchange when the partition
+id is itself a grouping key: ``groupBy("_pid", "_bucket", url)`` plans ONE
 ``shufflepartitionidpassthrough`` exchange.  Its balanced placement was
 still slower on 4 vCPUs: 0.81–0.88 s per bulk apply against 0.75–0.76 s
 with the hash exchange.  Its four reduce tasks held 11–16 k rows each and
@@ -116,19 +120,13 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from .evolve import align_to_schema, reconcile_schema
-from .lake.table import _MERGE_COLS, CommitConflictError, LakeTable, bucket_expr
+from .lake.table import _MERGE_COLS, LakeTable, bucket_expr, bucket_placed
 from .operators.cdc import tombstone_guard  # noqa: F401  (re-exported: tracers wrap it by name)
 from .operators.lww import (  # noqa: F401  (re-exported: tracers wrap them by name)
     lww_dedup_semi,
     lww_winner_rows,
 )
 from .schema import LINEAGE_SCHEMA, OP_DELETE, TOMBSTONE_SCHEMA
-
-#: Every this many batch ids, ``apply_batch`` folds the append-only
-#: tombstone/lineage branches (:meth:`LakeTable.compact_appends`): one file
-#: per batch each would otherwise grow the per-batch tombstone reads and the
-#: manifest with the table's lifetime; the fold keeps both O(1).
-COMPACT_APPENDS_EVERY = 32
 
 #: The batch side of each url, aggregated next to its winner and read by
 #: the writer (``lake.table._MERGE_COLS``): the url's batch events, their
@@ -215,10 +213,9 @@ def _merged_winners(
         tombs = tombs.selectExpr(f"url AS `{key}`", "deleted_ts AS warc_ts", "log_offset",
                                  f"'{OP_DELETE}' AS op", "1 AS _src")
         cands = cands.unionByName(tombs, allowMissingColumns=True)
-    # a hash exchange, not bucket_partitioned: HashPartitioning(_bucket)
-    # satisfies the aggregate's distribution, so each bucket lands whole in
-    # one partition with no second exchange, and AQE coalesces partitions
-    cands = cands.withColumn("_bucket", bucket_expr(key, nb)).repartition("_bucket")
+    # the lake's one placement: its exchange on _bucket satisfies the
+    # aggregate's distribution, so there is no second exchange
+    cands = bucket_placed(cands, key, nb)
     payload = ", ".join(f"`{c}`" for c in cands.columns if c not in (key, "_bucket"))
     aggs = [f"max_by(struct({payload}), struct(warc_ts, log_offset, _src)) AS w", *_MERGE_AGGS]
     merged = cands.groupBy("_bucket", key).agg(*[F.expr(a) for a in aggs]).selectExpr(
@@ -298,19 +295,8 @@ def apply_batch(
             parent_version=m["version"],
         )
     _mark("commit_write")
-    # periodic fold (COMPACT_APPENDS_EVERY) in its own atomic commit: a
-    # crash between the two commits loses only the fold, never data.  The
-    # fold is COSMETIC: losing a CAS to a concurrent maintenance job
-    # (compact/expire between the data commit above and here) must not kill
-    # the streaming query — absorb one conflict with a fresh re-plan, and if
-    # the table is racing that hard this trigger just skips; the next
-    # scheduled batch folds everything anyway.
-    if batch_id % COMPACT_APPENDS_EVERY == COMPACT_APPENDS_EVERY - 1:
-        try:
-            table.compact_appends(retries=1)
-        except CommitConflictError:
-            pass
-        _mark("compact_appends")
+    table.fold_due()  # its own commit; a lost race never kills the stream
+    _mark("fold")
     return {
         "batch_id": batch_id,
         "skipped": False,

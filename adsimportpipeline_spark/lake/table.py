@@ -175,32 +175,25 @@ def bucket_expr(key_col: str, n_buckets: int):
     return F.expr(f"CAST(pmod(xxhash64(`{key_col}`), {int(n_buckets)}) AS INT)")
 
 
-def bucket_partitioned(df: DataFrame, buckets) -> DataFrame:
-    """Place ``df``'s rows (tagged with ``_bucket``, every value one of
-    ``buckets``) so each bucket lands whole on exactly one of
-    ``P = min(len(buckets), defaultParallelism)`` partitions, none empty.
+def bucket_placed(df: DataFrame, key: str, n_buckets: int) -> DataFrame:
+    """THE placement of every lake write: tag each row with its ``_bucket``
+    and hash-exchange on it.  ``HashPartitioning(_bucket)`` puts each bucket
+    whole in one partition, so a writer task sees all of a bucket's rows and
+    writes it one file, and it satisfies a ``groupBy("_bucket", ...)``
+    above it with no second exchange (``apply_batch``'s merge).  AQE
+    coalesces the partitions, so no empty task runs.  Hashed ids collide,
+    so one task may hold several buckets; a ``repartitionById`` that deals
+    buckets round-robin over the cores avoided that but was slower under
+    the merge (``apply.py``'s negative results)."""
+    return df.withColumn("_bucket", bucket_expr(key, n_buckets)).repartition("_bucket")
 
-    The k-th bucket of ``sorted(buckets)`` goes to partition ``k mod P``,
-    read per row by indexing a literal array by bucket id (O(1), no search
-    of the list, which holds thousands of buckets at cluster scale).  A
-    fixed-count ``repartitionById`` exchange: AQE does not coalesce it, so
-    a stage behind it runs as one wave of at most one task per core.  A
-    hash ``repartition(_bucket)`` instead collides bucket ids (two of 8
-    shared one partition, so the stage ran extra waves) and, at a fixed
-    count above the bucket count, schedules empty tasks, each paying a
-    Python task's set-up when the stage runs Python.  That set-up was
-    ~250 ms while the worker re-read its zip importers' directories every
-    task; it is a few tens of ms since the Arrow pass drops them
-    (``session.forget_zip_importers``)."""
-    ordered = sorted(set(buckets))
-    n_parts = max(1, min(len(ordered), df.sparkSession.sparkContext.defaultParallelism))
-    part_of = np.zeros(ordered[-1] + 1 if ordered else 1, dtype=np.int32)
-    part_of[ordered] = np.arange(len(ordered), dtype=np.int32) % n_parts
-    # one array literal (a numpy array is one py4j call, not one per
-    # bucket); F.get reads an id past its end as NULL (partition 0) even
-    # under ANSI
-    pid = F.get(F.lit(part_of), F.col("_bucket"))
-    return df.repartitionById(n_parts, pid)
+
+#: A data bucket's file group, or the tombstone or lineage branch, that has
+#: passed this many files is folded (:meth:`LakeTable.fold_due`): each append
+#: adds files, so without the fold every read, the merge's tombstone read
+#: included, opens one more file per append and the manifest grows with the
+#: table's lifetime.
+COMPACT_APPENDS_EVERY = 32
 
 
 #: What a data write hands back to the driver: one row per bucket a task
@@ -462,7 +455,6 @@ class LakeTable:
         key: str = "url",
         n_buckets: int = 64,
         stats_cols: list[str] | None = None,
-        sort_cols: list[str] | None = None,
     ) -> "LakeTable":
         """``stats_cols``: top-level primitive columns whose per-file
         [min, max] bounds are recorded in the manifest at every data
@@ -474,17 +466,9 @@ class LakeTable:
         Off by default: the flagship replay path's commit tail stays
         footer-read-free unless a table opts in.
 
-        ``sort_cols``: sort order WITHIN each bucket's files (Iceberg
-        write-order analog).  Rows of a bucket are sorted by these
-        columns before writing, so parquet row-group statistics on them
-        become tight and a pushed key/range predicate skips most row
-        groups inside a file — the skipping layer UNDER file pruning.
-        Costs an in-partition sort per commit; off by default so the
-        replay hot path is unchanged.
-
         Reopen semantics: create() on an existing table is idempotent and
-        NEVER alters its options.  An explicit ``stats_cols``/``sort_cols``
-        that disagrees with the existing manifest raises
+        NEVER alters its options.  An explicit ``stats_cols`` that
+        disagrees with the existing manifest raises
         (:meth:`_check_create_options`); ``key``, ``n_buckets`` and
         ``schema`` are NOT drift-checked — they have non-None defaults, so
         "didn't ask" is indistinguishable from "asked for the default",
@@ -500,7 +484,7 @@ class LakeTable:
             # EXPLICITLY requested option that disagrees with the existing
             # table must raise, not silently vanish (a caller expecting
             # stats-pruned reads would otherwise get full scans forever)
-            t._check_create_options(stats_cols, sort_cols)
+            t._check_create_options(stats_cols)
             return t
         m = {
             "version": 1,
@@ -513,7 +497,6 @@ class LakeTable:
             "lineage_files": [],
             "committed_epochs": {},  # source -> last batch id (long)
             "stats_cols": list(stats_cols or []),
-            "sort_cols": list(sort_cols or []),
         }
         # create_only: re-checked under the commit flock — without it two
         # concurrent creators race the probe above and the loser publishes
@@ -523,29 +506,25 @@ class LakeTable:
         # covers the lost-race path too: if another creator won with
         # different options, this creator's explicit request must not be
         # silently dropped (winning the race trivially passes the check)
-        t._check_create_options(stats_cols, sort_cols)
+        t._check_create_options(stats_cols)
         return t
 
-    def _check_create_options(
-        self,
-        stats_cols: list[str] | None,
-        sort_cols: list[str] | None,
-    ) -> None:
-        """Raise when an EXPLICIT create() option disagrees with the
-        existing table's manifest.  ``None`` means "caller didn't ask" and
-        is never checked; create() stays idempotent for option-less reopens
-        (the streaming runners re-call it every start)."""
-        if stats_cols is None and sort_cols is None:
+    def _check_create_options(self, stats_cols: list[str] | None) -> None:
+        """Raise when an EXPLICIT ``stats_cols`` disagrees with the existing
+        table's manifest.  ``None`` means "caller didn't ask" and is never
+        checked; create() stays idempotent for option-less reopens (the
+        streaming runners re-call it every start).  Manifests written while
+        tables had a write-order option still carry its key; it is read and
+        ignored."""
+        if stats_cols is None:
             return
-        m = self.manifest()
-        for name, want in (("stats_cols", stats_cols), ("sort_cols", sort_cols)):
-            have = list(m.get(name) or [])
-            if want is not None and list(want) != have:
-                raise ValueError(
-                    f"table at {self.root} exists with {name}={have}, "
-                    f"requested {list(want)}; create() never alters an "
-                    "existing table's options"
-                )
+        have = list(self.manifest().get("stats_cols") or [])
+        if list(stats_cols) != have:
+            raise ValueError(
+                f"table at {self.root} exists with stats_cols={have}, "
+                f"requested {list(stats_cols)}; create() never alters an "
+                "existing table's options"
+            )
 
     @classmethod
     def load(cls, spark: SparkSession, root: str) -> "LakeTable":
@@ -845,31 +824,26 @@ class LakeTable:
         return sorted(os.path.join(d, f) for f in os.listdir(d) if f.endswith(".parquet"))
 
     def _write_buckets(
-        self, df: DataFrame, m: dict, n_buckets: int, buckets, tag: str
+        self, df: DataFrame, m: dict, n_buckets: int, tag: str
     ) -> tuple[dict[int, list[str]], pa.Table]:
-        """THE bucketed file layout: write ``df`` (rows of ``buckets`` of
-        ``bucket_expr(key, n_buckets)`` only, ``key`` from manifest ``m``)
-        under a fresh data dir, one file per bucket, and return ``{bucket:
-        files}`` with the writer's report (``_WRITTEN`` rows).
+        """THE bucketed file layout: write ``df`` by its buckets of
+        ``bucket_expr(key, n_buckets)`` (``key`` from manifest ``m``) under a
+        fresh data dir, one file per bucket, and return ``{bucket: files}``
+        with the writer's report (``_WRITTEN`` rows).
 
         One ``mapInArrow`` (:func:`_bucket_writer`) writes the files with
         pyarrow and returns their paths, which the caller commits: no Spark
         file writer, commit protocol, staging dir or listing of the dir.  A
-        frame that already carries ``_bucket`` must hold each bucket whole
-        in one partition (``apply_batch``'s merge ends in a hash exchange on
-        it); any other frame is tagged and placed here
-        (:func:`bucket_partitioned`).  A ``_src`` column marks the rows
-        whose ``text`` the writer derives from ``html`` (``_src`` = 0); the
-        merge's bookkeeping columns (``_MERGE_COLS``) make it drop delete
-        winners and write the tombstone audit.  The table's ``sort_cols``
-        sort within partitions only — no extra shuffle; it tightens
-        row-group stats so pushed predicates skip within files."""
+        frame that already carries ``_bucket`` is written as it is placed
+        (``apply_batch``'s merge ends in :func:`bucket_placed`'s exchange);
+        any other frame is placed here by the same rule.  A ``_src`` column
+        marks the rows whose ``text`` the writer derives from ``html``
+        (``_src`` = 0); the merge's bookkeeping columns (``_MERGE_COLS``)
+        make it drop delete winners and write the tombstone audit."""
         run = uuid.uuid4().hex[:12]
         d = os.path.join(self.root, "data", f"{tag}-{run}")
         if "_bucket" not in df.columns:
-            df = bucket_partitioned(df.withColumn("_bucket", bucket_expr(m["key"], n_buckets)), buckets)
-        if m.get("sort_cols"):
-            df = df.sortWithinPartitions("_bucket", *m["sort_cols"])
+            df = bucket_placed(df, m["key"], n_buckets)
         cols = [c for c in df.columns if c not in _MERGE_COLS]
         writer = _bucket_writer(d, cols, m["key"], os.path.join(self.root, "data", f"tomb-{run}"),
                                 to_arrow_schema(TOMBSTONE_SCHEMA))
@@ -939,7 +913,7 @@ class LakeTable:
             m["current_schema_id"] = sid
         sid = m["current_schema_id"]
 
-        by_bucket, written = self._write_buckets(new_data, m, m["n_buckets"], touched_buckets, "c")
+        by_bucket, written = self._write_buckets(new_data, m, m["n_buckets"], "c")
         audit = pc.is_null(written.column("bucket"))
         report = written.filter(pc.invert(audit))
         if touched_buckets is None:
@@ -989,7 +963,7 @@ class LakeTable:
         ):
             return m["version"]
         nb = m["n_buckets"]
-        by_bucket, _ = self._write_buckets(new_data, m, nb, range(nb), "a")
+        by_bucket, _ = self._write_buckets(new_data, m, nb, "a")
         # stats are a property of the (immutable) files: compute once,
         # reuse across CAS retries
         stats_cols = m.get("stats_cols") or []
@@ -1079,9 +1053,7 @@ class LakeTable:
             parent = m["version"]
             data = self.read()
             sid = m["current_schema_id"]
-            by_bucket, _ = self._write_buckets(
-                data, m, new_n_buckets, range(new_n_buckets), "r"
-            )
+            by_bucket, _ = self._write_buckets(data, m, new_n_buckets, "r")
             stats_cols = m.get("stats_cols") or []
             m["buckets"] = {
                 str(b): [self._data_entry(p, sid, stats_cols) for p in files]
@@ -1094,15 +1066,17 @@ class LakeTable:
         return self._retrying(attempt, retries)
 
     def compact_appends(self, retries: int = 0) -> int:
-        """Fold the append-only tombstone/lineage branches — one file per
+        """Fold the append-only tombstone/lineage branches — a few files per
         micro-batch otherwise — into a single file each (Iceberg
         rewrite_manifests + position-delete compaction analog).  Without
-        this, N micro-batches mean N tombstone files re-read by EVERY
-        subsequent batch's resurrection guard and an O(N) manifest; with
-        periodic folding both stay O(1).  The tombstones fold to a distinct
-        set: a delete delivered in two batches was appended twice, and
-        :meth:`read_tombstones` gives the same set before and after the
-        fold.  Lineage rows are kept as they are.
+        this, N micro-batches mean N or more tombstone files re-read by
+        EVERY subsequent batch's merge and an O(N) manifest; with periodic
+        folding (:meth:`fold_due`) both stay bounded.  The tombstones fold
+        to a distinct set: a delete delivered in two batches was appended
+        twice, and :meth:`read_tombstones` gives the same set before and
+        after the fold.  Lineage rows are kept as they are.  With no
+        branch of more than one file there is nothing to fold: no snapshot
+        is published and the current version is returned.
 
         ``retries`` follows :meth:`compact`'s contract: pass 1 from a
         scheduled maintenance job to absorb one lost CAS against a live
@@ -1111,10 +1085,12 @@ class LakeTable:
         def attempt() -> int:
             m = self.manifest()
             parent = m["version"]
-            for branch, tag in (("tombstone_files", "tomb"), ("lineage_files", "lin")):
+            due = [(b, t) for b, t in (("tombstone_files", "tomb"), ("lineage_files", "lin"))
+                   if len(m[b]) > 1]
+            if not due:
+                return parent
+            for branch, tag in due:
                 paths = [e["path"] for e in m[branch]]
-                if len(paths) <= 1:
-                    continue
                 df = self.spark.read.parquet(*paths)
                 if branch == "tombstone_files":
                     df = df.distinct()
@@ -1126,6 +1102,26 @@ class LakeTable:
             return self._commit_manifest(m, parent_version=parent)
 
         return self._retrying(attempt, retries)
+
+    def fold_due(self) -> None:
+        """THE fold rule of every lake write, run by the writer after its
+        commit: compact each data bucket whose file group has passed
+        :data:`COMPACT_APPENDS_EVERY` files (fast-appends add one per
+        bucket per batch), and fold the tombstone and lineage branches once
+        either has (:meth:`compact_appends`).  Each fold is its own atomic
+        commit, so a crash in between loses only the fold, never data.
+        The fold is cosmetic: one lost CAS against a concurrent writer is
+        absorbed with a fresh re-plan, and on a second the fold skips; the
+        next write finds it still due."""
+        m = self.manifest()
+        over = [int(b) for b, files in m["buckets"].items() if len(files) > COMPACT_APPENDS_EVERY]
+        try:
+            if over:
+                self.compact(bucket_ids=over, retries=1)
+            if max(len(m["tombstone_files"]), len(m["lineage_files"])) > COMPACT_APPENDS_EVERY:
+                self.compact_appends(retries=1)
+        except CommitConflictError:
+            pass
 
     @staticmethod
     def _retrying(attempt, retries: int) -> int:

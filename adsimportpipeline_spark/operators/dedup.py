@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 from ..functions.textstats import portable_hash
+from .lww import _is_simple_scan, _metadata_row_upper_bound
 
 
 def normalize_words(col: str = "text"):
@@ -43,14 +44,16 @@ def fan_out_narrow_scan(df: DataFrame) -> DataFrame:
     shuffle that follows fans out, but the expensive work sits BELOW it).
     At production scale the scan has thousands of splits, the 4x guard
     fails, and this is a no-op — no extra exchange of full text ever
-    appears in a big plan."""
-    sc = df.sparkSession.sparkContext
-    target = sc.defaultParallelism
-    try:
-        nparts = df.rdd.getNumPartitions()
-    except Exception:
+    appears in a big plan.
+
+    Only a simple file scan (:func:`.lww._is_simple_scan`) is checked: its
+    split count needs no Spark job.  Any other frame is returned as it is,
+    because under AQE the partition count of a frame behind an exchange
+    runs that exchange's map stage while the plan is still being built."""
+    if not _is_simple_scan(df):
         return df
-    if nparts * 4 <= target:
+    target = df.sparkSession.sparkContext.defaultParallelism
+    if df.rdd.getNumPartitions() * 4 <= target:
         return df.repartition(target)
     return df
 
@@ -424,7 +427,6 @@ def embedding_near_dups(
     big table gets an actionable error instead of a runaway job.  (When the
     input is not a plain file scan the bound is unknown and the caller is
     trusted — the guard is best-effort, the LSH path is the default.)"""
-    from .lww import _metadata_row_upper_bound
     from .similarity import dot_expr, norm_expr
 
     ub = _metadata_row_upper_bound(df)

@@ -14,8 +14,9 @@ table** (key = the band-hash string) so each micro-batch:
 3. leaves validity to the read (:func:`lsh_index_pairs`).
 
 Per-batch I/O is proportional to the batch: the batch in, its band rows
-out.  The only index read is the fold of a bucket whose file group passed
-``COMPACT_APPENDS_EVERY`` files, once per that many appends.
+out.  The only index read is the lake's fold (:meth:`LakeTable.fold_due`)
+of a bucket whose file group passed ``COMPACT_APPENDS_EVERY`` files, once
+per that many appends.
 
 Staleness is resolved the CDC-native way: the index is APPEND-ONLY and
 versioned by (url, warc_ts, log_offset) — exactly the main table's LWW
@@ -43,9 +44,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..apply import COMPACT_APPENDS_EVERY
 from ..functions.html import html_to_text
-from ..lake.table import CommitConflictError, LakeTable
+from ..lake.table import LakeTable
 from ..schema import OP_DELETE
 from .dedup import _banded_buckets, minhash_signatures, word_shingles
 from .lww import lww_dedup
@@ -117,9 +117,10 @@ def band_rows(upserts: DataFrame) -> DataFrame:
 def update_lsh_index(index: LakeTable, upserts: DataFrame, batch_id: int) -> None:
     """Fast-append the band rows of one micro-batch's upserts — (url,
     warc_ts, log_offset, text) rows, deletes excluded — under the index's
-    epoch guard, then fold any bucket whose file group has grown too long.
-    A ``batch_id`` at or below the committed epoch is a re-delivery and
-    writes nothing.
+    epoch guard, then fold what the lake's fold rule finds due
+    (:meth:`LakeTable.fold_due`; each append adds a file to every bucket's
+    group it touches).  A ``batch_id`` at or below the committed epoch is
+    a re-delivery and writes nothing.
 
     Nothing is returned: the candidate pairs at any point are
     :func:`lsh_index_pairs`.  Per-batch work is the batch's own shingle,
@@ -131,22 +132,7 @@ def update_lsh_index(index: LakeTable, upserts: DataFrame, batch_id: int) -> Non
         epoch=batch_id,
         retries=1,  # appends commute; absorb one lost CAS
     )
-    _fold_index_files(index)
-
-
-def _fold_index_files(index: LakeTable) -> None:
-    """Compact each index bucket whose file group has grown past
-    ``COMPACT_APPENDS_EVERY`` files.  Every batch fast-appends one file per
-    bucket it touches, so without the fold a read of the index opens one
-    more file per bucket each batch.  Cosmetic like
-    :meth:`LakeTable.compact_appends`: a lost CAS just skips it."""
-    groups = index.manifest()["buckets"]
-    over = [int(b) for b, files in groups.items() if len(files) > COMPACT_APPENDS_EVERY]
-    if over:
-        try:
-            index.compact(bucket_ids=over, retries=1)
-        except CommitConflictError:
-            pass
+    index.fold_due()
 
 
 def lsh_index_pairs(

@@ -39,6 +39,10 @@ DEFAULT_ORDER = ("warc_ts", "log_offset")
 #: executor memory to match.
 BROADCAST_MAX_KEYS = 4_000_000
 
+#: Most parquet footers :func:`_metadata_row_upper_bound` reads; past it the
+#: bound is unknown, because reading that many footers is itself expensive.
+METADATA_MAX_FILES = 1024
+
 
 def _is_simple_scan(df: DataFrame) -> bool:
     """True iff ``df``'s analyzed plan is ONE file-relation leaf with only
@@ -69,7 +73,7 @@ def _is_simple_scan(df: DataFrame) -> bool:
         return False
 
 
-def _metadata_row_upper_bound(df: DataFrame, max_files: int = 1024) -> int | None:
+def _metadata_row_upper_bound(df: DataFrame) -> int | None:
     """Upper bound on ``df``'s row count from parquet footers alone (no data
     scan, no job).  None when the frame is not a plain parquet file scan or
     listing the footers would itself be expensive — callers must treat None
@@ -84,7 +88,7 @@ def _metadata_row_upper_bound(df: DataFrame, max_files: int = 1024) -> int | Non
         files = df.inputFiles()
     except Exception:
         return None
-    if not files or len(files) > max_files:
+    if not files or len(files) > METADATA_MAX_FILES:
         return None
     try:
         import urllib.parse
@@ -203,7 +207,6 @@ def lww_winner_rows(
     df: DataFrame,
     key: str = "url",
     order_cols: tuple[str, ...] = DEFAULT_ORDER,
-    broadcast_keys: bool | None = None,
 ) -> DataFrame:
     """Payload-light LWW core: argmax over the ordering keys only, then fetch
     the winning rows back with a semi-join.  Returns each key's winning rows
@@ -218,19 +221,12 @@ def lww_winner_rows(
     cluster scale it is the difference between shuffling 100 TB and
     shuffling 400 GB.
 
-    ``broadcast_keys``: ``True``/``False`` force the join strategy; ``None``
-    lets :func:`bounded_broadcast` measure the winner keys and decide: a
-    bulk replay with 10^9 distinct keys still takes the shuffled path — no
-    driver OOM.
+    The join strategy is :func:`bounded_broadcast`'s: it measures the
+    winner keys and decides, so a bulk replay with 10^9 distinct keys still
+    takes the shuffled path — no driver OOM.
     """
     order_struct = _order_struct(order_cols)
-    keys = df.groupBy(key).agg(F.max(order_struct).alias("_w"))
-    if broadcast_keys is True:
-        keys = F.broadcast(keys)
-    elif broadcast_keys is False:
-        keys = keys.hint("shuffle_hash")
-    else:
-        keys = bounded_broadcast(keys)
+    keys = bounded_broadcast(df.groupBy(key).agg(F.max(order_struct).alias("_w")))
     return df.join(keys, key).filter(order_struct == F.col("_w")).drop("_w")
 
 
@@ -238,7 +234,6 @@ def lww_dedup_semi(
     df: DataFrame,
     key: str = "url",
     order_cols: tuple[str, ...] = DEFAULT_ORDER,
-    broadcast_keys: bool | None = None,
 ) -> DataFrame:
     """:func:`lww_winner_rows` + collapse of exact duplicate deliveries
     (rows sharing (key, order_cols) are identical payloads by the log's
@@ -248,9 +243,7 @@ def lww_dedup_semi(
     :func:`lww_winner_rows` and fold the duplicate-collapse into that
     shuffle instead of paying this one.
     """
-    matched = lww_winner_rows(
-        df, key=key, order_cols=order_cols, broadcast_keys=broadcast_keys
-    )
+    matched = lww_winner_rows(df, key=key, order_cols=order_cols)
     return lww_dedup(matched, key=key, order_cols=order_cols)
 
 

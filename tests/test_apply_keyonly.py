@@ -296,3 +296,74 @@ def test_apply_jobs_are_named_by_layer(spark, tmp_path):
     assert sc.getLocalProperty("spark.job.description") is None
     assert set(populated) == {"apply.discover", "apply.write"}, populated
     assert len(populated) <= MAX_APPLY_JOBS, populated
+
+
+def test_building_plans_runs_no_job(spark, tmp_path):
+    """Building a plan runs no Spark job: the LSH band rows of a batch's
+    winners (a frame behind the LWW exchange is not fanned out, so its
+    partition count is never asked for), and the apply's merge against a
+    populated table with tombstones."""
+    from adsimportpipeline_spark.apply import _merged_winners, pages_schema_for
+    from adsimportpipeline_spark.evolve import reconcile_schema
+    from adsimportpipeline_spark.operators.incremental_dedup import band_rows, batch_winner_texts
+
+    log = str(tmp_path / "log")
+    generate_change_log(spark, GenSpec(n_events=2000, n_urls=200, seed=9)).write.parquet(log)
+    ev = spark.read.parquet(log)
+    table = LakeTable.create(spark, str(tmp_path / "t"), PAGES_SCHEMA, n_buckets=8)
+    apply_batch(table, ev.filter("log_offset < 1500"), 0)
+    m = table.manifest()
+    assert m["tombstone_files"] and any(m["buckets"].values())
+    batch = ev.filter("log_offset >= 1500")
+
+    assert _jobs_of(spark, lambda: band_rows(batch_winner_texts(batch))) == 0
+    target = reconcile_schema(table.schema(m), pages_schema_for(batch.schema))
+    assert _jobs_of(spark, lambda: _merged_winners(table, m, batch, list(range(8)), target)) == 0
+
+
+def test_fold_rule_bounds_the_append_branches(spark, tmp_path, monkeypatch):
+    """The lake's one fold rule (``LakeTable.fold_due``, run by
+    ``apply_batch`` after its commit) at a bound of 3 files, over 8 applies
+    with deletes in every batch: neither the tombstone nor the lineage
+    branch ever holds more than the bound plus the files one apply adds,
+    and the folded table reads the same rows, tombstones and lineage as an
+    unfolded twin."""
+    from adsimportpipeline_spark.lake import table as lake
+    from adsimportpipeline_spark.schema import LINEAGE_SCHEMA
+
+    log = str(tmp_path / "log")
+    generate_change_log(spark, GenSpec(n_events=2400, n_urls=200, seed=5)).write.parquet(log)
+    ev = spark.read.parquet(log)
+    batches = [ev.filter(F.col("log_offset").between(k * 300, k * 300 + 299)) for k in range(8)]
+    assert all(b.filter("op = 'delete'").count() for b in batches)
+    branches = ("tombstone_files", "lineage_files")
+    folded = LakeTable.create(spark, str(tmp_path / "folded"), PAGES_SCHEMA, n_buckets=4)
+    twin = LakeTable.create(spark, str(tmp_path / "twin"), PAGES_SCHEMA, n_buckets=4)
+
+    def sizes(t):
+        m = t.manifest()
+        return [len(m[b]) for b in branches]
+
+    committed = []  # branch sizes after each data commit, before its fold
+    fold = folded.fold_due
+    monkeypatch.setattr(folded, "fold_due", lambda: (committed.append(sizes(folded)), fold()))
+    folds = 0
+    for i, batch in enumerate(batches):
+        monkeypatch.setattr(lake, "COMPACT_APPENDS_EVERY", 3)
+        before = sizes(folded)
+        apply_batch(folded, batch, i)
+        after = sizes(folded)
+        for n_before, n_committed, n_after in zip(before, committed[-1], after):
+            assert n_after <= 3 + (n_committed - n_before), (i, before, committed[-1], after)
+        folds += after != committed[-1]
+        monkeypatch.setattr(lake, "COMPACT_APPENDS_EVERY", 10**6)
+        apply_batch(twin, batch, i)
+    assert folds and min(sizes(twin)) > 3  # the rule fired; unfolded, both passed it
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    assert rows(folded.read()) == rows(twin.read())
+    assert rows(folded.read_tombstones(TOMBSTONE_SCHEMA)) == rows(twin.read_tombstones(TOMBSTONE_SCHEMA))
+    lin = [t.read_lineage(LINEAGE_SCHEMA).drop("merge_latency_ms") for t in (folded, twin)]
+    assert rows(lin[0]) == rows(lin[1])

@@ -1,9 +1,8 @@
-"""Bucket placement: ``bucket_partitioned`` puts each bucket whole on one
-of ``min(len(buckets), defaultParallelism)`` partitions, none empty (the
-data write places any frame that comes without ``_bucket`` this way).
-Every ``apply_batch`` writes through one bucket-keyed merge exchange, with
-no broadcast and no join, and its one Python pass writes one file per
-touched bucket."""
+"""Bucket placement: every lake write places rows by one hash exchange on
+``_bucket`` (``lake.table.bucket_placed``), so each bucket is whole in one
+writer task and each write gives a bucket one file.  Every ``apply_batch``
+writes through one bucket-keyed merge exchange, with no broadcast and no
+join, and its one Python pass writes one file per touched bucket."""
 
 from __future__ import annotations
 
@@ -12,38 +11,8 @@ from pyspark.sql import functions as F
 
 from adsimportpipeline_spark.apply import apply_batch
 from adsimportpipeline_spark.datagen import GenSpec, generate_change_log
-from adsimportpipeline_spark.lake.table import LakeTable, bucket_expr, bucket_partitioned
+from adsimportpipeline_spark.lake.table import LakeTable, bucket_expr
 from adsimportpipeline_spark.schema import PAGES_SCHEMA
-
-
-@pytest.mark.parametrize(
-    "buckets",
-    [
-        list(range(8)),  # all 8 of 8
-        [1, 9],  # of 16: alias under a plain mod 8
-        [5],
-        list(range(0, 60, 3)),  # 20 buckets, more than the cores
-    ],
-    ids=["all8", "aliasing", "single", "more_than_cores"],
-)
-def test_bucket_partitioned_places_whole_buckets(spark, buckets):
-    n_cores = spark.sparkContext.defaultParallelism
-    ids = F.array(*[F.lit(b) for b in buckets])
-    df = spark.range(40 * len(buckets)).withColumn(
-        "_bucket", F.get(ids, (F.col("id") % len(buckets)).cast("int"))
-    )
-    placed = bucket_partitioned(df, buckets)
-    n_parts = min(len(buckets), n_cores)
-    assert placed.rdd.getNumPartitions() == n_parts
-
-    pairs = placed.select("_bucket", F.spark_partition_id().alias("pid")).distinct().collect()
-    pid_of: dict[int, set] = {}
-    for r in pairs:
-        pid_of.setdefault(r["_bucket"], set()).add(r["pid"])
-    assert sorted(pid_of) == sorted(buckets)
-    assert all(len(pids) == 1 for pids in pid_of.values()), pid_of
-    # no empty partition: every partition id holds some bucket
-    assert set().union(*pid_of.values()) == set(range(n_parts))
 
 
 def _apply_executions(spark, fn) -> list:
@@ -80,7 +49,60 @@ def _touched(batch, n_buckets: int) -> set[int]:
     return {r.b for r in batch.select(bucket_expr("url", n_buckets).alias("b")).distinct().collect()}
 
 
-def test_bulk_apply_writes_one_file_per_touched_bucket(spark, tmp_path):
+@pytest.fixture
+def no_coalescing(spark):
+    """Partition coalescing off: a write runs one task per shuffle partition,
+    so each task holds several buckets and none is merged away."""
+    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
+    was = spark.conf.get(coalesce)
+    spark.conf.set(coalesce, "false")
+    yield
+    spark.conf.set(coalesce, was)
+
+
+def _one_file_per_bucket(spark, table: LakeTable, new_paths: set[str]) -> None:
+    """Each bucket got at most one of ``new_paths``, holding only its rows."""
+    n = table.manifest()["n_buckets"]
+    for b, entries in table.manifest()["buckets"].items():
+        mine = [e["path"] for e in entries if e["path"] in new_paths]
+        assert len(mine) <= 1, (b, mine)
+        for path in mine:
+            rows = spark.read.parquet(path).select(bucket_expr("url", n).alias("b"))
+            assert {r.b for r in rows.distinct().collect()} == {int(b)}
+
+
+@pytest.mark.parametrize("writer", ["append_buckets", "compact", "rescale_buckets"])
+def test_writers_place_each_bucket_whole(spark, tmp_path, no_coalescing, writer):
+    """Each bucket is whole in one writer task, so a write gives it one file:
+    a fast-append of 200 urls, a compaction of buckets that hold two files
+    each, and a rescale 4 -> 16 buckets."""
+    from datetime import datetime
+
+    def rows(lo, hi):
+        return spark.createDataFrame(
+            [(f"u{i:04d}", datetime(2024, 1, 1), i, None, f"t{i}", "en", "s", None)
+             for i in range(lo, hi)], PAGES_SCHEMA)
+
+    t = LakeTable.create(spark, str(tmp_path / "t"), PAGES_SCHEMA, n_buckets=4)
+    t.append_buckets(rows(0, 200))
+    t.append_buckets(rows(200, 400))
+    before = {e["path"] for es in t.manifest()["buckets"].values() for e in es}
+    if writer == "append_buckets":
+        t.append_buckets(rows(400, 600))
+    elif writer == "compact":
+        t.compact()
+    else:
+        t.rescale_buckets(16)
+    after = {e["path"] for es in t.manifest()["buckets"].values() for e in es}
+    new = after - before
+    assert len(new) == t.manifest()["n_buckets"], sorted(new)  # every bucket got its file
+    _one_file_per_bucket(spark, t, new)
+    if writer != "append_buckets":
+        assert all(len(es) == 1 for es in t.manifest()["buckets"].values())
+    assert t.read().count() == (600 if writer == "append_buckets" else 400)
+
+
+def test_bulk_apply_writes_one_file_per_touched_bucket(spark, tmp_path, no_coalescing):
     """A bulk apply of a few hundred urls into an empty 64-bucket table,
     with partition coalescing off so the write runs one task per shuffle
     partition and each task holds several buckets: each touched bucket
@@ -90,13 +112,7 @@ def test_bulk_apply_writes_one_file_per_touched_bucket(spark, tmp_path):
     generate_change_log(spark, GenSpec(n_events=600, n_urls=40, seed=9)).write.parquet(log)
     ev = spark.read.parquet(log)
     table = LakeTable.create(spark, str(tmp_path / "t"), PAGES_SCHEMA, n_buckets=64)
-    coalesce = "spark.sql.adaptive.coalescePartitions.enabled"
-    was = spark.conf.get(coalesce)
-    spark.conf.set(coalesce, "false")
-    try:
-        apply_batch(table, ev, 0)
-    finally:
-        spark.conf.set(coalesce, was)
+    apply_batch(table, ev, 0)
 
     touched = _touched(ev, 64)
     live = _touched(table.read(), 64)  # a bucket whose urls all ended deleted has no rows
@@ -148,9 +164,8 @@ def test_incremental_apply_write_is_one_merge_exchange(spark, tmp_path):
 
 def test_writer_streams_buckets_in_bounded_row_groups(spark, tmp_path, monkeypatch):
     """With a one-byte write buffer and 25-row Arrow batches, the writer
-    flushes every batch: each bucket's file holds many row groups, its rows
-    stay in the table's ``sort_cols`` order across them, and the table
-    holds exactly the rows written."""
+    flushes every batch: each bucket's file holds many row groups, and the
+    table holds exactly the rows written."""
     import random
     from datetime import datetime
 
@@ -162,8 +177,7 @@ def test_writer_streams_buckets_in_bounded_row_groups(spark, tmp_path, monkeypat
     random.Random(3).shuffle(urls)
     rows = [(u, datetime(2024, 1, 1), i, b"<p>x</p>", f"text {u}", "en", "s", None)
             for i, u in enumerate(urls)]
-    t = LakeTable.create(spark, str(tmp_path / "t"), PAGES_SCHEMA, n_buckets=4,
-                         sort_cols=["url"])
+    t = LakeTable.create(spark, str(tmp_path / "t"), PAGES_SCHEMA, n_buckets=4)
     monkeypatch.setattr(table_mod, "_WRITE_BUFFER_BYTES", 1)
     batch_rows = "spark.sql.execution.arrow.maxRecordsPerBatch"
     was = spark.conf.get(batch_rows)
@@ -176,9 +190,6 @@ def test_writer_streams_buckets_in_bounded_row_groups(spark, tmp_path, monkeypat
     buckets = t.manifest()["buckets"]
     assert all(len(files) == 1 for files in buckets.values()), buckets
     for (entry,) in buckets.values():
-        f = pq.ParquetFile(entry["path"])
-        assert f.metadata.num_row_groups > 1
-        col = f.read(columns=["url"])["url"].to_pylist()
-        assert col == sorted(col)
+        assert pq.ParquetFile(entry["path"]).metadata.num_row_groups > 1
     got = sorted((r.url, r.log_offset, r.text) for r in t.read().collect())
     assert got == sorted((u, i, f"text {u}") for u, _, i, _, _, _, _, _ in rows)

@@ -226,7 +226,7 @@ def test_index_file_groups_stay_bounded(spark, tmp_path):
     replay longer than ``COMPACT_APPENDS_EVERY`` batches, the touched
     buckets are compacted so no file group grows past that bound, and no
     band row is lost."""
-    from adsimportpipeline_spark.apply import COMPACT_APPENDS_EVERY
+    from adsimportpipeline_spark.lake.table import COMPACT_APPENDS_EVERY
 
     index = create_lsh_index(spark, str(tmp_path / "lsh"), n_buckets=2)
     worst = []

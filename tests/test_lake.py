@@ -109,6 +109,43 @@ def test_append_compaction_and_snapshot_expiry(spark, tmp_path):
     assert t.last_epoch("cdc") == 11
 
 
+def test_compact_appends_with_nothing_to_fold_keeps_the_version(spark, tmp_path):
+    """With no branch of more than one file there is nothing to fold:
+    compact_appends publishes no snapshot and returns the current version."""
+    t = LakeTable.create(spark, str(tmp_path / "ca"), PAGES_SCHEMA, n_buckets=2)
+    assert t.compact_appends() == t.current_version() == 1  # empty branches
+    tombs = t.write_append(_tomb_rows(spark, 2, 0).coalesce(1), "tomb")
+    v = t.overwrite_buckets(_rows(spark, ["a"]), [0, 1],
+                            appends=lambda _report: {"tombstone_files": tombs})
+    m = t.manifest()
+    assert len(m["tombstone_files"]) == 1
+    assert t.compact_appends() == v == t.current_version()
+    assert t.manifest() == m
+
+
+def test_fold_due_absorbs_one_lost_cas_and_skips_on_a_second(spark, tmp_path, monkeypatch):
+    """The fold is cosmetic: racing another committer it re-plans once,
+    and when it loses again it skips without raising, leaving the table
+    as it was."""
+    from adsimportpipeline_spark.lake import table as lake
+
+    t = LakeTable.create(spark, str(tmp_path / "fd"), PAGES_SCHEMA, n_buckets=2)
+    for b in range(2):
+        tombs = t.write_append(_tomb_rows(spark, 1, b).coalesce(1), "tomb")
+        t.overwrite_buckets(_rows(spark, ["a"]), [0, 1],
+                            appends=lambda _report: {"tombstone_files": tombs})
+    monkeypatch.setattr(lake, "COMPACT_APPENDS_EVERY", 1)  # two files: due
+    m, tries = t.manifest(), []
+
+    def lost(*_args, **_kwargs):
+        tries.append(1)
+        raise lake.CommitConflictError("raced")
+
+    monkeypatch.setattr(t, "_commit_manifest", lost)
+    t.fold_due()
+    assert len(tries) == 2 and t.manifest() == m
+
+
 def test_concurrent_manifest_commit_never_lost(spark, tmp_path):
     """Two committers racing for the same version must BOTH land: the
     hard-link CAS makes claiming a version file atomic, so an exists-probe
@@ -216,7 +253,6 @@ def test_create_racing_create_never_wipes_committed_data(spark, tmp_path):
         "lineage_files": [],
         "committed_epochs": {},
         "stats_cols": [],
-        "sort_cols": [],
     }
     got = b._commit_manifest(fresh, create_only=True)
     assert got == v  # no new version published
@@ -639,11 +675,12 @@ def test_range_bounds_of_other_shapes_never_lose_rows(spark, tmp_path):
 
 
 def test_create_option_mismatch_raises_not_silently_ignored(spark, tmp_path):
-    """Re-creating an existing table with EXPLICIT stats_cols/sort_cols
-    that disagree with the manifest must raise — a caller expecting
+    """Re-creating an existing table with an EXPLICIT stats_cols that
+    disagrees with the manifest must raise — a caller expecting
     stats-pruned reads would otherwise silently get full scans forever.
     Option-less reopens (None) stay idempotent: the streaming runners
-    re-call create() on every start."""
+    re-call create() on every start.  A manifest that still carries the
+    removed write-order key opens, and the key is ignored."""
     import pytest as _pytest
 
     root = str(tmp_path / "opt")
@@ -655,15 +692,20 @@ def test_create_option_mismatch_raises_not_silently_ignored(spark, tmp_path):
     with _pytest.raises(ValueError, match="stats_cols"):
         LakeTable.create(spark, root, PAGES_SCHEMA, n_buckets=4,
                          stats_cols=["warc_ts"])
-    with _pytest.raises(ValueError, match="sort_cols"):
-        LakeTable.create(spark, root, PAGES_SCHEMA, n_buckets=4,
-                         sort_cols=["url"])
     # explicit AGREEING options: still idempotent
     root2 = str(tmp_path / "opt2")
     LakeTable.create(spark, root2, PAGES_SCHEMA, n_buckets=4,
-                     stats_cols=["warc_ts"], sort_cols=["url"])
-    LakeTable.create(spark, root2, PAGES_SCHEMA, n_buckets=4,
-                     stats_cols=["warc_ts"], sort_cols=["url"])
+                     stats_cols=["warc_ts"])
+    t2 = LakeTable.create(spark, root2, PAGES_SCHEMA, n_buckets=4,
+                          stats_cols=["warc_ts"])
+    # a manifest written while tables had a write order: opens, key ignored
+    m = t2.manifest()
+    m["sort_cols"] = ["url"]
+    m["version"] += 1
+    t2._commit_manifest(m, parent_version=m["version"] - 1)
+    LakeTable.create(spark, root2, PAGES_SCHEMA, n_buckets=4, stats_cols=["warc_ts"])
+    t2.overwrite_buckets(_rows(spark, ["b", "a"]), [0, 1, 2, 3])
+    assert sorted(r.url for r in t2.read().collect()) == ["a", "b"]
 
 
 def test_column_stats_survive_compaction_and_cas_retry(spark, tmp_path):
@@ -722,36 +764,6 @@ def test_rescale_buckets_preserves_state_and_geometry(spark, tmp_path):
     # next commit uses the manifest's new count transparently
     t.append_buckets(_rows(spark, ["fresh"]), epoch_source="cdc", epoch=4)
     assert {r["url"] for r in t.read().collect()} == set(urls) | {"fresh"}
-
-
-def test_sort_cols_orders_rows_within_bucket_files(spark, tmp_path):
-    """Write-order (Iceberg sort-order analog): with sort_cols=['url'],
-    every data file's rows come out url-sorted, so parquet row-group
-    stats on the key are tight and pushed key predicates skip within
-    files.  Applies to CoW commits, fast-appends, and rescale rewrites."""
-    import pyarrow.parquet as pq
-
-    t = LakeTable.create(
-        spark, str(tmp_path / "so"), PAGES_SCHEMA, n_buckets=2,
-        sort_cols=["url"],
-    )
-    import random
-    urls = [f"u{i:04d}" for i in range(200)]
-    random.Random(5).shuffle(urls)
-    t.overwrite_buckets(_rows(spark, urls), [0, 1])
-    t.append_buckets(_rows(spark, [f"v{i:04d}" for i in range(50)][::-1]))
-    t.rescale_buckets(4)
-
-    def _assert_sorted_files():
-        m = t.manifest()
-        entries = [e for es in m["buckets"].values() for e in es]
-        assert entries
-        for e in entries:
-            col = pq.read_table(e["path"], columns=["url"])["url"].to_pylist()
-            assert col == sorted(col), f"unsorted file {e['path']}"
-
-    _assert_sorted_files()
-    assert t.read().count() == 250
 
 
 def test_stat_key_encoding_is_order_preserving():

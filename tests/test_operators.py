@@ -128,7 +128,14 @@ def test_lww_variants_agree(spark):
     b = sorted(map(tuple, lww_dedup_salted(ev, n_salts=7).collect()))
     c = sorted(map(tuple, lww_dedup_window(ev).collect()))
     d = sorted(map(tuple, lww_dedup_semi(ev).collect()))
-    e = sorted(map(tuple, lww_dedup_semi(ev, broadcast_keys=False).collect()))
+    # broadcasts off: the winner keys take the shuffled join
+    threshold = "spark.sql.autoBroadcastJoinThreshold"
+    old = spark.conf.get(threshold)
+    try:
+        spark.conf.set(threshold, "-1")
+        e = sorted(map(tuple, lww_dedup_semi(ev).collect()))
+    finally:
+        spark.conf.set(threshold, old)
     assert a == b == c == d == e
 
 

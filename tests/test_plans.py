@@ -34,19 +34,22 @@ def _ev(spark, sf_dir):
 def test_semi_lww_join_strategy_adapts(spark, sf_dir):
     """The winner-keys join must not be a hard-coded broadcast: forcing
     broadcast of 10^9 distinct keys in a bulk replay is a driver OOM.
-    True/False force the strategy; the default defers to AQE, which picks
-    broadcast at runtime only because this key set is actually small."""
+    ``bounded_broadcast`` broadcasts the keys only while their count fits
+    the budget ``spark.sql.autoBroadcastJoinThreshold`` sets: this small
+    key set is broadcast, and with broadcasts off (a budget of 0 rows) the
+    join is shuffled."""
     ev = _ev(spark, sf_dir)
-    assert "BroadcastHashJoin" in _plan(lww_dedup_semi(ev, broadcast_keys=True))
-    p_shuffled = _plan(lww_dedup_semi(ev, broadcast_keys=False))
-    assert "BroadcastHashJoin" not in p_shuffled
-    assert "ShuffledHashJoin" in p_shuffled or "SortMergeJoin" in p_shuffled
-
     adaptive = lww_dedup_semi(ev)
     adaptive.collect()  # let AQE finalize
-    p_final = _plan(adaptive)
-    assert "AdaptiveSparkPlan" in p_final
-    assert "BroadcastHashJoin" in p_final  # runtime choice on a small key set
+    assert "BroadcastHashJoin" in _plan(adaptive)  # inside the bound
+
+    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    try:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+        p_shuffled = _plan(lww_dedup_semi(ev))
+    finally:
+        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
+    assert "BroadcastHashJoin" not in p_shuffled and "ShuffledHashJoin" in p_shuffled  # past it
 
 
 def test_tombstone_guard_no_forced_broadcast(spark, sf_dir):
