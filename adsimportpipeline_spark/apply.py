@@ -6,14 +6,26 @@ This is the Spark rebuild of the reference's task chain
 ``task_find_new_records -> task_read_records -> task_merge_metadata ->
 update_storage`` (tasks.py:34-119, app.py:24-74) collapsed into one Spark
 query per micro-batch into a table that stores nothing (no data files, no
-tombstone files: every bulk or initial load) and two into a populated one:
+tombstone files: every bulk or initial load) or a batch that covers every
+bucket, and two otherwise:
 
 1. **One discovery query**, only when the table has stored rows or
-   tombstones to prune: the distinct buckets the batch touches, collected
-   through ``toArrow()``.  Only those table buckets are read and rewritten
-   (the semantic twin of the reference's changed-record short-circuit,
-   tasks.py:52-64).  A table that stores nothing has nothing to prune and
-   skips it: its touched buckets are the ones the write reports.
+   tombstones to prune and the batch may miss a bucket: the distinct
+   buckets the batch touches, collected through ``toArrow()``.  Only those
+   table buckets are read and rewritten (the semantic twin of the
+   reference's changed-record short-circuit, tasks.py:52-64).  When the
+   batch is an unfiltered parquet scan, its footers give its events E with
+   no job (:func:`.lww._metadata_row_upper_bound` with ``exact=True``,
+   which reads a ``foreachBatch`` batch's files from its RDD's
+   partitions); when nb·e^(−E/nb), the expected number of buckets E
+   uniformly hashed events miss, is below 0.5, the apply reads every
+   bucket and skips the query.  A filtered batch has no exact count and
+   always runs the query: its footers bound E only from above.  Reading a
+   superset is always correct: the merge returns an untouched bucket's
+   stored rows unchanged, and lineage and ``touched_buckets`` count only
+   the buckets the writer reports events for.  A table that stores
+   nothing has nothing to prune and skips it: its touched buckets are the
+   ones the write reports.
 2. **One merge** of batch (``_src`` 0, no Python on the map side) ∪ stored
    rows (``op='upsert'``) ∪ tombstones (``op='delete'``, null payload) of
    the touched buckets (``_src`` 1): one AQE-coalesced hash exchange on
@@ -109,11 +121,13 @@ set-up is a few tens of ms.
 
 from __future__ import annotations
 
+import math
 import time
 from contextlib import contextmanager
 from datetime import datetime, timezone
 
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -122,6 +136,7 @@ from pyspark.sql.pandas.types import to_arrow_schema
 from .evolve import align_to_schema, reconcile_schema
 from .lake.table import _MERGE_COLS, LakeTable, bucket_expr, bucket_placed
 from .operators.cdc import tombstone_guard  # noqa: F401  (re-exported: tracers wrap it by name)
+from .operators.lww import _metadata_row_upper_bound
 from .operators.lww import (  # noqa: F401  (re-exported: tracers wrap them by name)
     lww_dedup_semi,
     lww_winner_rows,
@@ -166,9 +181,26 @@ def _jobs_named(table: LakeTable, name: str):
         sc.setJobDescription(outer)
 
 
+def _covers_every_bucket(events_bound: int | None, n_buckets: int) -> bool:
+    """True when a batch of ``events_bound`` events, hashed uniformly over
+    ``n_buckets``, is expected to miss fewer than half a bucket
+    (nb·e^(−E/nb) < 0.5): discovery could then prune nothing, so the apply
+    reads every bucket.  E ≥ 23 at 8 buckets, ≥ 311 at 64.
+
+    The 0.5 bounds what a skip rewrites for nothing, not the wall time:
+    on 4 vCPUs, replays into tables of about 150 to 4,000 stored rows per
+    bucket ran faster without the query (~0.06 s of it) even at 3 missed
+    buckets of 8 and 9 of 64, because the extra buckets' tasks run beside
+    the touched ones.  A missed bucket's rewrite grows with its stored bytes,
+    the query's cost does not, so the rule keeps the expected over-read
+    under one bucket at any table size."""
+    return events_bound is not None and n_buckets * math.exp(-events_bound / n_buckets) < 0.5
+
+
 def _touched_buckets(batch_df: DataFrame, key: str, n_buckets: int) -> list[int]:
     """THE discovery query, for a table with stored rows or tombstones to
-    prune: the buckets the batch touches, from one narrow scan of it."""
+    prune and a batch that may miss a bucket: the buckets the batch
+    touches, from one narrow scan of it."""
     b = batch_df.select(bucket_expr(key, n_buckets).alias("b")).distinct().toArrow()
     return b.column("b").to_pylist()
 
@@ -235,9 +267,15 @@ def apply_batch(
     re-delivery of an already-committed batch_id is a no-op.
 
     ``prune_buckets`` has no effect: a table with stored rows or tombstones
-    always prunes its reads to the touched buckets, and a table with
-    neither has nothing to prune.  The parameter stays for callers that
-    still pass it."""
+    prunes its reads to the touched buckets unless the batch covers every
+    bucket (:func:`_covers_every_bucket`), and a table with neither has
+    nothing to prune.  The parameter stays for callers that still pass it.
+
+    The stats say whether the discovery query ran (``discovered``) and
+    give the footer count of the batch's events it was decided by
+    (``events_bound``; None when the batch is filtered or not a parquet
+    scan, or, on a table that stores nothing, not asked for).  ``touched_buckets`` counts the buckets that
+    received events."""
     if batch_id <= table.last_epoch(epoch_source):
         return {"batch_id": batch_id, "skipped": True}
 
@@ -251,32 +289,41 @@ def apply_batch(
     m = table.manifest()
     key, nb = m["key"], m["n_buckets"]
     _mark("manifest_read")
-    # batch_df is deliberately NOT cached: its two passes (the discovery
-    # query and the merge) prune to different columns, so columnar re-reads
-    # from the source beat materializing full rows on heap.
-    # 1. discovery, only when there are stored reads to prune: which table
-    #    buckets does this batch touch
-    touched = None
+    # batch_df is deliberately NOT cached.  Under foreachBatch it is a
+    # LogicalRDD (inputFiles() is [] there), so the discovery query and the
+    # merge each re-run the source's full-column scan; a batch that covers
+    # every bucket skips the first.
+    # 1. discovery, only when there are stored reads to prune and the
+    #    batch's footers do not show it touching every bucket (a filtered
+    #    batch's footers only bound it from above, so they show nothing)
+    touched, events_bound, discovered = None, None, False
     if m["tombstone_files"] or any(m["buckets"].values()):
-        with _jobs_named(table, "apply.discover"):
-            touched = _touched_buckets(batch_df, key, nb)
+        events_bound = _metadata_row_upper_bound(batch_df, exact=True)
+        if _covers_every_bucket(events_bound, nb):
+            touched = list(range(nb))
+        else:
+            with _jobs_named(table, "apply.discover"):
+                touched = _touched_buckets(batch_df, key, nb)
+            discovered = True
     evolved = reconcile_schema(table.schema(m), pages_schema_for(batch_df.schema))
     _mark("dedup_and_touched")
     # 4. lineage, which the write below calls for once its data files are
     #    written (so it carries the true merge latency): one row per bucket
-    #    of the writer's report, attached in the same manifest flip as the
-    #    data and audit files
+    #    the writer reports events for (a bucket read only because the
+    #    batch covers every bucket is reported with none), attached in the
+    #    same manifest flip as the data and audit files
     latency_ms = 0.0
     n_touched = 0
 
     def _appends(report: pa.Table) -> dict[str, list[str]]:
         nonlocal latency_ms, n_touched
         latency_ms = (time.time() - t0) * 1000.0
-        n_touched = report.num_rows
+        received = report.filter(pc.greater(report.column("events"), 0))
+        n_touched = received.num_rows
         if not n_touched:
             return {}
         return {"lineage_files": table.write_append(
-            _arrow_lineage(report, batch_id, latency_ms), "lin")}
+            _arrow_lineage(received, batch_id, latency_ms), "lin")}
 
     with _jobs_named(table, "apply.write"):
         # 2-3. the merge; the write pass runs in its reduce tasks and writes
@@ -302,6 +349,8 @@ def apply_batch(
         "skipped": False,
         "version": version,
         "touched_buckets": n_touched,
+        "discovered": discovered,
+        "events_bound": events_bound,
         "latency_ms": latency_ms,
         "phases": phases,
         "committed_at": datetime.now(timezone.utc).isoformat(),

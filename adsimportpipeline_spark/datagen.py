@@ -22,6 +22,8 @@ expected final table state for equivalence asserts.
 
 from __future__ import annotations
 
+import os
+import time
 from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
@@ -128,15 +130,23 @@ def write_change_log(
 ) -> None:
     """Materialize the change log as parquet split into n_files files.
 
-    ``ordered=True`` range-partitions + sorts by log_offset so a streaming
-    file source consumes micro-batches in roughly delivery order (realistic
-    binlog tailing).  Batch replay benchmarks can skip the global sort."""
+    ``ordered=True`` range-partitions + sorts by log_offset and gives the
+    files distinct modification times in name (so log) order: a streaming
+    file source takes files oldest first, so it consumes micro-batches in
+    delivery order (realistic binlog tailing), and one seed splits into the
+    same batches on every replay.  Batch replay benchmarks can skip the
+    global sort."""
     df = generate_change_log(spark, spec)
     if ordered:
         df = df.repartitionByRange(n_files, "log_offset").sortWithinPartitions("log_offset")
     else:
         df = df.repartition(n_files)
     df.write.mode("overwrite").parquet(path)
+    if ordered:
+        files = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        t0 = int(time.time()) - len(files)
+        for i, f in enumerate(files):
+            os.utime(os.path.join(path, f), (t0 + i, t0 + i))
 
 
 # ----------------------------------------------------------------------------

@@ -40,6 +40,7 @@ from __future__ import annotations
 import json
 import os
 import re
+import threading
 import uuid
 
 import numpy as np
@@ -51,11 +52,15 @@ from pyspark.sql import types as T
 from pyspark.sql.pandas.types import to_arrow_schema
 
 from ..evolve import align_to_schema
-from ..schema import TOMBSTONE_SCHEMA
+from ..schema import LINEAGE_SCHEMA, TOMBSTONE_SCHEMA
 
 _MANIFEST_DIR = "_manifests"
 _CURRENT = "_CURRENT"
 _COMMIT_LOCK = "_COMMIT_LOCK"
+
+#: Serializes :meth:`LakeTable._read_parquet`'s save, set and restore of the
+#: session's listing threshold across threads.
+_LISTING_CONF_LOCK = threading.Lock()
 
 
 class CommitConflictError(RuntimeError):
@@ -537,6 +542,35 @@ class LakeTable:
             json.loads(m["schemas"][str(m["current_schema_id"])])
         )
 
+    def _read_parquet(self, schema: T.StructType, paths: list[str]) -> DataFrame:
+        """THE read of manifest-listed files.  The manifest names every file,
+        so nothing needs listing: past
+        ``spark.sql.sources.parallelPartitionDiscovery.threshold`` paths (32
+        by default) Spark's file index would list them with a Spark job
+        while the plan is built (one job and ~0.4 s per 1 k-event apply into
+        a 64-bucket table on 4 vCPUs).  When there are more paths than the
+        threshold, the session's threshold is set to ``len(paths)`` for the
+        duration of the ``parquet`` call, which builds the index, so the
+        driver lists them itself; the caller's value is restored after.
+        The session is shared (``foreachBatch`` applies run on the stream's
+        thread), so one lock serializes the save, set and restore: two
+        reads at once cannot leave a read's threshold set for the
+        session."""
+        conf = self.spark.conf
+        name = "spark.sql.sources.parallelPartitionDiscovery.threshold"
+        with _LISTING_CONF_LOCK:
+            if len(paths) <= int(conf.get(name)):
+                return self.spark.read.schema(schema).parquet(*paths)
+            outer = conf.get(name, None)
+            conf.set(name, str(len(paths)))
+            try:
+                return self.spark.read.schema(schema).parquet(*paths)
+            finally:
+                if outer is None:
+                    conf.unset(name)
+                else:
+                    conf.set(name, outer)
+
     def _read_file_groups(self, m: dict, entries: list[dict]) -> DataFrame:
         """Read heterogeneous-schema file groups aligned to current schema
         (an empty frame of that schema when there are none)."""
@@ -549,7 +583,7 @@ class LakeTable:
         parts = []
         for sid, paths in by_sid.items():
             s = T.StructType.fromJson(json.loads(m["schemas"][str(sid)]))
-            parts.append(align_to_schema(self.spark.read.schema(s).parquet(*paths), target))
+            parts.append(align_to_schema(self._read_parquet(s, paths), target))
         df = parts[0]
         for p in parts[1:]:
             df = df.unionByName(p)
@@ -785,7 +819,7 @@ class LakeTable:
         paths = [e["path"] for e in m["tombstone_files"]]
         if not paths:
             return self.spark.createDataFrame([], tomb_schema)
-        df = self.spark.read.schema(tomb_schema).parquet(*paths)
+        df = self._read_parquet(tomb_schema, paths)
         return df.distinct() if distinct else df
 
     def read_lineage(self, lineage_schema: T.StructType) -> DataFrame:
@@ -793,7 +827,7 @@ class LakeTable:
         paths = [e["path"] for e in m["lineage_files"]]
         if not paths:
             return self.spark.createDataFrame([], lineage_schema)
-        return self.spark.read.schema(lineage_schema).parquet(*paths)
+        return self._read_parquet(lineage_schema, paths)
 
     # -------------------------------------------------------------- epochs
     def last_epoch(self, source: str) -> int:
@@ -1085,13 +1119,13 @@ class LakeTable:
         def attempt() -> int:
             m = self.manifest()
             parent = m["version"]
-            due = [(b, t) for b, t in (("tombstone_files", "tomb"), ("lineage_files", "lin"))
+            due = [(b, t, s) for b, t, s in (("tombstone_files", "tomb", TOMBSTONE_SCHEMA),
+                                             ("lineage_files", "lin", LINEAGE_SCHEMA))
                    if len(m[b]) > 1]
             if not due:
                 return parent
-            for branch, tag in due:
-                paths = [e["path"] for e in m[branch]]
-                df = self.spark.read.parquet(*paths)
+            for branch, tag, schema in due:
+                df = self._read_parquet(schema, [e["path"] for e in m[branch]])
                 if branch == "tombstone_files":
                     df = df.distinct()
                 m[branch] = [

@@ -43,37 +43,43 @@ BROADCAST_MAX_KEYS = 4_000_000
 #: bound is unknown, because reading that many footers is itself expensive.
 METADATA_MAX_FILES = 1024
 
+_FILE_PARTITION = "org.apache.spark.sql.execution.datasources.FilePartition"
 
-def _is_simple_scan(df: DataFrame) -> bool:
-    """True iff ``df``'s analyzed plan is ONE file-relation leaf with only
-    row-preserving-or-reducing nodes (Project/Filter/alias) above it.  A
-    join, explode/generate, or self-union would make ``inputFiles()`` an
-    invalid row-count proxy (Spark dedupes the file list; a join multiplies
-    rows), so footer arithmetic is only trusted on this shape."""
-    allowed_inner = {"Project", "Filter", "SubqueryAlias", "ResolvedHint", "View"}
+
+def _scan_leaf(df: DataFrame, filters: bool = True):
+    """The leaf of ``df``'s analyzed plan (a py4j handle) when it is ONE
+    file-relation leaf with only row-preserving-or-reducing nodes
+    (Project/Filter/alias) above it, else None.  A join, explode/generate,
+    or self-union would make ``inputFiles()`` an invalid row-count proxy
+    (Spark dedupes the file list; a join multiplies rows), so footer
+    arithmetic is only trusted on this shape.  With ``filters=False`` a
+    Filter fails the shape too: only row-preserving nodes may sit above
+    the leaf."""
+    allowed_inner = {"Project", "SubqueryAlias", "ResolvedHint", "View"}
+    if filters:
+        allowed_inner.add("Filter")
     allowed_leaf = {"LogicalRelation", "Relation", "RelationV2", "LogicalRDD"}
     try:
-        stack = [df._jdf.queryExecution().analyzed()]
-        leaves = 0
-        while stack:
-            node = stack.pop()
+        node = df._jdf.queryExecution().analyzed()
+        while True:
             ch = node.children()
             n = ch.size()
             if n == 0:
-                leaves += 1
-                if node.nodeName() not in allowed_leaf:
-                    return False
-            else:
-                if node.nodeName() not in allowed_inner:
-                    return False
-                for i in range(n):
-                    stack.append(ch.apply(i))
-        return leaves == 1
+                return node if node.nodeName() in allowed_leaf else None
+            # every allowed inner node is unary
+            if n > 1 or node.nodeName() not in allowed_inner:
+                return None
+            node = ch.apply(0)
     except Exception:
-        return False
+        return None
 
 
-def _metadata_row_upper_bound(df: DataFrame) -> int | None:
+def _is_simple_scan(df: DataFrame) -> bool:
+    """True iff ``df`` has the plan shape :func:`_scan_leaf` accepts."""
+    return _scan_leaf(df) is not None
+
+
+def _metadata_row_upper_bound(df: DataFrame, exact: bool = False) -> int | None:
     """Upper bound on ``df``'s row count from parquet footers alone (no data
     scan, no job).  None when the frame is not a plain parquet file scan or
     listing the footers would itself be expensive — callers must treat None
@@ -81,11 +87,42 @@ def _metadata_row_upper_bound(df: DataFrame) -> int | None:
     make the true count smaller, so the bound stays valid.  The plan shape
     is validated first: for a join / generate / self-union, ``inputFiles()``
     under-counts (files dedupe; joins multiply rows), so those shapes
-    return None rather than a bogus bound."""
-    if not _is_simple_scan(df):
+    return None rather than a bogus bound.
+
+    A ``LogicalRDD`` leaf (every ``foreachBatch`` batch, whose
+    ``inputFiles()`` is ``[]``) names its files in its RDD's partitions,
+    read when every partition is a ``FilePartition``; a file split across
+    partitions counts at its ``start() == 0`` piece.  Such a leaf hides the
+    plan that made its RDD, so there the bound assumes the stream has no
+    row-multiplying node (explode, join) before the sink.  A stream with a
+    shuffle or a union has partitions that are not ``FilePartition``s and
+    gets None.
+
+    ``exact=True`` returns the count only where it is the frame's row count
+    and None otherwise: a Filter above the leaf, or on a ``LogicalRDD`` a
+    constraint carried over from the stream's plan (a deterministic filter
+    before the sink leaves one), gives None.  A non-deterministic filter in
+    the stream leaves no constraint; the count is then too high.
+    ``apply_batch`` skips its discovery query only on an exact count large
+    enough that the batch is expected to touch every bucket, so a filtered
+    batch always runs discovery, and an undercount only makes it run
+    discovery."""
+    leaf = _scan_leaf(df, filters=not exact)
+    if leaf is None:
         return None
     try:
-        files = df.inputFiles()
+        if leaf.nodeName() != "LogicalRDD":
+            files = df.inputFiles()
+        else:
+            if exact and not leaf.constraints().isEmpty():
+                return None
+            files = []
+            for part in leaf.rdd().partitions():
+                if part.getClass().getName() != _FILE_PARTITION:
+                    return None
+                files += [f.filePath().urlEncoded() for f in part.files() if f.start() == 0]
+                if len(files) > METADATA_MAX_FILES:
+                    return None
     except Exception:
         return None
     if not files or len(files) > METADATA_MAX_FILES:

@@ -297,9 +297,32 @@ def test_metadata_row_upper_bound_and_cap(spark, tmp_path):
     assert _metadata_row_upper_bound(df) == 1000
     # a filter shrinks the true count; the bound stays a valid upper bound
     assert _metadata_row_upper_bound(df.filter("id < 10")) == 1000
+    # ...but it is no longer the count, which exact=True asks for
+    assert _metadata_row_upper_bound(df.select("id"), exact=True) == 1000
+    assert _metadata_row_upper_bound(df.filter("id < 10"), exact=True) is None
     # not a file scan -> unknown
     assert _metadata_row_upper_bound(spark.range(5)) is None
 
     thr = int(spark.conf.get("spark.sql.autoBroadcastJoinThreshold"))
     # the tighter of the byte budget and the caller's explicit row cap wins
     assert _offset_broadcast_cap_rows(spark, 4_000_000) == min(thr // 8, 4_000_000)
+
+
+def test_metadata_row_count_of_a_stream_batch(spark, tmp_path):
+    """A ``foreachBatch`` batch is a ``LogicalRDD`` whose ``inputFiles()``
+    is empty: its footer count comes from the RDD's file partitions.  A
+    filter in the stream hides below that leaf; it still bounds the batch,
+    but its constraint makes the exact count unknown."""
+    from adsimportpipeline_spark.operators.lww import _metadata_row_upper_bound
+
+    src = str(tmp_path / "src")
+    spark.range(0, 300).coalesce(3).write.parquet(src)
+    seen = {}
+    for name, shape in (("plain", lambda s: s.select("id")), ("filtered", lambda s: s.filter("id % 2 = 0"))):
+        def record(df, _bid, name=name):
+            seen[name] = (df.inputFiles(), _metadata_row_upper_bound(df),
+                          _metadata_row_upper_bound(df, exact=True))
+        stream = shape(spark.readStream.schema("id long").parquet(src))
+        (stream.writeStream.foreachBatch(record).option("checkpointLocation", str(tmp_path / name))
+         .trigger(availableNow=True).start().awaitTermination())
+    assert seen == {"plain": ([], 300, 300), "filtered": ([], 300, None)}
